@@ -52,12 +52,3 @@ def stamp_business_hours(date_col: Column, key: Column) -> Column:
         F.year(date_col), F.month(date_col), F.dayofmonth(date_col),
         hour, minute, second.cast("double"),
     )
-
-
-def stamp_posted_ts(date_str: str, hour_expr: Column | None = None) -> Column:
-    """F11 — the reference stamps each extracted row with the file's
-    date plus a random business-hours time (src/data_extract.py:217-225).
-    Randomness is banned in verification, so the time component is an
-    injectable expression (default: a fixed 09:00:00)."""
-    time_part = hour_expr if hour_expr is not None else F.lit("09:00:00")
-    return F.to_timestamp(F.concat_ws(" ", F.lit(date_str), time_part))

@@ -85,16 +85,6 @@ def normalize_skill_list(col: Column | str, sep: str = ",",
     ).otherwise(F.coalesce(F.nullif(joined, F.lit("")), F.lit("not listed")))
 
 
-def skill_tokens(col: Column | str, sep: str = ",") -> Column:
-    """F5 (array form) — the normalized token array, kept as
-    ArrayType for the jobskills bridge (explode path)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(
-        F.filter(F.split(c, sep), lambda x: F.trim(x) != ""),
-        lambda x: F.lower(F.trim(x)),
-    )
-
-
 def city_from_location(col: Column | str) -> Column:
     """F10 — text before the first ',', else the whole string
     (src/transform.py:147-148)."""

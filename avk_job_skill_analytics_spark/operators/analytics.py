@@ -40,17 +40,6 @@ def count_nonnull(df: DataFrame, col: str, alias: str = "n", filters=None) -> Da
     return _apply_filters(df, filters).agg(F.count(col).alias(alias))
 
 
-def distinct_count(df: DataFrame, col: str, alias: str = "n_distinct", filters=None,
-                   approx: bool = False) -> DataFrame:
-    """A2 — distinct count ('Total Companies Hiring', 'unique Cities').
-
-    ``approx=True`` swaps in HyperLogLog++ (`approx_count_distinct`) —
-    the 100 TB-scale variant: no exact-distinct shuffle, mergeable
-    sketches (SURVEY.md §4)."""
-    agg = F.approx_count_distinct(col) if approx else F.countDistinct(col)
-    return _apply_filters(df, filters).agg(agg.alias(alias))
-
-
 def kpi_cards(df: DataFrame, measures: dict[str, Column], filters=None) -> DataFrame:
     """A1–A5 combined — one pass over the fact table computing every
     scalar card (count/min/max/avg/sum) in a single hash-less global

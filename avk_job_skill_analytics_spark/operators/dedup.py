@@ -47,16 +47,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep exactly one row (lowest id) per distinct text."""
-    w = Window.partitionBy(text_col).orderBy(F.asc(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 # --------------------------------------------------------------- shingles
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str,
@@ -613,18 +603,6 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str,
         term = (bit * F.lit(1 << j)).cast("long")
         sim = term if sim is None else sim + term
     return sig.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash_buckets(df: DataFrame, id_col: str, text_col: str,
-                    bits: int = 16) -> DataFrame:
-    """Signature-collision buckets: (simhash, n_docs, min id) for
-    buckets with >1 doc — the SimHash analogue of exact_dup_groups."""
-    sig = simhash_signatures(df, id_col, text_col, bits)
-    return (
-        sig.groupBy("simhash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def substring_spans(df: DataFrame, id_col: str, text_col: str,

@@ -117,9 +117,3 @@ def knuth32_sql(expr: str) -> str:
     y = f"({expr} % 4294967296)"
     return (f"(((({y} // 65536) * 2654435761) % 65536) * 65536 + "
             f"({y} % 65536) * 2654435761) % 4294967296")
-
-
-def knuth_bucket_sql(expr: str, modulus: int) -> str:
-    """DuckDB twin of :func:`knuth_bucket`, overflow-free at any id
-    scale via :func:`knuth32_sql`."""
-    return f"(({knuth32_sql(expr)}) * {int(modulus)}) // 4294967296"

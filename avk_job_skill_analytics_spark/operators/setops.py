@@ -41,13 +41,6 @@ def dedup_keep_first(df: DataFrame, keys: Sequence[str],
     )
 
 
-def dedup_any(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """U2 (fast path) — when the caller doesn't care which duplicate
-    survives, plain dropDuplicates is cheaper: map-side partial
-    aggregation collapses duplicates before the shuffle."""
-    return df.dropDuplicates(list(keys))
-
-
 def anti_join(df: DataFrame, exclude: DataFrame, on: str | Sequence[str],
               broadcast_exclude: bool = True) -> DataFrame:
     """J1 — set-membership exclusion: the processed-file diff

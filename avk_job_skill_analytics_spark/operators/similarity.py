@@ -41,11 +41,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str, out: str = "norm") -> DataFrame:
-    """Precompute L2 norms once (reused across every comparison)."""
-    return df.withColumn(out, _norm(F.col(vec_col)))
-
-
 def l2_normalize(df: DataFrame, vec_col: str, out: str = "unit",
                  norm_col: str = "norm") -> DataFrame:
     """Append the unit-length vector (and its norm) for ``vec_col``.

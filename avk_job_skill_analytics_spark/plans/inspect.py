@@ -58,16 +58,6 @@ def has_node(df: DataFrame, node: str) -> bool:
     return node in plan_string(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of whole-stage-codegen spans. Wider spans = fewer
-    virtual-call boundaries; a hot path falling out of codegen
-    (e.g. a Python UDF in the middle) shows up as a drop here."""
-    plan = plan_string(df)
-    ids = set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
-    ids |= set(re.findall(r"\[codegen id : (\d+)\]", plan))
-    return len(ids)
-
-
 def scan_partition_counts(df: DataFrame) -> list[int]:
     """Selected-partition count per file scan in the physical plan —
     the authoritative directory-pruning evidence (the textual explain
@@ -95,3 +85,16 @@ def scan_partition_counts(df: DataFrame) -> list[int]:
 
     walk(df._jdf.queryExecution().executedPlan())
     return out
+
+
+def build_jobs(spark, build) -> tuple[DataFrame, int]:
+    """``build()``'s DataFrame and the Spark jobs launched while it was
+    built (eager footer reads, probe ``count()``/``collect()`` calls). Read
+    from the scheduler's job-id counter, which moves the moment a job
+    is submitted; the status tracker only sees a job once the listener
+    bus has delivered its start event. Nothing else may submit jobs
+    meanwhile."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df = build()
+    return df, dag.nextJobId() - before

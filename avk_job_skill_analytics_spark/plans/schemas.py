@@ -1,4 +1,4 @@
-"""Explicit StructType schemas.
+"""Explicit StructType schemas, and the parquet schema cache.
 
 The reference infers schemas on every read (``src/transform.py:158``)
 and re-checks column existence defensively. We declare them once
@@ -6,6 +6,26 @@ and re-checks column existence defensively. We declare them once
 ``src/data_extract.py:160-164``), the curated fact table, the exploded
 ``jobskills`` bridge, the idempotency manifest, and the driver
 testdata tables.
+
+Parquet schema cache. A plain ``spark.read.parquet(path)`` infers the
+schema by reading footers in a Spark job, on every read. :func:`load`
+and :func:`parquet_schema` infer each input's schema once per file
+version and read with ``spark.read.schema(cached)`` afterwards, which
+launches no job. The cache contract:
+
+- **Key**: the path's qualified Hadoop path, the session's
+  parquet-inference settings (``_INFERENCE_CONFS``) and the
+  ``(name, length, modificationTime)`` of every file the path resolves
+  to (the file itself, or the files directly inside a directory),
+  read through the Hadoop ``FileSystem`` (``streaming.fsio.IndexFS``)
+  so ``file:``, ``hdfs:`` and ``s3a:`` paths take one code path.
+  Rewriting a file, adding or removing one, or changing a setting is a
+  miss, and a miss infers exactly as a plain read does.
+- **Not cached**: a directory that holds a subdirectory (partitioned
+  layouts, whose partition columns come from directory names) and a
+  path that does not exist. Both are read exactly as before, so a
+  missing path raises the same ``AnalysisException``.
+- One entry per (path, settings); a new file version replaces it.
 """
 
 from __future__ import annotations
@@ -125,11 +145,62 @@ _NANO_TS_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
+# Session settings that change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (qualified path, settings) -> (file statuses, StructType). One get and
+# one set per call, each atomic: threads missing together both infer
+# and store the same schema.
+_SCHEMAS: dict = {}
+
+
+def _cache_key(spark, path: str):
+    """``((qualified path, settings), file statuses)`` for ``path``, or
+    None when it is missing or holds a subdirectory (not cached)."""
+    from ..streaming.fsio import IndexFS
+
+    found = IndexFS(spark, path).statuses()
+    if found is None:
+        return None
+    qualified, statuses = found
+    if any(is_dir for _, is_dir, _, _ in statuses):
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return (qualified, confs), tuple(statuses)
+
+
+def _cached_schema(spark, path: str) -> T.StructType | None:
+    """The schema of ``path`` from the cache, inferred and stored on a
+    miss; None when the path is not cached."""
+    key = _cache_key(spark, path)
+    if key is None:
+        return None
+    where, statuses = key
+    hit = _SCHEMAS.get(where)
+    if hit is not None and hit[0] == statuses:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[where] = (statuses, schema)
+    return schema
+
+
+def parquet_schema(spark, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, cached as the
+    module docstring describes."""
+    schema = _cached_schema(spark, path)
+    return spark.read.parquet(path).schema if schema is None else schema
+
+
 def load(spark, sf_dir: str, name: str):
     """Read one driver testdata table as a DataFrame (timestamps
     normalized to TimestampType)."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     try:
         # self-heal on externally created sessions (the driver hands us
@@ -138,10 +209,15 @@ def load(spark, sf_dir: str, name: str):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _cached_schema(spark, path)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     for c in _NANO_TS_COLS.get(name, ()):
-        field = df.schema[c] if c in df.columns else None
-        if field is not None and isinstance(field.dataType, T.LongType):
+        if c in schema.fieldNames() and isinstance(schema[c].dataType, T.LongType):
             # integer div keeps full precision (ns epoch > 2^53 would
             # lose bits through double division)
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

@@ -18,6 +18,7 @@ pandas); here we centralize the Spark settings that matter for the
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -150,6 +151,7 @@ def tiny_df(spark, rows, schema: str):
 
 
 _SCRATCH_PERSISTED: list = []
+_SCRATCH_LOCK = threading.Lock()
 
 
 def scratch_persist(df, keep: int = 8):
@@ -161,17 +163,23 @@ def scratch_persist(df, keep: int = 8):
     frames, prefix-filter doc arrays) are consumed entirely by the
     query that created them, but a long-lived session running many
     such queries would otherwise accumulate every one of them in
-    storage memory until eviction pressure. Eviction here is safe by
-    construction: unpersisting a frame that somehow IS still
-    referenced only degrades to recomputation, never to wrong
-    results. ``keep`` comfortably exceeds the largest number of
-    scratch frames any single query pins at once (3)."""
-    df.persist()
-    _SCRATCH_PERSISTED.append(df)
-    while len(_SCRATCH_PERSISTED) > keep:
-        old = _SCRATCH_PERSISTED.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+    storage memory until eviction pressure. Spark keeps one cache
+    entry per plan, so an evicted frame whose plan equals a newer
+    entry's (``sameSemantics``) is dropped from the FIFO without
+    ``unpersist()``: that would drop the cache the newer frame reads,
+    and the newer entry unpersists it when its own turn comes.
+    Unpersisting a frame that is still referenced only degrades to
+    recomputation, never to wrong results. ``keep`` comfortably
+    exceeds the largest number of scratch frames any single query
+    pins at once (3). Thread-safe: the FIFO is guarded by a lock."""
+    with _SCRATCH_LOCK:
+        df.persist()
+        _SCRATCH_PERSISTED.append(df)
+        while len(_SCRATCH_PERSISTED) > keep:
+            old = _SCRATCH_PERSISTED.pop(0)
+            try:
+                if not any(old.sameSemantics(d) for d in _SCRATCH_PERSISTED):
+                    old.unpersist()
+            except Exception:
+                pass
     return df

@@ -32,7 +32,7 @@ import tempfile
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.schemas import load
+from ..plans.schemas import load, parquet_schema
 from ..plans.session import tiny_df
 from ._fixtures import FixtureMemo
 from ..streaming.incremental import (
@@ -61,19 +61,12 @@ def _q(name, oracle=None):
 # events.parquet ts encoding varies by testdata generation: INT64
 # TIMESTAMP(NANOS) (reads as long under nanosAsLong, needs div 1000)
 # or TIMESTAMP(MICROS) no-tz (reads natively as TIMESTAMP_NTZ).
-# readStream needs an explicit schema, so sniff the encoding once per
-# sf_dir with a batch footer read and build the matching schema —
-# hard-coding either guess silently corrupts timestamps by 1000× when
-# the data regenerates the other way (round-3 regression class).
-_TS_TYPES: dict = {}
-
-
+# readStream needs an explicit schema, so sniff the encoding from the
+# file's footer (plans.schemas' schema cache, keyed by file version)
+# and build the matching schema — hard-coding either guess silently
+# corrupts timestamps by 1000× when the data regenerates the other way.
 def _events_ts_type(spark, sf_dir: str):
-    if sf_dir not in _TS_TYPES:
-        _TS_TYPES[sf_dir] = (
-            spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-        )
-    return _TS_TYPES[sf_dir]
+    return parquet_schema(spark, f"{sf_dir}/events.parquet")["ts"].dataType
 
 
 def _events_schema(ts_type) -> T.StructType:

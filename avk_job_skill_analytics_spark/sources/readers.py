@@ -31,25 +31,6 @@ def csv_source(spark: SparkSession, path: str, schema: StructType | None = None,
     return df
 
 
-def parquet_source(spark: SparkSession, path: str,
-                   with_provenance: bool = False) -> DataFrame:
-    """Parquet — the engine's curated-zone format (columnar, pushdown,
-    partition pruning; replaces the reference's CSV interchange)."""
-    df = spark.read.parquet(path)
-    if with_provenance:
-        df = df.withColumn("_source_file", F.input_file_name())
-    return df
-
-
-def json_source(spark: SparkSession, path: str,
-                schema: StructType | None = None, **options) -> DataFrame:
-    """JSON lines source (beyond-reference; schema strongly advised)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.options(**options).json(path)
-
-
 def excel_source(spark: SparkSession, path: str, sheet: int = 0,
                  header: bool = True,
                  with_provenance: bool = False,

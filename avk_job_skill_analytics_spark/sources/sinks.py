@@ -3,9 +3,8 @@
 The reference writes one CSV object per day to S3
 (src/data_extract.py:239-248) and appends to SQL Server in 100-row
 pyodbc batches (src/load_sqlserver.py:70-98). Spark-native versions:
-partitioned parquet for the curated zone, single-file CSV only at the
-external boundary, and the JDBC writer with per-partition batched
-inserts.
+single-file CSV only at the external boundary, the JDBC writer with
+per-partition batched inserts, and small-file parquet compaction.
 """
 
 from __future__ import annotations
@@ -21,17 +20,6 @@ def csv_sink(df: DataFrame, path: str, single_file: bool = False,
     bottleneck); leave False to write one file per partition."""
     out = df.coalesce(1) if single_file else df
     out.write.mode(mode).option("header", True).options(**options).csv(path)
-
-
-def parquet_sink(df: DataFrame, path: str, partition_by: list[str] | None = None,
-                 mode: str = "overwrite") -> None:
-    """Curated-zone sink: date-partitioned parquet. Partitioning by
-    ingest date gives partition pruning for the incremental pattern
-    (the reference's filename-embedded date, done natively)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def jdbc_sink(df: DataFrame, url: str, table: str,

@@ -138,6 +138,23 @@ class IndexFS:
                 return []
             raise
 
+    def statuses(self, rel: str = "") -> tuple[str, list[tuple]] | None:
+        """``(qualified path, [(name, is_dir, length, modificationTime),
+        ...])`` for ``rel``: the file itself, or a directory's direct
+        children. None when the path is missing."""
+        p = self._p(rel)
+        try:
+            found = self._fs.listStatus(p)
+        except Exception as exc:
+            if _is_not_found(exc):
+                return None
+            raise
+        return self._fs.makeQualified(p).toString(), [
+            (st.getPath().getName(), bool(st.isDirectory()),
+             int(st.getLen()), int(st.getModificationTime()))
+            for st in found
+        ]
+
     def mkdirs(self, rel: str = "") -> None:
         self._fs.mkdirs(self._p(rel))
 

@@ -253,32 +253,6 @@ def stateful_user_stats(
     )
 
 
-def run_streaming_window_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    checkpoint_dir: str,
-    query_name: str = "window_counts",
-) -> DataFrame:
-    """Drive ``tumbling_window_counts`` as a real streaming query over
-    a parquet directory: availableNow + complete-mode memory sink,
-    synchronous drain, result returned as a DataFrame."""
-    stream = (
-        spark.readStream.format("parquet").schema(schema).load(source_dir)
-    )
-    agg = tumbling_window_counts(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def stream_interval_join_outer(
     left: DataFrame,
     right: DataFrame,

@@ -121,6 +121,25 @@ def test_tpch_q3_aqe_broadcasts_dim_and_bounds_topk(spark, queries):
     assert "BroadcastHashJoin" in final
 
 
+# The Power BI card queries: a dashboard refresh rebuilds each one over
+# unchanged tables, so building them must cost no Spark job once the
+# parquet schema cache is warm.
+BI_CARDS = (
+    "a1_total_count", "a2_distinct_counts", "a3_a5_kpi_cards",
+    "a7_pricing_summary", "a9_events_latest_month", "a12_top_tokens",
+    "j1_anti_join", "j3_bridge_join", "p4_regex_filter",
+    "tpch_q3_shipping_priority", "tpch_q6_revenue",
+    "tpch_q12_late_shipments",
+)
+
+
+@pytest.mark.parametrize("name", BI_CARDS)
+def test_bi_card_build_launches_no_job(spark, queries, name):
+    queries[name](spark, SF_DIR)  # warm the schema cache
+    _, jobs = I.build_jobs(spark, lambda: queries[name](spark, SF_DIR))
+    assert jobs == 0, f"{name} launched {jobs} jobs while building"
+
+
 def test_bucketed_join_needs_no_exchange(spark):
     from avk_job_skill_analytics_spark.plans import bucketing
 

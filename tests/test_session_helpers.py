@@ -60,3 +60,22 @@ def test_scratch_persist_bounds_storage(spark):
     assert len(_SCRATCH_PERSISTED) <= 4
     # evicted frames still compute correctly (recompute, not corruption)
     assert frames[0].count() == 10
+
+
+def test_scratch_persist_keeps_cache_of_equal_newer_plan(spark):
+    """Spark keeps one cache entry per plan: evicting an old frame must
+    not unpersist the entry a newer frame with the same plan reads."""
+    from pyspark import StorageLevel
+
+    from avk_job_skill_analytics_spark.plans.session import scratch_persist
+
+    def frame():
+        return spark.range(37).selectExpr("id", "id * 3 AS y")
+
+    a = scratch_persist(frame(), keep=2)
+    b = scratch_persist(frame(), keep=2)
+    assert a.sameSemantics(b)
+    b.count()
+    scratch_persist(spark.range(5), keep=2)  # evicts a
+    assert b.storageLevel != StorageLevel.NONE
+    b.unpersist()

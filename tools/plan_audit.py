@@ -15,6 +15,11 @@ sf0.01 correctness is green:
   records with a justification;
 - ``Exchange SinglePartition`` feeding a non-final stage.
 
+It also builds every DataFrame a second time, on a warm parquet schema
+cache, and prints the Spark jobs each build fired (eager probes,
+``count()``/``collect()`` rounds, footer reads), sorted descending, to
+rank the build-side fixed cost of the short-query tail.
+
 Usage: python tools/plan_audit.py [sf_dir]
 Exit 1 if any un-allowlisted flag fires.
 """
@@ -208,6 +213,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
+    from avk_job_skill_analytics_spark.plans.inspect import build_jobs
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -215,11 +221,14 @@ def main() -> None:
         .getOrCreate()
     )
     bad = 0
+    jobs: list[tuple[int, str]] = []
     for name, fn in sorted(E.queries().items()):
         if name.startswith("stream_"):
             continue  # availableNow drain: plan lives in the stream
         try:
-            df = fn(spark, sf_dir)
+            fn(spark, sf_dir)  # warms the schema cache and fixture memos
+            df, n = build_jobs(spark, lambda: fn(spark, sf_dir))
+            jobs.append((n, name))
             jvm = spark._jvm
             plan = jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "extended"
@@ -238,6 +247,9 @@ def main() -> None:
         if hits:
             print(f"FLAG {name}: {', '.join(hits)}")
             bad += 1
+    print("\nSpark jobs fired while building, warm cache:")
+    for n, name in sorted(jobs, key=lambda x: (-x[0], x[1])):
+        print(f"{n:5d}  {name}")
     print(f"\n{bad} flagged")
     raise SystemExit(1 if bad else 0)
 
