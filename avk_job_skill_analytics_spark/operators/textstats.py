@@ -1102,6 +1102,8 @@ def repetition_rules(df, id_col: str, text_col: str,
     #    its own column so the nine field reads below don't re-expand
     #    the fold (the established HOF re-evaluation discipline).
     all_ns = list(top_ns) + list(dup_ns)
+    if min(all_ns) < 1:
+        raise ValueError(f"n-gram widths must be >= 1, got {all_ns}")
     staged = base
     prev = "_w"
     for n in range(2, max(all_ns) + 1):
@@ -1117,7 +1119,7 @@ def repetition_rules(df, id_col: str, text_col: str,
         staged = staged.select("*", g.alias(f"_g{n}"))
         prev = f"_g{n}"
     per_n = F.transform(
-        F.array(*[F.col(f"_g{n}") for n in all_ns]),
+        F.array(*[F.col("_w" if n == 1 else f"_g{n}") for n in all_ns]),
         lambda garr: masses(garr),
     )
     staged = staged.select(

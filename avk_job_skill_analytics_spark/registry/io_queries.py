@@ -1123,7 +1123,10 @@ def s6_jdbc_stream_upsert(spark, sf_dir):
     target. Duplicate delivery (the second identical file) collapses
     because the merge converges, so the final table is the per-user
     argmax the oracle computes."""
-    from ..streaming.incremental import foreach_batch_jdbc_upsert
+    from ..streaming.incremental import (
+        drain_available_now,
+        foreach_batch_jdbc_upsert,
+    )
     from .streaming_queries import _events_stream
 
     url = _derby_url(spark, "jdbc_upsert_")
@@ -1143,24 +1146,14 @@ def s6_jdbc_stream_upsert(spark, sf_dir):
         stream.sparkSession.createDataFrame([], stream.schema),
         url, "events_state", properties=_DERBY_PROPS, mode="overwrite",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_jdbc_upsert_")
-    try:
-        from .streaming_queries import _stream_shuffle
-
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_jdbc_upsert(
-                    stream, url, "events_state",
-                    key_col="user_id", order_cols=("ts", "event_id"),
-                    properties=_DERBY_PROPS,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_jdbc_upsert(
+            stream, url, "events_state",
+            key_col="user_id", order_cols=("ts", "event_id"),
+            properties=_DERBY_PROPS,
+        ),
+    )
     back = spark.read.jdbc(url, "events_state", properties=_DERBY_PROPS)
     out = back.select(
         "user_id",

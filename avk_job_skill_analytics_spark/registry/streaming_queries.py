@@ -36,6 +36,7 @@ from ..plans.schemas import load, parquet_schema
 from ..plans.session import tiny_df
 from ._fixtures import FixtureMemo
 from ..streaming.incremental import (
+    drain_available_now,
     session_window_counts,
     sliding_window_counts,
     stateful_user_stats,
@@ -156,54 +157,28 @@ def _events_stream(spark, sf_dir, links=None, **reader_options):
     return stream
 
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _stream_shuffle(spark, n: int | None = None):
-    """Scope the shuffle-partition count for one streaming drain.
-
-    Every stateful operator materializes one state store PER shuffle
-    partition, and each store pays commit/maintenance overhead per
-    micro-batch — for these one-shot availableNow drains that fixed
-    cost dominates (measured 13.1s → 3.9s on stream_stream_left_join
-    at sf0.1 going 32 → 8). Size state-store count to the data volume
-    per trigger, not to machine cores; on a production cluster with a
-    long-lived query, raise SPARK_GRAFT_STREAM_SHUFFLE toward
-    cores×k. Safe to vary per query here because each drain uses a
-    throwaway checkpoint (the checkpoint pins the count for a query's
-    lifetime)."""
-    import os
-
-    n = n or int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+def _drops_stream(spark, src: str, schema):
+    """Parquet file stream over ``src`` that reads ONE file per
+    micro-batch, so each drop (``_single_file_drops``' mtime-ordered
+    files, or each link of a doubled ``_source_dir``) arrives as its
+    own trigger, in order."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .load(src)
+    )
 
 
 def _drain(spark, agg, mode, name):
     """Run to completion (availableNow) into a memory sink; return the
     drained table. The sink name is deterministic per query, so a
     re-run replaces the session's previous temp view instead of
-    accumulating one per invocation; the throwaway checkpoint is
-    deleted the moment the query terminates."""
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                agg.writeStream.outputMode(mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    accumulating one per invocation."""
+    drain_available_now(
+        spark,
+        agg.writeStream.outputMode(mode).format("memory").queryName(name),
+    )
     return spark.table(name)
 
 
@@ -462,8 +437,6 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     final state is the per-user latest event — which is exactly the
     batch argmax the oracle computes, BECAUSE the sink is
     idempotent and order-merging (duplicate delivery collapses)."""
-    import tempfile as _tf
-
     stream = _events_stream(
         spark,
         sf_dir,
@@ -471,20 +444,9 @@ def stream_foreachbatch_upsert(spark, sf_dir):
                "events_b.parquet": "events.parquet"},
         maxFilesPerTrigger=1,
     ).select("user_id", "ts", "event_id", "value")
-    state_dir = _tf.mkdtemp(prefix="upsert_state_")
+    state_dir = tempfile.mkdtemp(prefix="upsert_state_")
     atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-    ckpt = _tf.mkdtemp(prefix="ckpt_upsert_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_upsert(stream, state_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(spark, foreach_batch_upsert(stream, state_dir))
     from ..streaming.incremental import upsert_state
 
     state = upsert_state(spark, state_dir)
@@ -609,10 +571,7 @@ def stream_minhash_dedup(spark, sf_dir):
          "docs_b.parquet": "documents.parquet"},
     )
     stream = (
-        spark.readStream.format("parquet")
-        .schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
+        _drops_stream(spark, src_dir, _DOCS_SCHEMA)
         .filter(F.col("doc_id") % 2 == 1)
         .select("doc_id", "text")
     )
@@ -649,32 +608,19 @@ def stream_lsh_index_maintain(spark, sf_dir):
     )
     index_dir = tempfile.mkdtemp(prefix="lsh_index_")
     atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_lshmaint_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(spark, src, "doc_id long, text string")
+    drain_available_now(
+        spark,
+        foreach_batch_lsh_maintain(
+            stream, index_dir, "doc_id", "text",
+            k=3, num_hashes=16, bands=8, threshold=0.5,
+            # self-compacting: after the second batch commits,
+            # the sink folds both batch dirs into generation
+            # -1 (journaled, rename-free) — the maintenance
+            # path the bench therefore measures end-to-end
+            compact_every=2,
+        ),
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_lsh_maintain(
-                    stream, index_dir, "doc_id", "text",
-                    k=3, num_hashes=16, bands=8, threshold=0.5,
-                    # self-compacting: after the second batch commits,
-                    # the sink folds both batch dirs into generation
-                    # -1 (journaled, rename-free) — the maintenance
-                    # path the bench therefore measures end-to-end
-                    compact_every=2,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(f"{index_dir}/pairs")
         .select("doc_a", "doc_b", "jaccard")
@@ -762,27 +708,14 @@ def _absorb_stream(spark, sf_dir: str, index_dir: str,
         spark, sf_dir, "embeddings", ["vec_id", "embedding"],
         drops, prefix,
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ivfpqapp_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(spark, src, "vec_id long, embedding array<double>")
+    drain_available_now(
+        spark,
+        foreach_batch_ivfpq_append(
+            stream, index_dir, "vec_id", "embedding",
+            m=8, sub_d=8, compact_every=compact_every,
+        ),
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_ivfpq_append(
-                    stream, index_dir, "vec_id", "embedding",
-                    m=8, sub_d=8, compact_every=compact_every,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _IVFPQ_ABSORBED: dict = FixtureMemo()
@@ -904,28 +837,15 @@ def stream_drift_monitor(spark, sf_dir):
          ("1_second.parquet", F.col("vec_id") % 4 == 3)],
         "emb_stream_src_",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_drift_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
+    stream = _drops_stream(spark, src, "vec_id long, embedding array<double>")
     state: dict = {"n": 0, "total": 0, "seen": set()}
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_drift_fold(
-                    stream, coarse, cbs, 8, 8, state,
-                    "vec_id", "embedding",
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_drift_fold(
+            stream, coarse, cbs, 8, 8, state,
+            "vec_id", "embedding",
+        ),
+    )
     # identical float discipline to the SQL: floor(double / double)
     mean_fp = (
         int(math.floor(float(state["total"]) / float(state["n"])))
@@ -1018,26 +938,15 @@ def stream_index_auto_retrain(spark, sf_dir):
              ("2_calm.parquet", F.col("vec_id") % 4 == 3)],
             "emb_ar_src_", mutate=_shifted_embeddings,
         )
-        ckpt = tempfile.mkdtemp(prefix="ckpt_autoretrain_")
-        stream = (
-            spark.readStream.format("parquet")
-            .schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
+        stream = _drops_stream(
+            spark, src, "vec_id long, embedding array<double>"
         )
-        try:
-            with _stream_shuffle(spark):
-                q = (
-                    foreach_batch_auto_retrain(
-                        stream, root, base, "vec_id", "embedding",
-                    )
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        drain_available_now(
+            spark,
+            foreach_batch_auto_retrain(
+                stream, root, base, "vec_id", "embedding",
+            ),
+        )
         # the policy must have fired exactly once, on the shifted batch
         from ..streaming.fsio import IndexFS
 
@@ -1083,28 +992,16 @@ def stream_mix_monitor(spark, sf_dir):
          ("1_odd.parquet", F.col("doc_id") % 2 == 1)],
         "docs_mix_src_",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_mixmon_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(
+        spark, src, "doc_id long, source string, text string"
     )
     state: dict = {"tokens": {}, "seen": set()}
     tokens_expr = F.size(
         F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_mix_fold(stream, "source", tokens_expr, state)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark, foreach_batch_mix_fold(stream, "source", tokens_expr, state)
+    )
     per_src = tiny_df(
         spark, sorted(state["tokens"].items()), "source string, t_s long"
     )
@@ -1252,12 +1149,7 @@ def stream_heavy_hitters(spark, sf_dir):
         {"docs_a.parquet": "documents.parquet",
          "docs_b.parquet": "documents.parquet"},
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = _drops_stream(spark, src_dir, _DOCS_SCHEMA)
     w = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     grams = F.transform(
         F.sequence(F.lit(1), F.size("_w") - 1),
@@ -1318,10 +1210,7 @@ def stream_kmv_distinct(spark, sf_dir):
     )
     ts_type = _events_ts_type(spark, sf_dir)
     stream = (
-        spark.readStream.format("parquet")
-        .schema(_events_schema(ts_type))
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
+        _drops_stream(spark, src_dir, _events_schema(ts_type))
         .select("user_id")
     )
     sketch, _triggers, n_rows = _op(stream, "user_id", k=128)
@@ -1377,12 +1266,7 @@ def stream_ivf_assign(spark, sf_dir):
             T.StructField("label", T.IntegerType()),
         ]
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(emb_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = _drops_stream(spark, src_dir, emb_schema)
     out = similarity.ivf_cell_assign(stream, "vec_id", "embedding", cb)
     return _drain(spark, out, "append", "st_ivf_assign")
 
@@ -1421,27 +1305,14 @@ def stream_bm25_index_maintain(spark, sf_dir):
     )
     index_dir = tempfile.mkdtemp(prefix="bm25_index_")
     atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_bm25maint_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(spark, src, "doc_id long, text string")
+    drain_available_now(
+        spark,
+        foreach_batch_bm25_maintain(
+            stream, index_dir, "doc_id", "text",
+            compact_every=2,
+        ),
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_bm25_maintain(
-                    stream, index_dir, "doc_id", "text",
-                    compact_every=2,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return serve_bm25(spark, index_dir, list(_BM25_TERMS), "doc_id",
                       k=10)
 
@@ -1463,8 +1334,6 @@ def stream_priority_sample(spark, sf_dir):
     and associative, the doubled delivery and the batch slicing must
     both be invisible — the final sample equals the one-shot batch
     draw, which is exactly o4_priority_sample's oracle."""
-    import tempfile as _tf
-
     from ..streaming.incremental import (
         foreach_batch_topk_sample,
         upsert_state,
@@ -1475,28 +1344,14 @@ def stream_priority_sample(spark, sf_dir):
         {"docs_a.parquet": "documents.parquet",
          "docs_b.parquet": "documents.parquet"},
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-        .select("doc_id")
-    )
-    state_dir = _tf.mkdtemp(prefix="psample_state_")
+    stream = _drops_stream(spark, src_dir, _DOCS_SCHEMA).select("doc_id")
+    state_dir = tempfile.mkdtemp(prefix="psample_state_")
     atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-    ckpt = _tf.mkdtemp(prefix="ckpt_psample_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_topk_sample(stream, state_dir, "doc_id",
-                                          k=200)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_topk_sample(stream, state_dir, "doc_id",
+                                  k=200),
+    )
     return upsert_state(spark, state_dir).select("doc_id", "priority")
 
 
@@ -1564,8 +1419,6 @@ def stream_cdc_apply(spark, sf_dir):
     filtered only in the read view. Must equal the one-shot batch
     apply (the same oracle as u6_cdc_apply): streaming is a cost
     choice, never an answer choice."""
-    import tempfile as _tf
-
     from ..streaming.incremental import cdc_state, foreach_batch_cdc
 
     src = _single_file_drops(
@@ -1575,26 +1428,14 @@ def stream_cdc_apply(spark, sf_dir):
          ("log2.parquet", F.col("seq") == 2)],
         prefix="cdc_log_", mutate=_cdc_log,
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("o_orderkey long, o_totalprice double, op string, seq int")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(
+        spark, src, "o_orderkey long, o_totalprice double, op string, seq int"
     )
-    state_dir = _tf.mkdtemp(prefix="cdc_state_")
+    state_dir = tempfile.mkdtemp(prefix="cdc_state_")
     atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-    ckpt = _tf.mkdtemp(prefix="ckpt_cdc_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_cdc(stream, state_dir, "o_orderkey")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark, foreach_batch_cdc(stream, state_dir, "o_orderkey")
+    )
     live = cdc_state(spark, state_dir)
     return live.select(
         "o_orderkey", F.round("o_totalprice", 2).alias("o_totalprice")
@@ -1625,8 +1466,6 @@ def stream_upsert_partitioned(spark, sf_dir):
     Same two-file drain and the same latest-row oracle as
     stream_foreachbatch_upsert: the partitioning must change the
     COST, never the answer."""
-    import tempfile as _tf
-
     from ..streaming.incremental import (
         foreach_batch_upsert_partitioned,
         upsert_state_partitioned,
@@ -1639,22 +1478,14 @@ def stream_upsert_partitioned(spark, sf_dir):
                "events_b.parquet": "events.parquet"},
         maxFilesPerTrigger=1,
     ).select("user_id", "ts", "event_id", "value")
-    state_dir = _tf.mkdtemp(prefix="upsert_part_state_")
+    state_dir = tempfile.mkdtemp(prefix="upsert_part_state_")
     atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-    ckpt = _tf.mkdtemp(prefix="ckpt_upsert_part_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_upsert_partitioned(
-                    stream, state_dir, buckets=8
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_upsert_partitioned(
+            stream, state_dir, buckets=8
+        ),
+    )
     state = upsert_state_partitioned(spark, state_dir)
     return state.select(
         "user_id",
@@ -1684,8 +1515,6 @@ def stream_agg_mv_partitioned(spark, sf_dir):
     different batch ids, so the fixture drains two DISJOINT halves
     (the upsert fixtures' duplicated source would legitimately
     double-count here)."""
-    import tempfile as _tf
-
     from ..streaming.incremental import (
         foreach_batch_agg_mv_partitioned,
         upsert_state_partitioned,
@@ -1697,29 +1526,18 @@ def stream_agg_mv_partitioned(spark, sf_dir):
          ("1_odd.parquet", F.col("event_id") % 2 == 1)],
         "agg_mv_src_",
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("user_id long, value double, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(
+        spark, src, "user_id long, value double, event_id long"
     ).select("user_id", "value")
-    state_dir = _tf.mkdtemp(prefix="agg_mv_state_")
+    state_dir = tempfile.mkdtemp(prefix="agg_mv_state_")
     atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-    ckpt = _tf.mkdtemp(prefix="ckpt_agg_mv_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_agg_mv_partitioned(
-                    stream, state_dir, "user_id",
-                    {"sum_value": "value"}, buckets=8,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_agg_mv_partitioned(
+            stream, state_dir, "user_id",
+            {"sum_value": "value"}, buckets=8,
+        ),
+    )
     state = upsert_state_partitioned(spark, state_dir)
     return state.select(
         "user_id",
@@ -1768,12 +1586,7 @@ def stream_nb_gate(spark, sf_dir):
          ("1_odd.parquet", F.col("doc_id") % 2 == 1)],
         "nb_gate_src_",
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, text string, lang string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
+    stream = _drops_stream(spark, src, "doc_id long, text string, lang string")
     state: dict = {"counts": {}, "seen": set()}
 
     def fold(bdf, epoch_id):
@@ -1790,18 +1603,7 @@ def stream_nb_gate(spark, sf_dir):
             state["counts"][key] = state["counts"].get(key, 0) + int(r["n"])
         epoch_mark_applied(state, epoch_id)
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_nbgate_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(spark, stream.writeStream.foreachBatch(fold))
     return tiny_df(
         spark,
         [(p, a, n) for (p, a), n in sorted(state["counts"].items())],
@@ -1862,27 +1664,16 @@ def stream_nb_train(spark, sf_dir):
     )
     index_dir = tempfile.mkdtemp(prefix="nb_model_")
     atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_nbtrain_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, text string, lang string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(
+        spark, src, "doc_id long, text string, lang string"
     ).withColumn("_y", (F.col("lang") == "en").cast("int"))
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_nb_train(
-                    stream, index_dir, "doc_id", "text", "_y",
-                    compact_every=2,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_nb_train(
+            stream, index_dir, "doc_id", "text", "_y",
+            compact_every=2,
+        ),
+    )
     return serve_nb_weights(spark, index_dir)
 
 
@@ -1948,27 +1739,14 @@ def stream_ssjoin_maintain(spark, sf_dir):
     )
     index_dir = tempfile.mkdtemp(prefix="ssjoin_index_")
     atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ssjoin_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(spark, src, "doc_id long, text string")
+    drain_available_now(
+        spark,
+        foreach_batch_ssjoin_maintain(
+            stream, index_dir, "doc_id", "text",
+            k=3, t_num=1, t_den=2, compact_every=2,
+        ),
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_ssjoin_maintain(
-                    stream, index_dir, "doc_id", "text",
-                    k=3, t_num=1, t_den=2, compact_every=2,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(f"{index_dir}/pairs")
         .select("id_a", "id_b", "inter", "uni", "jacc_fp")
@@ -2028,13 +1806,9 @@ def stream_dq_gate(spark, sf_dir):
          ("1_odd.parquet", F.col("o_orderkey") % 2 == 1)],
         "orders_dq_src_",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_dq_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("o_orderkey long, o_custkey long, "
-                "o_orderstatus string, o_totalprice double")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(
+        spark, src, "o_orderkey long, o_custkey long, "
+        "o_orderstatus string, o_totalprice double",
     )
 
     checks = [
@@ -2044,18 +1818,11 @@ def stream_dq_gate(spark, sf_dir):
         ("nonneg_price", "non_negative", "price"),
     ]
     state: dict = {"seen": set()}
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_dq_fold(stream, checks, state,
-                                      transform=landing_map)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_dq_fold(stream, checks, state,
+                              transform=landing_map),
+    )
     return tiny_df(
         spark,
         dq_state_report_rows(state),
@@ -2090,27 +1857,16 @@ def stream_freshness_monitor(spark, sf_dir):
          ("1_odd.parquet", F.col("event_id") % 2 == 1)],
         "events_fresh_src_",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_fresh_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("event_id long, ts timestamp_ntz, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(
+        spark, src, "event_id long, ts timestamp_ntz, event_type string"
     )
     state: dict = {"seen": set()}
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_freshness_fold(
-                    stream, "event_type", "ts", state
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_freshness_fold(
+            stream, "event_type", "ts", state
+        ),
+    )
     return tiny_df(
         spark,
         freshness_report_rows(state, max_lag_s=600),
@@ -2147,27 +1903,14 @@ def stream_cusum_monitor(spark, sf_dir):
          ("1_odd.parquet", F.col("event_id") % 2 == 1)],
         "events_cusum_src_",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_cusum_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("event_id long, ts timestamp_ntz")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
+    stream = _drops_stream(spark, src, "event_id long, ts timestamp_ntz")
     state: dict = {"seen": set()}
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_key_count_fold(
-                    stream, F.dayofmonth("ts"), state
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_key_count_fold(
+            stream, F.dayofmonth("ts"), state
+        ),
+    )
     daily = tiny_df(spark, key_count_rows(state), "d int, x long")
     return A.cusum_changepoint(daily, "d", "x", baseline_w=7)
 
@@ -2200,26 +1943,13 @@ def stream_psi_drift(spark, sf_dir):
          ("1_w4.parquet", F.dayofmonth("ts") > 22)],
         "events_psi_src_",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_psi_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
+    stream = _drops_stream(spark, src, "ts timestamp, value double")
     state: dict = {"seen": set()}
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_psi_fold(stream, "value", 0.0, 500.0,
-                                       10, state)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_psi_fold(stream, "value", 0.0, 500.0,
+                               10, state),
+    )
     ref = load(spark, sf_dir, "events").filter(F.dayofmonth("ts") <= 15)
     return psi_report_from_state(
         spark, ref, "value", 0.0, 500.0, 10, state
@@ -2276,28 +2006,16 @@ def stream_ab_monitor(spark, sf_dir):
          ("1_odd.parquet", F.col("user_id") % 2 == 1)],
         "events_ab_src_",
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ab_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("user_id long, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(
+        spark, src, "user_id long, event_type string, value double"
     )
     cents = F.when(F.col("event_type") == "purchase",
                    F.round(F.col("value") * 100).cast("long")) \
         .otherwise(F.lit(0))
     state: dict = {"seen": set()}
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_ab_fold(stream, "user_id", cents, state)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark, foreach_batch_ab_fold(stream, "user_id", cents, state)
+    )
     return tiny_df(
         spark,
         ab_monitor_card(state),
@@ -2349,8 +2067,6 @@ def stream_media_dedup(spark, sf_dir):
     the batch oracle replays the exact table halved: the doubled
     delivery doubles n_copies, which the final projection divides
     back out to prove exactly-two-deliveries accounting."""
-    import tempfile as _tf
-
     from ..operators import multimodal
     from ..streaming.incremental import (
         foreach_batch_dedup_ledger_partitioned,
@@ -2376,22 +2092,14 @@ def stream_media_dedup(spark, sf_dir):
     hashed = multimodal.image_ahash(
         multimodal.attach_ahash_media(stream, "doc_id")
     ).select("ahash_hi", "ahash_lo", "doc_id", "format")
-    state_dir = _tf.mkdtemp(prefix="media_ledger_state_")
+    state_dir = tempfile.mkdtemp(prefix="media_ledger_state_")
     atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_media_dedup_")
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_dedup_ledger_partitioned(
-                    hashed, state_dir, buckets=8
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_dedup_ledger_partitioned(
+            hashed, state_dir, buckets=8
+        ),
+    )
     ledger = upsert_state_partitioned(spark, state_dir)
     return ledger.select(
         "ahash_hi", "ahash_lo",
@@ -2465,10 +2173,7 @@ def stream_semantic_dedup(spark, sf_dir):
          "emb_b.parquet": "embeddings.parquet"},
     )
     stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
+        _drops_stream(spark, src_dir, "vec_id long, embedding array<double>")
         .filter(F.col("vec_id") % 2 == 1)
     )
     out = similarity.stream_semantic_dedup_pairs(
@@ -2548,28 +2253,15 @@ def stream_semantic_index_maintain(spark, sf_dir):
     )
     index_dir = tempfile.mkdtemp(prefix="semantic_index_")
     atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_semantic_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(spark, src, "vec_id long, embedding array<double>")
+    drain_available_now(
+        spark,
+        foreach_batch_semantic_maintain(
+            stream, index_dir, "vec_id", "embedding",
+            dim=64, bands=4, rows_per_band=rpb, threshold=0.4,
+            compact_every=2,
+        ),
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_semantic_maintain(
-                    stream, index_dir, "vec_id", "embedding",
-                    dim=64, bands=4, rows_per_band=rpb, threshold=0.4,
-                    compact_every=2,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(f"{index_dir}/pairs")
         .select("id_a", "id_b", "cosine")
@@ -2686,32 +2378,21 @@ def stream_logreg_train(spark, sf_dir):
     )
     index_dir = tempfile.mkdtemp(prefix="logreg_model_")
     atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_logregtrain_")
     stream = (
-        spark.readStream.format("parquet")
-        .schema("l_orderkey long, l_quantity double, "
-                "l_discount double, l_returnflag string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+        _drops_stream(spark, src, "l_orderkey long, l_quantity double, "
+                      "l_discount double, l_returnflag string")
         .filter(LOGREG_WHERE)
         .selectExpr(
             *(f"{sql} AS {n}" for n, sql in LOGREG_FEATURES),
             f"{LOGREG_LABEL} AS y",
         )
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_logreg_train(
-                    stream, index_dir, names, "y",
-                    lr_num=LOGREG_LR[0], lr_den=LOGREG_LR[1],
-                    compact_every=2,
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_available_now(
+        spark,
+        foreach_batch_logreg_train(
+            stream, index_dir, names, "y",
+            lr_num=LOGREG_LR[0], lr_den=LOGREG_LR[1],
+            compact_every=2,
+        ),
+    )
     return serve_logreg_weights(spark, index_dir, list(LOGREG_STATS))

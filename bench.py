@@ -61,6 +61,9 @@ sys.path.insert(0, ROOT)
 from avk_job_skill_analytics_spark.plans.session import get_spark  # noqa: E402
 from avk_job_skill_analytics_spark.registry import all_queries  # noqa: E402
 from avk_job_skill_analytics_spark.registry import _fixtures  # noqa: E402
+from avk_job_skill_analytics_spark.streaming.incremental import (  # noqa: E402
+    drain_available_now,
+)
 
 # Headline queries for the compact stdout line: the most expensive /
 # most representative member of each family (full dict lands in
@@ -147,57 +150,52 @@ def _streaming_warmup(spark, tiny_dir: str) -> None:
     stream_* queries. The first stateful streaming query in a session
     otherwise pays ~7-30s of session-fixed provider spin-up."""
     import shutil
+    import tempfile
 
     src = os.path.join(tiny_dir, "region.parquet")
-    d = os.path.join("/tmp", f"bench_warm_src_{os.getpid()}")
-    try:  # file streams need a DIRECTORY source — stage the tiny file
-        os.makedirs(d, exist_ok=True)
-        shutil.copy(src, os.path.join(d, "region.parquet"))
-    except Exception as exc:
-        print(f"# WARN streaming warm-up stage failed: {exc}", file=sys.stderr)
-        return
+    d = tempfile.mkdtemp(prefix="bench_warm_src_")
     try:
-        schema = spark.read.parquet(src).schema
-        q = (
-            spark.readStream.schema(schema).parquet(d)
-            .groupBy("r_name").count()
-            .writeStream.format("noop").outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation",
-                    os.path.join("/tmp", f"bench_warm_ckpt_{os.getpid()}"))
-            .start()
-        )
-        q.awaitTermination(120)
-    except Exception as exc:
-        print(f"# WARN streaming warm-up failed: {exc}", file=sys.stderr)
-    try:
-        # the Python stateful path (applyInPandasWithState) spins up
-        # its own worker/state machinery on first use — warm it with a
-        # trivial inline stateful op, not a registry query
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def _echo(key, pdfs, state):
-            import pandas as pd
-            n = sum(len(p) for p in pdfs)
-            yield pd.DataFrame({"k": [key[0]], "n": [n]})
-
-        schema = spark.read.parquet(src).schema
-        q = (
-            spark.readStream.schema(schema).parquet(d)
-            .groupBy("r_regionkey")
-            .applyInPandasWithState(
-                _echo, "k long, n long", "n long", "update",
-                GroupStateTimeout.NoTimeout,
+        try:  # file streams need a DIRECTORY source — stage the tiny file
+            shutil.copy(src, os.path.join(d, "region.parquet"))
+            schema = spark.read.parquet(src).schema
+        except Exception as exc:
+            print(f"# WARN streaming warm-up stage failed: {exc}",
+                  file=sys.stderr)
+            return
+        try:
+            drain_available_now(
+                spark,
+                spark.readStream.schema(schema).parquet(d)
+                .groupBy("r_name").count()
+                .writeStream.format("noop").outputMode("complete"),
             )
-            .writeStream.format("noop").outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation",
-                    os.path.join("/tmp", f"bench_warm_ckpt2_{os.getpid()}"))
-            .start()
-        )
-        q.awaitTermination(120)
-    except Exception as exc:
-        print(f"# WARN stateful warm-up failed: {exc}", file=sys.stderr)
+        except Exception as exc:
+            print(f"# WARN streaming warm-up failed: {exc}", file=sys.stderr)
+        try:
+            # the Python stateful path (applyInPandasWithState) spins up
+            # its own worker/state machinery on first use — warm it with
+            # a trivial inline stateful op, not a registry query
+            from pyspark.sql.streaming.state import GroupStateTimeout
+
+            def _echo(key, pdfs, state):
+                import pandas as pd
+                n = sum(len(p) for p in pdfs)
+                yield pd.DataFrame({"k": [key[0]], "n": [n]})
+
+            drain_available_now(
+                spark,
+                spark.readStream.schema(schema).parquet(d)
+                .groupBy("r_regionkey")
+                .applyInPandasWithState(
+                    _echo, "k long, n long", "n long", "update",
+                    GroupStateTimeout.NoTimeout,
+                )
+                .writeStream.format("noop").outputMode("update"),
+            )
+        except Exception as exc:
+            print(f"# WARN stateful warm-up failed: {exc}", file=sys.stderr)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _jvm_gc(spark) -> None:

@@ -585,3 +585,55 @@ def test_pseudonymize_preserves_joins_and_rotates(spark):
     rot = {r[0] for r in pseudonymize(c, "k", "s2")
            .select("pseudonym").collect()}
     assert rot.isdisjoint({r[0] for r in a})
+
+
+def _run_masses(text: str, n: int) -> tuple[int, int]:
+    """Plain-Python repetition reference: (top, dup) character mass of
+    the width-n word grams, counted with overlap."""
+    from collections import Counter
+
+    w = [t for t in text.split(" ") if t]
+    counts = Counter(" ".join(w[i:i + n]) for i in range(len(w) - n + 1))
+    masses = [c * len(g) for g, c in counts.items()]
+    dup = sum(c * len(g) for g, c in counts.items() if c > 1)
+    return max(masses, default=0), dup
+
+
+def test_repetition_rules_unigrams_match_reference(spark):
+    """Width 1 reads the token array itself (there is no _g1 gram
+    column); every width is checked against the run-mass reference."""
+    from avk_job_skill_analytics_spark.operators.textstats import (
+        repetition_rules,
+    )
+
+    texts = ["aa b aa c aa b", "solo", "x  y z", "the cat the cat sat"]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    rows = {
+        r["doc_id"]: r.asDict()
+        for r in repetition_rules(
+            df, "doc_id", "text", top_ns=(1, 2), dup_ns=(1, 3),
+            top_caps_fp=(10**9, 10**9), dup_caps_fp=(10**9, 10**9),
+        ).collect()
+    }
+    for i, text in enumerate(texts):
+        total = len(" ".join(t for t in text.split(" ") if t))
+        for n in (1, 2):
+            top = _run_masses(text, n)[0]
+            assert rows[i][f"top_{n}gram_fp"] == 10**6 * top // total
+        for n in (1, 3):
+            dup = _run_masses(text, n)[1]
+            assert rows[i][f"dup_{n}gram_fp"] == 10**6 * dup // total
+        assert rows[i]["passes"] is True
+    assert rows[0]["top_1gram_fp"] == 10**6 * 6 // 14
+
+
+def test_repetition_rules_rejects_width_below_one(spark):
+    from avk_job_skill_analytics_spark.operators.textstats import (
+        repetition_rules,
+    )
+
+    df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=">= 1"):
+        repetition_rules(df, "doc_id", "text", top_ns=(0, 2))

@@ -752,3 +752,48 @@ def test_similarity_histogram_sample_is_bounded(spark, queries):
     assert "TakeOrderedAndProject" in plan, plan
     assert "rangepartitioning" not in plan.lower(), plan
     assert "BroadcastNestedLoopJoin" in plan, plan
+
+
+def _code_tokens(path):
+    """The file's code with strings and comments dropped, as one
+    whitespace-free string."""
+    import tokenize
+
+    with open(path, "rb") as f:
+        return "".join(
+            t.string for t in tokenize.tokenize(f.readline)
+            if t.type not in (tokenize.STRING, tokenize.COMMENT,
+                              tokenize.ENCODING)
+            and t.string.strip()
+        )
+
+
+def test_every_drain_goes_through_the_one_runner():
+    """streaming/incremental.drain_available_now is the only
+    availableNow drain in the package, tools/ and bench.py, and the
+    only place that makes a throwaway checkpoint: a new call site
+    hands the runner a writer instead of copying the sequence."""
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, "bench.py")] + [
+        p for d in ("avk_job_skill_analytics_spark", "tools")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    ]
+    runner = os.path.join(
+        root, "avk_job_skill_analytics_spark", "streaming", "incremental.py"
+    )
+    triggers, ckpts = {}, {}
+    for p in files:
+        n = _code_tokens(p).count(".trigger(availableNow=True)")
+        if n:
+            triggers[os.path.relpath(p, root)] = n
+        with open(p, encoding="utf-8") as f:
+            n = len(re.findall(r"""mkdtemp\(prefix=["']ckpt""", f.read()))
+        if n:
+            ckpts[os.path.relpath(p, root)] = n
+    want = {os.path.relpath(runner, root): 1}
+    assert triggers == want, triggers
+    assert ckpts == want, ckpts

@@ -70,12 +70,15 @@ def profile_autocompact(spark, sf_dir):
 def profile_retrain(spark, sf_dir):
     from avk_job_skill_analytics_spark.operators import ann_index
     from avk_job_skill_analytics_spark.registry.streaming_queries import (
+        _drops_stream,
         _shifted_embeddings,
         _single_file_drops,
-        _stream_shuffle,
     )
     from avk_job_skill_analytics_spark.streaming.ann_maintain import (
         foreach_batch_auto_retrain,
+    )
+    from avk_job_skill_analytics_spark.streaming.incremental import (
+        drain_available_now,
     )
 
     t0 = time.time()
@@ -94,26 +97,11 @@ def profile_retrain(spark, sf_dir):
         "prof_emb_ar_src_", mutate=_shifted_embeddings,
     )
     ts("fixture file drops staged", t0)
-    ckpt = tempfile.mkdtemp(prefix="prof_ckpt_ar_")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    stream = _drops_stream(spark, src, "vec_id long, embedding array<double>")
+    drain_available_now(
+        spark,
+        foreach_batch_auto_retrain(stream, root, base, "vec_id", "embedding"),
     )
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                foreach_batch_auto_retrain(
-                    stream, root, base, "vec_id", "embedding",
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     ts("drain (calm + shifted/retrain + calm)", t0)
     e2 = _shifted_embeddings(load(spark, sf_dir, "embeddings"))
     queries = e2.filter(F.col("vec_id") < 10)
