@@ -37,7 +37,15 @@ def _large_star(edges: DataFrame) -> DataFrame:
     per star instead of two plus a per-round broadcast barrier for
     the tiny m-relation (guide §2.4 — two operations keyed the same
     way share one exchange). Row set identical: every (v > u) edge
-    re-attaches to the same m either way."""
+    re-attaches to the same m either way.
+
+    Skew tradeoff: a window min gives up the map-side partial
+    aggregation a groupBy min gets, so a hub's whole neighbourhood
+    lands in one partition — and the star rounds deliberately
+    concentrate edges onto component representatives. On power-law
+    graphs at production scale that partition is a straggler and
+    spill risk; a salted two-phase min or the groupBy + join shape
+    avoids it."""
     from pyspark.sql import Window
 
     b = edges.unionByName(
@@ -57,7 +65,10 @@ def _small_star(edges: DataFrame) -> DataFrame:
     """One small-star round: orient edges large→small first. Window
     min per neighborhood, as in :func:`_large_star`; the self edge
     (u, m) is emitted per input row and deduplicated by the final
-    distinct — same set as the former one-row-per-u join shape."""
+    distinct — same set as the former one-row-per-u join shape. Same
+    skew tradeoff as :func:`_large_star`: no map-side partial
+    aggregation, so a hub's whole neighbourhood lands in one
+    partition."""
     from pyspark.sql import Window
 
     d = edges.select(

@@ -645,9 +645,16 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
     sign bit agrees (verified exactly over the sf0.1 corpus). NULL
     vectors and length-mismatched vectors sign to 0 for every band,
     exactly like the expression (null-propagated dots fail the
-    ``> 0`` test); a NULL ELEMENT inside a vector also signs to 0 —
-    the one divergence is a literal NaN element (Spark orders NaN
-    above zero), which the embeddings contract excludes."""
+    ``> 0`` test); a NULL ELEMENT inside a vector also signs to 0.
+
+    A NaN element in a full-length vector RAISES ``ValueError``: NaN
+    embeddings are outside the banding contract, and the expression
+    twin (which backs the SQL oracles) would set sign bits for them
+    (Spark orders NaN above zero), so signing them here would only
+    surface as an engine/oracle mismatch. Arrow hands NULL elements
+    to pandas as NaN too, so the NaN test is a Spark-side
+    ``array_contains(vec, NaN)`` flag (NULL elements do not match)
+    passed in next to the vector."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -663,15 +670,20 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
         T.StructField("sig", T.LongType()),
     ]))
 
-    def _sigs(vec):
+    def _sigs(vec, has_nan):
         n = len(vec)
         V = np.zeros((n, dim))
         ok = np.zeros(n, dtype=bool)
-        for j, v in enumerate(vec):
+        for j, (v, nan) in enumerate(zip(vec, has_nan)):
             if v is None or len(v) != dim:
                 continue
+            if nan:
+                raise ValueError(
+                    f"NaN element in embedding column {vec_col!r}: "
+                    "NaN embeddings cannot be banded"
+                )
             a = np.asarray(v, dtype=np.float64)
-            if np.isnan(a).any():
+            if np.isnan(a).any():  # a NULL element (Arrow -> NaN)
                 continue
             V[j] = a
             ok[j] = True
@@ -691,8 +703,11 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
 
     # annotations as REAL objects: pandas is imported locally, so
     # string hints would not resolve during pandas_udf introspection
-    _sigs.__annotations__ = {"vec": pd.Series, "return": pd.Series}
-    return F.pandas_udf(ret)(_sigs)(F.col(vec_col))
+    _sigs.__annotations__ = {"vec": pd.Series, "has_nan": pd.Series,
+                             "return": pd.Series}
+    return F.pandas_udf(ret)(_sigs)(
+        F.col(vec_col), F.array_contains(F.col(vec_col), float("nan"))
+    )
 
 
 def band_sig_structs(vec_col: str, dim: int, bands: int,

@@ -1,28 +1,39 @@
 """Layout-generic maintenance for growing ``table/batch=<id>``
 indexes on the shared fsio commit protocol.
 
-Both growing-index families (the banded LSH index in
-``minhash_stream`` and the exact prefix-postings index in
-``ssjoin_stream``) persist per-batch artifacts as one
+Six growing-index layouts append through the one sink
+(:func:`index_sink`) and compact through the one compactor
+(:func:`compact_batched_index`): the banded LSH index
+(``minhash_stream``), the exact prefix-postings index
+(``ssjoin_stream``), the embedding band index (``semantic_stream``),
+the BM25 postings (``lexical_stream``), the Naive Bayes count deltas
+(``classify_stream``) and the logistic-regression state journal
+(``linear_stream``). Each persists per-batch artifacts as one
 ``<table>/batch=<id>`` directory per table, committed by a
-``_batch_<id>`` marker, and periodically fold committed batches into
+``_batch_<id>`` marker, and periodically folds committed batches into
 a negative GENERATION partition via the journaled, rename-free
 cutover documented in ``fsio``. The only layout-specific facts are
-the table names and each table's clustering keys — this module
-parameterizes exactly those, so the crash-window guarantees the LSH
-compactor's pytest suite locks down are inherited by every index
-built on it instead of re-implemented per family.
+the table names, each table's compaction spec and the per-batch
+write — this module parameterizes exactly those, so the crash-window
+guarantees the LSH compactor's pytest suite locks down are inherited
+by every index built on it instead of re-implemented per family.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
 from .fsio import (
+    MARKER,
     IndexFS,
     committed_batch_ids,
     count_committed_files,
     drop_stale_generations,
     ensure_protocol,
+    legacy_overlay_ids,
     next_generation,
+    recover_compaction,
     retire_real_markers,
     write_journal,
 )
@@ -30,6 +41,8 @@ from .fsio import (
 __all__ = [
     "make_delete_batches",
     "committed_table_dirs",
+    "serving_batch_ids",
+    "index_sink",
     "compact_batched_index",
     "spread_batch",
     "parallel_writes",
@@ -101,6 +114,14 @@ def make_delete_batches(tables: tuple[str, ...]):
     return _delete
 
 
+def _layout_probes(fs: IndexFS, probe: str):
+    """(legacy_gen_probe, batch_dir_probe) for ``ensure_protocol`` /
+    ``legacy_overlay_ids``: a layout's pre-v2 sentinel is an
+    unmarkered ``<probe>/batch=-1`` directory."""
+    return (lambda: fs.is_dir(f"{probe}/batch=-1"),
+            lambda b: fs.is_dir(f"{probe}/batch={b}"))
+
+
 def committed_table_dirs(fs: IndexFS, table: str,
                          committed: set[str] | None = None
                          ) -> list[str]:
@@ -118,6 +139,74 @@ def committed_table_dirs(fs: IndexFS, table: str,
         if name.startswith("batch=")
         and name.split("=", 1)[1] in committed
     ]
+
+
+def serving_batch_ids(fs: IndexFS, probe: str) -> set[str]:
+    """The committed view of a READ-ONLY serving path: the committed
+    batch ids plus, on a pre-v2 root, the legacy ``batch=-1``
+    sentinel (``fsio.legacy_overlay_ids``) — serving never writes the
+    protocol stamp; the next writer does."""
+    return committed_batch_ids(fs) | legacy_overlay_ids(
+        fs, *_layout_probes(fs, probe)
+    )
+
+
+def index_sink(index_dir: str, layout: dict, write_batch,
+               compact_every: int | None = None):
+    """The ``foreachBatch`` body every growing-index layout appends
+    through — the exactly-once marker discipline in one place:
+
+    1. a present ``_batch_<id>`` marker short-circuits a clean
+       redelivery (nothing is written);
+    2. the writer-path protocol stamp (``ensure_protocol``, standard
+       ``<probe>/batch=-1`` sentinel probes) and ``recover_compaction``
+       finish any journal-committed compaction before this batch
+       reads the index;
+    3. ONE committed-set resolution (root listing + journal read) is
+       handed to ``write_batch(bdf, fs, batch_id, committed)``, which
+       writes every artifact of the batch as ``<table>/batch=<id>``
+       overwrite directories and reads the index through
+       :func:`committed_table_dirs` — a crash-redelivered batch never
+       sees its own half-written directories, so its rewrite is
+       identical and converges;
+    4. the marker lands LAST, committing all of the batch's artifacts;
+    5. with ``compact_every`` set, once that many committed REAL-batch
+       directories of the probe table have accumulated, the sink runs
+       :func:`compact_batched_index` over ``layout`` itself — bounded
+       amortized maintenance with no operator involvement.
+
+    ``layout`` is the ``{table: compaction spec}`` dict the compactor
+    takes; its FIRST table is the probe table. All index-path I/O
+    goes through ``fsio.IndexFS``, so the root may be
+    file:/hdfs:/s3a:."""
+    tables = tuple(layout)
+    probe = tables[0]
+    delete_fn = make_delete_batches(tables)
+
+    def sink(bdf, batch_id: int) -> None:
+        fs = IndexFS(bdf.sparkSession, index_dir)
+        if fs.exists(f"{MARKER}{batch_id}"):
+            return
+        ensure_protocol(fs, *_layout_probes(fs, probe))
+        recover_compaction(fs, delete_fn)
+        committed = committed_batch_ids(fs)
+        write_batch(bdf, fs, batch_id, committed)
+        fs.touch(f"{MARKER}{batch_id}")
+        if compact_every:
+            # the resolution above is still valid (single writer)
+            # plus the id just committed
+            live = committed | {str(batch_id)}
+            n_real = sum(
+                1
+                for name in fs.listdir(probe)
+                if name.startswith("batch=")
+                and not name.startswith("batch=-")
+                and name.split("=", 1)[1] in live
+            )
+            if n_real >= compact_every:
+                compact_batched_index(bdf.sparkSession, index_dir, layout)
+
+    return sink
 
 
 def compact_batched_index(spark, index_dir: str,
@@ -149,16 +238,11 @@ def compact_batched_index(spark, index_dir: str,
     so redelivered batches still short-circuit. Returns
     {'files_before', 'files_after', 'rows'} for the probe table,
     counted over the COMMITTED view."""
-    from .fsio import recover_compaction
-
     tables = tuple(cluster_cols)
     probe = tables[0]
     delete_fn = make_delete_batches(tables)
     fs = IndexFS(spark, index_dir)
-    if probes is None:
-        probes = (lambda: fs.is_dir(f"{probe}/batch=-1"),
-                  lambda b: fs.is_dir(f"{probe}/batch={b}"))
-    ensure_protocol(fs, *probes)
+    ensure_protocol(fs, *(probes or _layout_probes(fs, probe)))
     recover_compaction(fs, delete_fn)
     # reclaim half-written generations from a pre-commit crash
     stale = [
@@ -192,9 +276,6 @@ def compact_batched_index(spark, index_dir: str,
             # count() action re-ran the whole committed-batches read +
             # repartition a second time per compaction (guide §1.2 —
             # the probe table is the big one, so this halved its cost)
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
-
             obs = Observation()
             rep = rep.observe(obs, F.count(F.lit(1)).alias("rows"))
         rep.write.mode("overwrite").parquet(fs.uri(f"{t}/batch={gen}"))

@@ -29,13 +29,13 @@ from pyspark.sql import functions as F
 
 from ..operators.classify import _llr_fp
 from ..operators.textstats import tokens
-from .fsio import (
-    IndexFS,
-    committed_batch_ids,
-    ensure_protocol,
-    legacy_overlay_ids,
-    recover_compaction,
+from .batched_index import (
+    committed_table_dirs,
+    compact_batched_index,
+    index_sink,
+    serving_batch_ids,
 )
+from .fsio import IndexFS
 
 __all__ = [
     "foreach_batch_nb_train",
@@ -44,25 +44,22 @@ __all__ = [
 ]
 
 
-def _delete_nb_batches(fs, bs: list[str]) -> None:
-    for b in bs:
-        fs.delete(f"counts/batch={b}")
-
-
-def _probes(fs):
+def _sum_counts(df: DataFrame, b: int) -> DataFrame:
+    """The SUM-merge compaction spec: one row per term holding the
+    summed deltas, localCheckpoint-ed so the compactor's row count and
+    write share one computation."""
     return (
-        lambda: fs.is_dir("counts/batch=-1"),
-        lambda b: fs.is_dir(f"counts/batch={b}"),
+        df.groupBy("term")
+        .agg(
+            F.sum("c1").cast("long").alias("c1"),
+            F.sum("c0").cast("long").alias("c0"),
+        )
+        .repartition(b)
+        .localCheckpoint()
     )
 
 
-def _committed_count_dirs(fs, committed: set[str]) -> list[str]:
-    return [
-        fs.uri(f"counts/{name}")
-        for name in fs.listdir("counts")
-        if name.startswith("batch=")
-        and name.split("=", 1)[1] in committed
-    ]
+_LAYOUT = {"counts": _sum_counts}
 
 
 def _batch_deltas(bdf: DataFrame, id_col: str, text_col: str,
@@ -83,31 +80,14 @@ def _nb_train_batch_fn(index_dir: str, id_col: str, text_col: str,
                        compact_every: int | None = None):
     """Per-batch training body, exposed for redelivery tests."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, *_probes(fs))
-        recover_compaction(fs, _delete_nb_batches)
+    def write_batch(bdf: DataFrame, fs, batch_id: int,
+                    committed: set[str]) -> None:
         deltas = _batch_deltas(bdf, id_col, text_col, label_col)
         deltas.write.mode("overwrite").parquet(
             fs.uri(f"counts/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed_batch_ids(fs) | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("counts")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_nb_counts(spark, index_dir)
 
-    return sink
+    return index_sink(index_dir, _LAYOUT, write_batch, compact_every)
 
 
 def foreach_batch_nb_train(stream: DataFrame, index_dir: str,
@@ -131,10 +111,9 @@ def serve_nb_weights(spark, index_dir: str) -> DataFrame:
     term consumes identical operands. Read-only (legacy overlay, no
     stamping)."""
     fs = IndexFS(spark, index_dir)
-    committed = committed_batch_ids(fs) | legacy_overlay_ids(
-        fs, *_probes(fs)
+    dirs = committed_table_dirs(
+        fs, "counts", serving_batch_ids(fs, "counts")
     )
-    dirs = _committed_count_dirs(fs, committed)
     if not dirs:
         return spark.createDataFrame([], "term string, w_fp long")
     cnt = (
@@ -167,20 +146,7 @@ def compact_nb_counts(spark, index_dir: str, buckets: int = 1,
     (the SUM-merge, localCheckpoint-ed so the count and the write
     share one computation) — journal, tombstone grace, and crash
     recovery are the shared machinery unchanged."""
-    from .batched_index import compact_batched_index
-
-    def _merge(df, b):
-        return (
-            df.groupBy("term")
-            .agg(
-                F.sum("c1").cast("long").alias("c1"),
-                F.sum("c0").cast("long").alias("c0"),
-            )
-            .repartition(b)
-            .localCheckpoint()
-        )
-
     return compact_batched_index(
-        spark, index_dir, {"counts": _merge},
+        spark, index_dir, _LAYOUT,
         buckets=buckets, marker_horizon=marker_horizon,
     )

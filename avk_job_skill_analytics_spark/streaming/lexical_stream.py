@@ -31,25 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .batched_index import spread_batch
-
 from ..operators.retrieval import bm25_rank
 from ..operators.textstats import tokens
-from .fsio import (
-    IndexFS,
-    committed_batch_ids,
-    ensure_protocol,
-    legacy_overlay_ids,
-    recover_compaction,
+from .batched_index import (
+    committed_table_dirs,
+    compact_batched_index,
+    index_sink,
+    serving_batch_ids,
+    spread_batch,
 )
-
-
-def _legacy_probes(fs):
-    """(legacy_gen_probe, batch_dir_probe) for this layout."""
-    return (
-        lambda: fs.is_dir("postings/batch=-1"),
-        lambda b: fs.is_dir(f"postings/batch={b}"),
-    )
+from .fsio import IndexFS
 
 __all__ = [
     "foreach_batch_bm25_maintain",
@@ -57,24 +48,12 @@ __all__ = [
     "compact_bm25_index",
 ]
 
-_TABLES = ("postings", "doclen")
-
-
-def _delete_bm25_batches(fs, bs: list[str]) -> None:
-    """Layout callback for the shared commit protocol: each batch's
-    rows live in one ``batch=<b>`` directory per table."""
-    for table in _TABLES:
-        for b in bs:
-            fs.delete(f"{table}/batch={b}")
-
-
-def _committed_dirs(fs, table: str, committed: set[str]) -> list[str]:
-    return [
-        fs.uri(f"{table}/{name}")
-        for name in fs.listdir(table)
-        if name.startswith("batch=")
-        and name.split("=", 1)[1] in committed
-    ]
+# postings re-sorted on term in the generation so serving keeps its
+# row-group pruning; doclen plain
+_LAYOUT = {
+    "postings": lambda df, b: df.repartition(b).sortWithinPartitions("term"),
+    "doclen": None,
+}
 
 
 def _bm25_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
@@ -85,13 +64,8 @@ def _bm25_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
     overwrite directories, the marker commits them. O(arrivals) per
     trigger; the index is never rewritten (compaction amortizes)."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, *_legacy_probes(fs))
-        recover_compaction(fs, _delete_bm25_batches)
+    def write_batch(bdf: DataFrame, fs, batch_id: int,
+                    committed: set[str]) -> None:
         toks = tokens(
             spread_batch(bdf), id_col, text_col
         ).localCheckpoint()
@@ -113,20 +87,8 @@ def _bm25_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
         dl.write.mode("overwrite").parquet(
             fs.uri(f"doclen/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed_batch_ids(fs) | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("postings")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_bm25_index(spark, index_dir)
 
-    return sink
+    return index_sink(index_dir, _LAYOUT, write_batch, compact_every)
 
 
 def foreach_batch_bm25_maintain(stream: DataFrame, index_dir: str,
@@ -152,13 +114,9 @@ def serve_bm25(spark, index_dir: str, terms: list[str], id_col: str,
     and the shared ``bm25_rank`` scoring core — hash-identical to the
     batch BM25 over the same committed documents."""
     fs = IndexFS(spark, index_dir)
-    # pre-v2 compat, READ-ONLY: overlay a legacy sentinel into this
-    # read's committed view (serving must not write to the root)
-    committed = committed_batch_ids(fs) | legacy_overlay_ids(
-        fs, *_legacy_probes(fs)
-    )
-    p_dirs = _committed_dirs(fs, "postings", committed)
-    d_dirs = _committed_dirs(fs, "doclen", committed)
+    committed = serving_batch_ids(fs, "postings")
+    p_dirs = committed_table_dirs(fs, "postings", committed)
+    d_dirs = committed_table_dirs(fs, "doclen", committed)
     if not p_dirs:
         return spark.createDataFrame(
             [], f"{id_col} long, n_terms long, bm25_fp long, rk long"
@@ -183,15 +141,8 @@ def compact_bm25_index(spark, index_dir: str, buckets: int = 1,
     'rows'}. The cutover body is the layout-generic
     ``batched_index.compact_batched_index`` (postings via a CALLABLE
     layout for the sortWithinPartitions, doclen plain)."""
-    from .batched_index import compact_batched_index
-
     stats = compact_batched_index(
-        spark, index_dir,
-        {
-            "postings": lambda df, b:
-                df.repartition(b).sortWithinPartitions("term"),
-            "doclen": None,
-        },
+        spark, index_dir, _LAYOUT,
         buckets=buckets, marker_horizon=marker_horizon,
     )
     return {

@@ -38,13 +38,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import linearmodel as lm
-from .fsio import (
-    IndexFS,
-    committed_batch_ids,
-    ensure_protocol,
-    legacy_overlay_ids,
-    recover_compaction,
+from .batched_index import (
+    committed_table_dirs,
+    compact_batched_index,
+    index_sink,
+    serving_batch_ids,
 )
+from .fsio import IndexFS
 
 __all__ = [
     "foreach_batch_logreg_train",
@@ -55,35 +55,27 @@ __all__ = [
 _SCHEMA = "j int, w_micro long, cum_n long, seq long"
 
 
-def _delete_weight_batches(fs, bs: list[str]) -> None:
-    for b in bs:
-        fs.delete(f"weights/batch={b}")
-
-
-def _probes(fs):
+def _newest_state(df: DataFrame, b: int) -> DataFrame:
+    """The latest-state compaction spec: keep only the rows of the
+    newest ``seq`` — older steps are superseded by construction."""
+    mx = df.agg(F.max("seq").alias("m"))
     return (
-        lambda: fs.is_dir("weights/batch=-1"),
-        lambda b: fs.is_dir(f"weights/batch={b}"),
+        df.join(F.broadcast(mx), df.seq == mx.m, "left_semi")
+        .repartition(b)
+        .localCheckpoint()
     )
 
 
-def _committed_weight_dirs(fs) -> list[str]:
-    committed = committed_batch_ids(fs) | legacy_overlay_ids(
-        fs, *_probes(fs)
-    )
-    return [
-        fs.uri(f"weights/{name}")
-        for name in fs.listdir("weights")
-        if name.startswith("batch=")
-        and name.split("=", 1)[1] in committed
-    ]
+_LAYOUT = {"weights": _newest_state}
 
 
-def _latest_state(spark, fs, d: int) -> tuple[list[int], int, int]:
-    """(micro-weights, cum_n, seq) of the newest committed step —
-    zeros before the first. Reads O(batches·d) tiny rows; the 1-row
-    collect per field is the bounded-driver discipline."""
-    dirs = _committed_weight_dirs(fs)
+def _latest_state(spark, fs, d: int,
+                  committed: set[str]) -> tuple[list[int], int, int]:
+    """(micro-weights, cum_n, seq) of the newest step among the
+    ``committed`` batches — zeros before the first. Reads
+    O(batches·d) tiny rows; the 1-row collect per field is the
+    bounded-driver discipline."""
+    dirs = committed_table_dirs(fs, "weights", committed)
     if not dirs:
         return [0] * d, 0, 0
     df = spark.read.schema(_SCHEMA).parquet(*dirs)
@@ -102,15 +94,11 @@ def _logreg_train_batch_fn(index_dir: str, feature_cols: list[str],
                            compact_every: int | None = None):
     """Per-batch training body, exposed for redelivery tests."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, fs, batch_id: int,
+                    committed: set[str]) -> None:
         spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, *_probes(fs))
-        recover_compaction(fs, _delete_weight_batches)
         d = len(feature_cols)
-        w, cum_n, seq = _latest_state(spark, fs, d)
+        w, cum_n, seq = _latest_state(spark, fs, d, committed)
         exprs = ["count(*) AS n"] + [
             f"{g} AS g{j}"
             for j, g in enumerate(
@@ -133,20 +121,8 @@ def _logreg_train_batch_fn(index_dir: str, feature_cols: list[str],
             ).write.mode("overwrite").parquet(
                 fs.uri(f"weights/batch={batch_id}")
             )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed_batch_ids(fs) | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("weights")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_logreg_weights(spark, index_dir)
 
-    return sink
+    return index_sink(index_dir, _LAYOUT, write_batch, compact_every)
 
 
 def foreach_batch_logreg_train(stream: DataFrame, index_dir: str,
@@ -173,7 +149,9 @@ def serve_logreg_weights(spark, index_dir: str,
     step count and cumulative rows consumed."""
     fs = IndexFS(spark, index_dir)
     d = len(stat_names)
-    w, cum_n, seq = _latest_state(spark, fs, d)
+    w, cum_n, seq = _latest_state(
+        spark, fs, d, serving_batch_ids(fs, "weights")
+    )
     rows = [(s, w[j]) for j, s in enumerate(stat_names)]
     rows += [("n_batches", seq), ("n_seen", cum_n)]
     return spark.createDataFrame(
@@ -188,17 +166,6 @@ def compact_logreg_weights(spark, index_dir: str,
     only the newest ``seq`` — the latest-state merge: older steps
     are superseded by construction, so serving is invariant while
     the committed file count drops to one."""
-    from .batched_index import compact_batched_index
-
-    def _merge(df, b):
-        mx = df.agg(F.max("seq").alias("m"))
-        return (
-            df.join(F.broadcast(mx), df.seq == mx.m, "left_semi")
-            .repartition(b)
-            .localCheckpoint()
-        )
-
     return compact_batched_index(
-        spark, index_dir, {"weights": _merge},
-        marker_horizon=marker_horizon,
+        spark, index_dir, _LAYOUT, marker_horizon=marker_horizon,
     )

@@ -9,8 +9,10 @@ incremental-index family (minhash_stream: text LSH; ssjoin_stream:
 exact sets; lexical_stream: BM25; ann_maintain: IVF-PQ):
 
 - arrivals band with the SAME deterministic hyperplanes as the batch
-  prune (``similarity.band_sig_structs`` — pure Column expressions,
-  no Python, no shuffle to sign);
+  prune through ``similarity.band_sig_structs_np`` — a pandas UDF
+  that signs each Arrow batch with NumPy, bit-identical to the
+  ``band_sig_structs`` Column expressions the oracles replay, no
+  shuffle to sign;
 - candidates come from the arrivals' band signatures joined against
   (a) the COMMITTED band postings (everything indexed so far) and
   (b) their own micro-batch's co-arrivals (batch self-join with
@@ -52,14 +54,11 @@ from ..operators.similarity import _dot, _norm, band_sig_structs_np
 from .batched_index import (
     committed_table_dirs,
     compact_batched_index,
-    make_delete_batches,
+    index_sink,
     spread_batch,
 )
 
-TABLES = ("bands", "vecs")
-_CLUSTER = {"bands": ["band", "sig"], "vecs": None}
-
-_delete_semantic_batches = make_delete_batches(TABLES)
+_LAYOUT = {"bands": ["band", "sig"], "vecs": None}
 
 
 def _semantic_maintain_batch_fn(index_dir: str, id_col: str,
@@ -68,23 +67,12 @@ def _semantic_maintain_batch_fn(index_dir: str, id_col: str,
                                 threshold: float = 0.4,
                                 round_digits: int = 6,
                                 compact_every: int | None = None):
-    """The per-batch maintenance body, exposed for redelivery tests."""
-    from .fsio import (
-        IndexFS,
-        committed_batch_ids,
-        ensure_protocol,
-        recover_compaction,
-    )
+    """The per-batch maintenance body, exposed for redelivery tests:
+    ``batched_index.index_sink`` over the bands/vecs layout."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, fs, batch_id: int,
+                    committed: set[str]) -> None:
         spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, lambda: fs.is_dir("bands/batch=-1"),
-                        lambda b: fs.is_dir(f"bands/batch={b}"))
-        recover_compaction(fs, _delete_semantic_batches)
-        committed = committed_batch_ids(fs)
         arr = spread_batch(bdf).select(
             F.col(id_col), F.col(vec_col)
         ).localCheckpoint()
@@ -159,20 +147,8 @@ def _semantic_maintain_batch_fn(index_dir: str, id_col: str,
         vecs_new.write.mode("overwrite").parquet(
             fs.uri(f"vecs/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("bands")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_semantic_index(spark, index_dir)
 
-    return sink
+    return index_sink(index_dir, _LAYOUT, write_batch, compact_every)
 
 
 def compact_semantic_index(spark, index_dir: str, buckets: int = 1,
@@ -182,7 +158,7 @@ def compact_semantic_index(spark, index_dir: str, buckets: int = 1,
     journaled rename-free cutover, so the per-trigger candidate join
     never degrades into a small-files listing."""
     return compact_batched_index(
-        spark, index_dir, _CLUSTER,
+        spark, index_dir, _LAYOUT,
         buckets=buckets, marker_horizon=marker_horizon,
     )
 

@@ -53,17 +53,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .batched_index import (
-    spread_batch,
     committed_table_dirs,
     compact_batched_index,
-    make_delete_batches,
+    index_sink,
+    spread_batch,
 )
 from .minhash_stream import shingle_hash_array
 
-TABLES = ("postings", "sets")
-_CLUSTER = {"postings": ["h"], "sets": None}
-
-_delete_ssjoin_batches = make_delete_batches(TABLES)
+_LAYOUT = {"postings": ["h"], "sets": None}
 
 
 def signed_sets(df: DataFrame, id_col: str, text_col: str, k: int,
@@ -96,29 +93,17 @@ def _ssjoin_maintain_batch_fn(index_dir: str, id_col: str,
                               t_den: int,
                               compact_every: int | None = None):
     """The per-batch maintenance body, exposed for redelivery tests —
-    the exactly-once discipline of ``_lsh_maintain_batch_fn`` with
-    the prefix-postings layout: every artifact of batch b is a
-    ``<table>/batch=<b>`` overwrite directory, the ``_batch_<b>``
-    marker commits them all, clean replays short-circuit, and the
-    index view is committed batches only (a redelivered batch never
-    sees its own half-written directories, so recomputed pairs are
-    identical and overwrite themselves)."""
-    from .fsio import (
-        IndexFS,
-        committed_batch_ids,
-        ensure_protocol,
-        recover_compaction,
-    )
+    ``batched_index.index_sink`` over the prefix-postings layout:
+    every artifact of batch b is a ``<table>/batch=<b>`` overwrite
+    directory, the ``_batch_<b>`` marker commits them all, clean
+    replays short-circuit, and the index view is committed batches
+    only (a redelivered batch never sees its own half-written
+    directories, so recomputed pairs are identical and overwrite
+    themselves)."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, fs, batch_id: int,
+                    committed: set[str]) -> None:
         spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, lambda: fs.is_dir("postings/batch=-1"),
-                        lambda b: fs.is_dir(f"postings/batch={b}"))
-        recover_compaction(fs, _delete_ssjoin_batches)
-        committed = committed_batch_ids(fs)
         signed = signed_sets(
             spread_batch(bdf), id_col, text_col, k, t_num, t_den
         ).localCheckpoint()
@@ -215,20 +200,8 @@ def _ssjoin_maintain_batch_fn(index_dir: str, id_col: str,
         sets_new.write.mode("overwrite").parquet(
             fs.uri(f"sets/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("postings")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_ssjoin_index(spark, index_dir)
 
-    return sink
+    return index_sink(index_dir, _LAYOUT, write_batch, compact_every)
 
 
 def compact_ssjoin_index(spark, index_dir: str, buckets: int = 1,
@@ -240,7 +213,7 @@ def compact_ssjoin_index(spark, index_dir: str, buckets: int = 1,
     small-files listing. Returns {'files_before', 'files_after',
     'rows'} over the postings table."""
     return compact_batched_index(
-        spark, index_dir, _CLUSTER,
+        spark, index_dir, _LAYOUT,
         buckets=buckets, marker_horizon=marker_horizon,
     )
 

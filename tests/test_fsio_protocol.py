@@ -18,8 +18,10 @@ from avk_job_skill_analytics_spark.streaming.fsio import (
     read_journal,
     write_journal,
 )
+from avk_job_skill_analytics_spark.streaming.batched_index import (
+    committed_table_dirs,
+)
 from avk_job_skill_analytics_spark.streaming.minhash_stream import (
-    _committed_index_dirs,
     _lsh_maintain_batch_fn,
     compact_lsh_index,
 )
@@ -41,7 +43,7 @@ def test_inflight_reader_snapshot_survives_compaction(spark, tmp_path):
         [(2, "entirely different corpus words")],
         "doc_id long, text string"), 1)
     # the in-flight reader: resolves NOW, scans LATER (lazy plan)
-    pre_dirs = _committed_index_dirs(fs, "bands")
+    pre_dirs = committed_table_dirs(fs, "bands")
     lazy = spark.read.parquet(*pre_dirs).select("_idx_id", "band", "sig")
     snapshot = sorted(map(tuple, lazy.collect()))
     compact_lsh_index(spark, d)
@@ -53,7 +55,7 @@ def test_inflight_reader_snapshot_survives_compaction(spark, tmp_path):
     ) == snapshot
     # while NEW readers resolve only the generation (no double-count)
     post = sorted(
-        map(tuple, spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
             .select("_idx_id", "band", "sig").collect())
     )
     assert post == snapshot
@@ -91,7 +93,7 @@ def test_legacy_pre_v2_root_migrates_not_destroyed(spark, tmp_path):
     assert fs.exists("_batch_-1")
     assert {"-1", "1"} <= committed_batch_ids(fs)
     rows = sorted(
-        map(tuple, spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
             .select("_idx_id", "band", "sig").collect())
     )
     assert (1, 0, "11_22") in rows       # legacy rows survived
@@ -99,7 +101,7 @@ def test_legacy_pre_v2_root_migrates_not_destroyed(spark, tmp_path):
     # a compaction does NOT drop the adopted sentinel as stale
     compact_lsh_index(spark, d)
     rows2 = sorted(
-        map(tuple, spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
             .select("_idx_id", "band", "sig").collect())
     )
     assert rows2 == rows
@@ -124,7 +126,7 @@ def test_v2_root_still_drops_uncommitted_generation(spark, tmp_path):
     assert "-1" not in committed_batch_ids(fs)
     compact_lsh_index(spark, d)
     rows = sorted(
-        map(tuple, spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
             .select("_idx_id", "band", "sig").collect())
     )
     assert not any(r[0] == 77 for r in rows)  # garbage reclaimed
@@ -204,7 +206,7 @@ def test_unstamped_precommit_garbage_not_adopted(spark, tmp_path):
     # the next compaction reclaims it as a stale generation
     compact_lsh_index(spark, d)
     rows = sorted(
-        map(tuple, spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
             .select("_idx_id", "band", "sig").collect())
     )
     # exactly one copy of doc 1's legacy row — no double-count

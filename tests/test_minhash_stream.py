@@ -146,8 +146,10 @@ def test_lsh_index_compaction_preserves_behavior(spark, tmp_path):
     import os
 
     from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
+    from avk_job_skill_analytics_spark.streaming.batched_index import (
+        committed_table_dirs,
+    )
     from avk_job_skill_analytics_spark.streaming.minhash_stream import (
-        _committed_index_dirs,
         _lsh_maintain_batch_fn,
         compact_lsh_index,
     )
@@ -165,7 +167,7 @@ def test_lsh_index_compaction_preserves_behavior(spark, tmp_path):
     def rows():
         return sorted(
             map(tuple,
-                spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+                spark.read.parquet(*committed_table_dirs(fs, "bands"))
                 .select("_idx_id", "band", "sig").collect())
         )
 
@@ -245,8 +247,10 @@ def test_lsh_compaction_recovers_from_mid_apply_crash(spark, tmp_path):
     import os
 
     from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
+    from avk_job_skill_analytics_spark.streaming.batched_index import (
+        committed_table_dirs,
+    )
     from avk_job_skill_analytics_spark.streaming.minhash_stream import (
-        _committed_index_dirs,
         _lsh_maintain_batch_fn,
         compact_lsh_index,
     )
@@ -262,7 +266,7 @@ def test_lsh_compaction_recovers_from_mid_apply_crash(spark, tmp_path):
         "doc_id long, text string"), 1)
 
     def rows():
-        dirs = _committed_index_dirs(fs, "bands")
+        dirs = committed_table_dirs(fs, "bands")
         return sorted(
             map(tuple, spark.read.parquet(*dirs)
                 .select("_idx_id", "band", "sig").collect())
@@ -272,8 +276,8 @@ def test_lsh_compaction_recovers_from_mid_apply_crash(spark, tmp_path):
     # simulate: generation written at its final path + journal
     # committed, apply never ran (crash right after the atomic
     # commit point)
-    b = spark.read.parquet(*_committed_index_dirs(fs, "bands"))
-    s = spark.read.parquet(*_committed_index_dirs(fs, "sets"))
+    b = spark.read.parquet(*committed_table_dirs(fs, "bands"))
+    s = spark.read.parquet(*committed_table_dirs(fs, "sets"))
     b.write.parquet(f"{d}/bands/batch=-1")
     s.write.parquet(f"{d}/sets/batch=-1")
     with open(f"{d}/_compact_commit", "w") as f:
@@ -320,13 +324,15 @@ def test_lsh_second_compaction_crash_window_preserves_index(
     from avk_job_skill_analytics_spark.streaming.fsio import (
         IndexFS,
         read_journal,
+        recover_compaction,
         write_journal,
     )
+    from avk_job_skill_analytics_spark.streaming.batched_index import (
+        committed_table_dirs,
+        make_delete_batches,
+    )
     from avk_job_skill_analytics_spark.streaming.minhash_stream import (
-        _committed_index_dirs,
-        _delete_lsh_batches,
         _lsh_maintain_batch_fn,
-        _recover_compaction,
         compact_lsh_index,
     )
 
@@ -344,7 +350,7 @@ def test_lsh_second_compaction_crash_window_preserves_index(
     def rows():
         return sorted(
             map(tuple,
-                spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+                spark.read.parquet(*committed_table_dirs(fs, "bands"))
                 .select("_idx_id", "band", "sig").collect())
         )
 
@@ -353,22 +359,23 @@ def test_lsh_second_compaction_crash_window_preserves_index(
     # written and journal committed (consumed includes '-1'), then the
     # apply is interrupted after the marker touch and ONE consumed
     # delete — the exact shape of the round-6 ADVICE window
-    b = spark.read.parquet(*_committed_index_dirs(fs, "bands"))
-    s = spark.read.parquet(*_committed_index_dirs(fs, "sets"))
+    b = spark.read.parquet(*committed_table_dirs(fs, "bands"))
+    s = spark.read.parquet(*committed_table_dirs(fs, "sets"))
     b.localCheckpoint().write.parquet(f"{d}/bands/batch=-2")
     s.localCheckpoint().write.parquet(f"{d}/sets/batch=-2")
     write_journal(fs, -2, ["-1", "1"])
     fs.touch("_batch_-2")
-    _delete_lsh_batches(fs, ["-1"])  # partial apply, then "crash"
+    delete_lsh = make_delete_batches(("bands", "sets"))
+    delete_lsh(fs, ["-1"])  # partial apply, then "crash"
     assert rows() == expected    # journal overlay keeps the view whole
-    _recover_compaction(fs)      # any later caller finishes it
+    recover_compaction(fs, delete_lsh)  # any later caller finishes it
     assert read_journal(fs) is None
     assert rows() == expected
     assert os.path.exists(f"{d}/bands/batch=-2")
     assert not os.path.exists(f"{d}/bands/batch=-1")
     assert not os.path.exists(f"{d}/_batch_-1")
     # running recovery AGAIN (double crash) is a no-op, not data loss
-    _recover_compaction(fs)
+    recover_compaction(fs, delete_lsh)
     assert rows() == expected
     # and the sink keeps working on top of generation -2
     sink(spark.createDataFrame(
@@ -386,8 +393,10 @@ def test_lsh_maintain_on_file_scheme_path(spark, tmp_path):
     ``os.*`` call on index paths would fail on the scheme prefix, so
     green here proves the Hadoop FS shim covers every touch point."""
     from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
+    from avk_job_skill_analytics_spark.streaming.batched_index import (
+        committed_table_dirs,
+    )
     from avk_job_skill_analytics_spark.streaming.minhash_stream import (
-        _committed_index_dirs,
         _lsh_maintain_batch_fn,
         compact_lsh_index,
     )
@@ -410,7 +419,7 @@ def test_lsh_maintain_on_file_scheme_path(spark, tmp_path):
         for r in spark.read.parquet(f"{d}/pairs").collect()
     }
     assert (1, 11) in pairs and (1, 31) in pairs
-    assert len(_committed_index_dirs(fs, "bands")) == 2  # gen + batch 2
+    assert len(committed_table_dirs(fs, "bands")) == 2  # gen + batch 2
 
 
 def test_lsh_marker_retirement_bounds_root_metadata(spark, tmp_path):
@@ -421,8 +430,10 @@ def test_lsh_marker_retirement_bounds_root_metadata(spark, tmp_path):
     import os
 
     from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
+    from avk_job_skill_analytics_spark.streaming.batched_index import (
+        committed_table_dirs,
+    )
     from avk_job_skill_analytics_spark.streaming.minhash_stream import (
-        _committed_index_dirs,
         _lsh_maintain_batch_fn,
         compact_lsh_index,
     )
@@ -439,7 +450,7 @@ def test_lsh_marker_retirement_bounds_root_metadata(spark, tmp_path):
     def rows():
         return sorted(
             map(tuple,
-                spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+                spark.read.parquet(*committed_table_dirs(fs, "bands"))
                 .select("_idx_id", "band", "sig").collect())
         )
 
@@ -467,8 +478,10 @@ def test_lsh_auto_compaction_bounds_files(spark, tmp_path):
     import os
 
     from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
+    from avk_job_skill_analytics_spark.streaming.batched_index import (
+        committed_table_dirs,
+    )
     from avk_job_skill_analytics_spark.streaming.minhash_stream import (
-        _committed_index_dirs,
         _lsh_maintain_batch_fn,
     )
 
@@ -489,7 +502,7 @@ def test_lsh_auto_compaction_bounds_files(spark, tmp_path):
         fs = IndexFS(spark, d)
         rows = sorted(
             map(tuple,
-                spark.read.parquet(*_committed_index_dirs(fs, "bands"))
+                spark.read.parquet(*committed_table_dirs(fs, "bands"))
                 .select("_idx_id", "band", "sig").collect())
         )
         return fs, rows
@@ -501,9 +514,9 @@ def test_lsh_auto_compaction_bounds_files(spark, tmp_path):
     fs_plain, rows_plain = run(d_plain, None)
     fs_auto, rows_auto = run(d_auto, 3)
     assert rows_auto == rows_plain
-    n_dirs = len(_committed_index_dirs(fs_auto, "bands"))
+    n_dirs = len(committed_table_dirs(fs_auto, "bands"))
     # never more than compact_every-1 real batches + one generation,
     # where the uncompacted run keeps all 8 batch directories
     assert n_dirs <= 3, n_dirs
-    assert len(_committed_index_dirs(fs_plain, "bands")) == 8
+    assert len(committed_table_dirs(fs_plain, "bands")) == 8
     assert fs_auto.count_files("bands") < fs_plain.count_files("bands")

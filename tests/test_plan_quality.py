@@ -797,3 +797,34 @@ def test_every_drain_goes_through_the_one_runner():
     want = {os.path.relpath(runner, root): 1}
     assert triggers == want, triggers
     assert ckpts == want, ckpts
+
+
+def test_every_growing_index_goes_through_the_one_sink():
+    """streaming/batched_index.index_sink owns the writer-path commit
+    skeleton (marker short-circuit → protocol stamp → recovery →
+    write → marker → auto-compaction): ``ensure_protocol`` is called
+    only there and in the two IVF-PQ modules (their own leaf layout),
+    and no growing-index layout module touches a marker itself."""
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "avk_job_skill_analytics_spark")
+    calls = {}
+    for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        n = len(re.findall(r"(?<!def)ensure_protocol\(", _code_tokens(p)))
+        if n:
+            calls[os.path.relpath(p, pkg)] = n
+    assert set(calls) == {
+        os.path.join("streaming", "batched_index.py"),
+        os.path.join("streaming", "ann_maintain.py"),
+        os.path.join("operators", "ann_index.py"),
+    }, calls
+    touches = {}
+    for m in ("minhash_stream", "ssjoin_stream", "semantic_stream",
+              "lexical_stream", "classify_stream", "linear_stream"):
+        n = _code_tokens(
+            os.path.join(pkg, "streaming", f"{m}.py")).count("fs.touch(")
+        if n:
+            touches[m] = n
+    assert touches == {}, touches

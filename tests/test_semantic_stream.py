@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.operators.similarity import (
     band_sig_structs,
+    band_sig_structs_np,
 )
 from avk_job_skill_analytics_spark.streaming.batched_index import (
     committed_table_dirs,
@@ -217,3 +219,26 @@ def test_semantic_drain_equals_batch_banding(spark, tmp_path):
     }
     assert _pairs(spark, d) == batch_pairs
     assert batch_pairs, "fixture should produce at least one pair"
+
+
+def test_nan_embedding_fails_loudly(spark):
+    """The NumPy banding kernel raises on a NaN element instead of
+    signing the vector to 0 (the expression twin behind the oracles
+    would set bits for it); NULL vectors, NULL elements and
+    wrong-length vectors — NaN-bearing or not — still sign to 0."""
+    nan = float("nan")
+    ok = _df(spark, [
+        (1, None),
+        (2, [1.0, None] + [0.5] * (DIM - 2)),
+        (3, [1.0] * 3),
+        (4, [nan] * 3),
+    ])
+    sigs = ok.select(
+        F.explode(band_sig_structs_np("embedding", DIM, 2, 4)).alias("s")
+    ).select("s.sig").collect()
+    assert len(sigs) == 8 and all(r.sig == 0 for r in sigs)
+    bad = _df(spark, [(1, _vec(1.0)), (2, [nan] + _vec(2.0)[1:])])
+    with pytest.raises(Exception, match="ValueError: NaN element"):
+        bad.select(
+            band_sig_structs_np("embedding", DIM, 2, 4).alias("s")
+        ).collect()
