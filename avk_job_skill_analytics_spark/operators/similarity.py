@@ -12,9 +12,12 @@ Approximate-nearest-neighbor over an ``array<float>`` column:
   the corpus so each query only scores its bucket — the scale path
   when the query set is itself huge.
 
-All dot products run as JVM-side higher-order functions
-(``zip_with`` + ``aggregate``) in double precision — no Python UDFs in
-the hot path.
+Cosine dot products run as JVM-side higher-order functions
+(``zip_with`` + ``aggregate``) in double precision. Hyperplane
+signatures (``lsh_topk``, ``knn_graph``, the banded semantic family)
+all come from one NumPy pandas-UDF kernel, ``_signatures``, which
+signs each Arrow batch in the same left-to-right summation order and
+runs once per vector per query.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.session import scratch_persist
 from .hashing import md5_long
 
 
@@ -412,22 +416,83 @@ def _plane_sign(p: int, i: int) -> float:
     return 1.0 if h % 2 == 0 else -1.0
 
 
-def hyperplane_signature(vec: Column, dim: int, planes: int = 8) -> Column:
-    """Random-hyperplane LSH signature (Charikar 2002): bit p is the
-    sign of <v, r_p> with deterministic ±1 hyperplane components.
-    Cosine-similar vectors agree on most bits."""
-    sig = F.lit(0).cast("long")
-    for p in range(planes):
-        # zip_with against a literal ±1 array: one vectorized
-        # expression per plane instead of dim scalar terms
-        r = F.array(*[F.lit(_plane_sign(p, i)) for i in range(dim)])
-        dot = F.aggregate(
-            F.zip_with(vec, r, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
-    return sig
+def _pack_signs(V, S, width: int):
+    """Packed hyperplane signatures of the rows of ``V`` (n, dim)
+    against the ±1 plane matrix ``S`` (planes, dim): column g of the
+    (n, planes // width) int64 result packs the sign bits of planes
+    g*width .. g*width + width - 1, plane g*width + r at bit r.
+
+    Each dot is accumulated dimension by dimension, ``acc = acc +
+    x_i·s_i`` from acc = 0.0 — the left-to-right IEEE order of the
+    DuckDB oracles' ``list_reduce`` — in O(n × planes) memory. A row
+    of zeros signs to 0."""
+    import numpy as np
+
+    acc = np.zeros((V.shape[0], S.shape[0]))
+    for i in range(V.shape[1]):
+        acc += V[:, i, None] * S[None, :, i]
+    bits = (acc > 0).reshape(V.shape[0], -1, width).astype(np.int64)
+    return bits @ (np.int64(1) << np.arange(width, dtype=np.int64))
+
+
+def _signatures(vec_col: str, dim: int, plane_ids, width: int) -> Column:
+    """The one hyperplane-signature kernel: ``array<long>`` holding one
+    packed signature per consecutive group of ``width`` ids in
+    ``plane_ids`` (:func:`_pack_signs` over each Arrow batch, planes
+    from :func:`_plane_sign`).
+
+    NULL vectors, vectors with a NULL element and vectors whose length
+    is not ``dim`` sign to 0 in every group. A NaN element in a
+    full-length vector raises ``ValueError``: NaN embeddings are
+    outside the contract, and the oracles' fold would set sign bits
+    for them. Arrow hands NULL elements to pandas as NaN too, so the
+    NaN test is a Spark-side ``array_contains(vec, NaN)`` flag (NULL
+    elements do not match) passed in next to the vector."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    S = np.asarray([[_plane_sign(p, i) for i in range(dim)]
+                    for p in plane_ids])
+
+    def _sign(vec, has_nan):
+        V = np.zeros((len(vec), dim))
+        for j, (v, nan) in enumerate(zip(vec, has_nan)):
+            if v is None or len(v) != dim:
+                continue
+            if nan:
+                raise ValueError(
+                    f"NaN element in embedding column {vec_col!r}: "
+                    "NaN embeddings cannot be signed"
+                )
+            a = np.asarray(v, dtype=np.float64)
+            if not np.isnan(a).any():  # NaN here is a NULL element
+                V[j] = a
+        return pd.Series(list(_pack_signs(V, S, width)))
+
+    # annotations as REAL objects: pandas is imported locally, so
+    # string hints would not resolve during pandas_udf introspection
+    _sign.__annotations__ = {"vec": pd.Series, "has_nan": pd.Series,
+                             "return": pd.Series}
+    return F.pandas_udf(T.ArrayType(T.LongType()))(_sign)(
+        F.col(vec_col), F.array_contains(F.col(vec_col), float("nan"))
+    )
+
+
+def _signed(df: DataFrame, id_col: str, vec_col: str, dim: int,
+            planes: int) -> DataFrame:
+    """``(_id, _v, _n, _sig)``: each row of ``df`` with its norm and
+    its ``planes``-bit signature, persisted so the kernel runs once
+    per row however often the frame is read (a self-join reads it
+    twice, and a join on ``_sig`` infers an ``IS NOT NULL`` filter
+    that would otherwise copy the kernel call below the projection)."""
+    sig = F.element_at(_signatures(vec_col, dim, range(planes), planes), 1)
+    return scratch_persist(df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        _norm(F.col(vec_col)).alias("_n"),
+        sig.alias("_sig"),
+    ))
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -442,25 +507,31 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     ``multiprobe=m`` additionally probes every bucket at Hamming
     distance 1 on the first m planes (the standard recall/cost dial:
     m extra buckets per query, no extra corpus passes — queries are
-    expanded, the corpus side is untouched)."""
-    sig = hyperplane_signature(F.col(vec_col), dim, planes)
-    probe_sigs = F.array(
-        sig, *[sig.bitwiseXOR(F.lit(1 << p)) for p in range(multiprobe)]
+    expanded, the corpus side is untouched).
+
+    Each vector is signed once; passing the same frame as ``corpus``
+    and ``queries`` (:func:`knn_graph`) signs it once for both sides.
+    A NaN element in an embedding raises ``ValueError`` (see
+    :func:`_signatures`); NULL and wrong-length vectors bucket at
+    signature 0."""
+    cs = _signed(corpus, id_col, vec_col, dim, planes)
+    signed_q = cs if queries is corpus else _signed(
+        queries, id_col, vec_col, dim, planes
     )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.explode(probe_sigs).alias("_sig"),
-    )
-    cs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
-        hyperplane_signature(F.col(vec_col), dim, planes).alias("_sig"),
+    sig = F.col("_sig")
+    qs = signed_q.select(
+        F.col("_id").alias("query_id"),
+        F.col("_v").alias("_qv"),
+        F.col("_n").alias("_qn"),
+        F.explode(F.array(
+            sig, *[sig.bitwiseXOR(F.lit(1 << p)) for p in range(multiprobe)]
+        )).alias("_sig"),
     )
     scored = (
-        cs.join(qs, "_sig")
+        cs.select(F.col("_id").alias("neighbor_id"),
+                  F.col("_v").alias("_cv"), F.col("_n").alias("_cn"),
+                  "_sig")
+        .join(qs, "_sig")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "cosine",
@@ -612,8 +683,8 @@ def adaptive_rows_per_band(n: int, target_bucket: int = 128,
 
 
 def _band_planes(bands: int, rows_per_band: int) -> list:
-    """The (band, row) -> plane-id map shared by the expression and
-    vectorized banding paths (and replayed by the SQL oracles)."""
+    """The (band, row) -> plane-id map of :func:`band_sig_structs_np`
+    (replayed by the SQL oracles)."""
     planes = []
     for b in range(bands):
         for r in range(rows_per_band):
@@ -629,95 +700,12 @@ def _band_planes(bands: int, rows_per_band: int) -> list:
 
 def band_sig_structs_np(vec_col: str, dim: int, bands: int,
                         rows_per_band: int) -> Column:
-    """Vectorized twin of :func:`band_sig_structs` — the SAME
-    array<struct<band,sig>> column, computed per Arrow batch with
-    NumPy instead of interpreted higher-order folds (guide §4.2: hand
-    whole batches to vectorized native code). Banding 1 K vectors at
-    dim 64 × 32 planes measured ~3 s warm as expressions (each plane a
-    zip_with + aggregate fold, ~2·dim interpreted lambda calls per
-    plane per row) vs well under a second through NumPy.
-
-    Bit-identical by construction: per-plane products x_i·s_i are
-    exact IEEE doubles either way, and the fold's LEFT-TO-RIGHT
-    summation order is reproduced with ``np.cumsum`` (sequential
-    partial sums — NumPy's pairwise summation applies to reductions,
-    not cumulative ops), so every rounding step matches and every
-    sign bit agrees (verified exactly over the sf0.1 corpus). NULL
-    vectors and length-mismatched vectors sign to 0 for every band,
-    exactly like the expression (null-propagated dots fail the
-    ``> 0`` test); a NULL ELEMENT inside a vector also signs to 0.
-
-    A NaN element in a full-length vector RAISES ``ValueError``: NaN
-    embeddings are outside the banding contract, and the expression
-    twin (which backs the SQL oracles) would set sign bits for them
-    (Spark orders NaN above zero), so signing them here would only
-    surface as an engine/oracle mismatch. Arrow hands NULL elements
-    to pandas as NaN too, so the NaN test is a Spark-side
-    ``array_contains(vec, NaN)`` flag (NULL elements do not match)
-    passed in next to the vector."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    S = np.asarray(
-        [[_plane_sign(pl, i) for i in range(dim)]
-         for pl in _band_planes(bands, rows_per_band)]
-    )  # (bands*rows_per_band, dim)
-    shifts = np.asarray([1 << r for r in range(rows_per_band)],
-                        dtype=np.int64)
-    ret = T.ArrayType(T.StructType([
-        T.StructField("band", T.IntegerType()),
-        T.StructField("sig", T.LongType()),
-    ]))
-
-    def _sigs(vec, has_nan):
-        n = len(vec)
-        V = np.zeros((n, dim))
-        ok = np.zeros(n, dtype=bool)
-        for j, (v, nan) in enumerate(zip(vec, has_nan)):
-            if v is None or len(v) != dim:
-                continue
-            if nan:
-                raise ValueError(
-                    f"NaN element in embedding column {vec_col!r}: "
-                    "NaN embeddings cannot be banded"
-                )
-            a = np.asarray(v, dtype=np.float64)
-            if np.isnan(a).any():  # a NULL element (Arrow -> NaN)
-                continue
-            V[j] = a
-            ok[j] = True
-        # exact products, then LEFT-TO-RIGHT ordered partial sums —
-        # the same IEEE rounding sequence as the expression fold
-        prods = V[:, None, :] * S[None, :, :]      # (n, planes, dim)
-        dots = np.cumsum(prods, axis=2)[:, :, -1]  # (n, planes)
-        bits = (dots > 0) & ok[:, None]
-        sigs = bits.reshape(n, bands, rows_per_band).astype(
-            np.int64
-        ) @ shifts                                  # (n, bands)
-        out = [
-            [{"band": b, "sig": int(row[b])} for b in range(bands)]
-            for row in sigs
-        ]
-        return pd.Series(out)
-
-    # annotations as REAL objects: pandas is imported locally, so
-    # string hints would not resolve during pandas_udf introspection
-    _sigs.__annotations__ = {"vec": pd.Series, "has_nan": pd.Series,
-                             "return": pd.Series}
-    return F.pandas_udf(ret)(_sigs)(
-        F.col(vec_col), F.array_contains(F.col(vec_col), float("nan"))
-    )
-
-
-def band_sig_structs(vec_col: str, dim: int, bands: int,
-                     rows_per_band: int) -> Column:
-    """array<struct<band, sig>> of banded hyperplane signatures —
-    band b packs ``rows_per_band`` deterministic sign bits (planes
-    p = b*rows_per_band + r, the :func:`_plane_sign` constants), so
-    the batch prune, the streaming ingest gate and the SQL oracles
-    all band identically. Pure Column expression (codegen, no
-    shuffle).
+    """array<struct<band, sig>> of banded hyperplane signatures from
+    the one kernel (:func:`_signatures`): band b packs
+    ``rows_per_band`` sign bits over the :func:`_band_planes` plane
+    ids, so the batch prune, the streaming ingest gate and the SQL
+    oracles all band identically. NULL, NULL-element and wrong-length
+    vectors sign to 0 in every band; a NaN element raises.
 
     For ``rows_per_band > 8`` (the adaptive widths of
     :func:`adaptive_rows_per_band`) the first 8 bits keep the
@@ -726,32 +714,11 @@ def band_sig_structs(vec_col: str, dim: int, bands: int,
     so widening REFINES the historical buckets (every wide bucket is
     a subset of a base bucket) and the base-8 signatures never
     change."""
-    sig_structs = []
-    for b in range(bands):
-        bits = F.lit(0).cast("long")
-        for r in range(rows_per_band):
-            if rows_per_band <= _BASE_ROWS:
-                pl = b * rows_per_band + r
-            elif r < _BASE_ROWS:
-                pl = b * _BASE_ROWS + r
-            else:
-                pl = EXT_PLANE_OFFSET + b * _BASE_ROWS + (r - _BASE_ROWS)
-            arr = F.array(
-                *[F.lit(_plane_sign(pl, i)) for i in range(dim)]
-            )
-            dot = F.aggregate(
-                F.zip_with(F.col(vec_col), arr,
-                           lambda x, sgn: x.cast("double") * sgn),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits = (bits
-                    + F.when(dot > 0, F.lit(1 << r))
-                    .otherwise(F.lit(0)).cast("long"))
-        sig_structs.append(
-            F.struct(F.lit(b).alias("band"), bits.alias("sig"))
-        )
-    return F.array(*sig_structs)
+    sigs = _signatures(vec_col, dim, _band_planes(bands, rows_per_band),
+                       rows_per_band)
+    return F.transform(
+        sigs, lambda sig, b: F.struct(b.alias("band"), sig.alias("sig"))
+    )
 
 
 def build_semantic_lsh_index(static_df: DataFrame, id_col: str,
@@ -852,43 +819,33 @@ def banded_semantic_prune(df: DataFrame, id_col: str, vec_col: str,
     ``dominator`` = its smallest such neighbor).
 
     Scale shape vs the fixed-k audit: no iterative centroid fit (one
-    corpus scan emits all signatures), candidate generation is a
-    bucket join (never all-pairs), and buckets larger than
-    ``max_bucket`` are dropped ENTIRELY before pair expansion — the
-    boilerplate-noise guard, same discipline as dedup.py's LSH cap:
-    a degenerate embedding cluster would otherwise expand O(n²)
+    corpus scan signs every vector once, through one ``(band, sig)``
+    aggregation), candidates are the pairs inside a bucket (never
+    all-pairs), and buckets larger than ``max_bucket`` are dropped
+    ENTIRELY before pair expansion — the boilerplate-noise guard,
+    same discipline as dedup.py's LSH cap: a degenerate embedding
+    cluster costs one id list, where its pairs would expand O(n²)
     inside one task. ``rows_per_band`` is the scale lever (bucket
     population halves per bit; grow it with log(corpus) to hold
     bucket sizes flat), and the cap bounds the worst case whatever
     the parameters. Recall < 1 by construction — the price of
     linearity, measured by the exact twin on samples."""
-    sigs = (
-        df.select(F.col(id_col), F.col(vec_col),
+    # one aggregation over the signed rows: each bucket's sorted
+    # members, the cap, then every in-bucket pair id_a < id_b
+    buckets = (
+        df.select(F.col(id_col),
                   F.explode(band_sig_structs_np(
                       vec_col, dim, bands, rows_per_band
                   )).alias("_bs"))
-        .select(F.col(id_col), F.col(vec_col),
-                F.col("_bs.band").alias("band"),
-                F.col("_bs.sig").alias("sig"))
-    )
-    # bucket sizes: at most bands * 2^rows_per_band rows — broadcast
-    ok_buckets = (
-        sigs.groupBy("band", "sig")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= max_bucket)
-        .select("band", "sig")
-    )
-    eligible = sigs.join(F.broadcast(ok_buckets), ["band", "sig"])
-    a = eligible.select(
-        "band", "sig", F.col(id_col).alias("id_a")
-    )
-    bb = eligible.select(
-        "band", "sig", F.col(id_col).alias("id_b")
+        .groupBy("_bs.band", "_bs.sig")
+        .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
+        .filter(F.size("_ids") <= max_bucket)
     )
     cand = (
-        a.join(bb, ["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        buckets.select("_ids", F.posexplode("_ids").alias("_p", "id_a"))
+        .select("id_a", F.explode(F.slice(
+            "_ids", F.col("_p") + 2, F.size("_ids")
+        )).alias("id_b"))
         .distinct()
     )
     va = df.select(F.col(id_col).alias("id_a"),

@@ -258,6 +258,30 @@ def _rp_sql(d_in: int, d_out: int, seed: int) -> str:
         )
     return "\nUNION ALL\n".join(selects)
 
+def _sign_bits_sql(plane_ids, dim: int) -> str:
+    """DuckDB twin of the Spark signature kernel
+    (similarity._signatures): the sum of ``1 << r`` over the planes
+    ``plane_ids[r]`` with <embedding, plane> > 0. The ±1 plane
+    components are the driver-side constants of
+    similarity._plane_sign, inlined, and each dot is the left fold
+    from 0.0 the kernel reproduces, so every sign bit matches."""
+    from ..operators.similarity import _plane_sign
+
+    bits = []
+    for r, p in enumerate(plane_ids):
+        arr = "[" + ", ".join(
+            f"CAST('{_plane_sign(p, i)!r}' AS DOUBLE)" for i in range(dim)
+        ) + "]"
+        dot = (
+            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+            f"list_transform(generate_series(1, {dim}), "
+            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), "
+            "(x, y) -> x + y)"
+        )
+        bits.append(f"CASE WHEN {dot} > 0 THEN CAST({1 << r} AS BIGINT) "
+                    "ELSE CAST(0 AS BIGINT) END")
+    return " + ".join(bits)
+
 def _lsh_topk_sql(dim: int, planes: int, n_queries: int,
                   topk: int) -> str:
     """DuckDB twin of similarity.lsh_topk: the hyperplane components
@@ -265,24 +289,7 @@ def _lsh_topk_sql(dim: int, planes: int, n_queries: int,
     so the oracle inlines the SAME ±1 arrays and folds the same
     left-to-right dot — signatures, buckets, and the recall loss all
     match bit-for-bit."""
-    from ..operators.similarity import _plane_sign
-
-    def dot_p(p: int) -> str:
-        arr = "[" + ", ".join(
-            f"CAST('{_plane_sign(p, i)!r}' AS DOUBLE)" for i in range(dim)
-        ) + "]"
-        return (
-            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, {dim}), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), "
-            "(x, y) -> x + y)"
-        )
-
-    sig = " + ".join(
-        f"CASE WHEN {dot_p(p)} > 0 THEN CAST({1 << p} AS BIGINT) "
-        "ELSE CAST(0 AS BIGINT) END"
-        for p in range(planes)
-    )
+    sig = _sign_bits_sql(range(planes), dim)
     cos = _cos_sql("c.cv", "q.qv")
     return f"""WITH sigs AS MATERIALIZED (
          SELECT vec_id, embedding, {sig} AS sig FROM embeddings),
@@ -303,24 +310,7 @@ def _lsh_topk_sql(dim: int, planes: int, n_queries: int,
 def _knn_graph_ctes(dim: int, planes: int, topk: int) -> str:
     """sigs/knn CTE block — the DuckDB replay of similarity.knn_graph
     (same hyperplane constants, same within-bucket top-k)."""
-    from ..operators.similarity import _plane_sign
-
-    def dot_p(p: int) -> str:
-        arr = "[" + ", ".join(
-            f"CAST('{_plane_sign(p, i)!r}' AS DOUBLE)" for i in range(dim)
-        ) + "]"
-        return (
-            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, {dim}), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), "
-            "(x, y) -> x + y)"
-        )
-
-    sig = " + ".join(
-        f"CASE WHEN {dot_p(p)} > 0 THEN CAST({1 << p} AS BIGINT) "
-        "ELSE CAST(0 AS BIGINT) END"
-        for p in range(planes)
-    )
+    sig = _sign_bits_sql(range(planes), dim)
     cos = _cos_sql("a.embedding", "b.embedding")
     return f"""sigs AS MATERIALIZED (
          SELECT vec_id, embedding, {sig} AS sig FROM embeddings),
@@ -347,24 +337,7 @@ def _knn_graph_adaptive_ctes(dim: int, topk: int, lo: int = 4,
     At the verified gate scales (n ≤ 2048 with defaults) planes
     resolves to ``lo`` = the historical fixed parameterization, so
     hashes are unchanged there."""
-    from ..operators.similarity import _plane_sign
-
-    def dot_p(p: int) -> str:
-        arr = "[" + ", ".join(
-            f"CAST('{_plane_sign(p, i)!r}' AS DOUBLE)" for i in range(dim)
-        ) + "]"
-        return (
-            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, {dim}), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), "
-            "(x, y) -> x + y)"
-        )
-
-    sig = " + ".join(
-        f"CASE WHEN {dot_p(p)} > 0 THEN CAST({1 << p} AS BIGINT) "
-        "ELSE CAST(0 AS BIGINT) END"
-        for p in range(hi)
-    )
+    sig = _sign_bits_sql(range(hi), dim)
     cos = _cos_sql("a.embedding", "b.embedding")
     return f"""params AS (
          SELECT LEAST({hi}, GREATEST({lo},
@@ -389,7 +362,7 @@ def _knn_graph_adaptive_ctes(dim: int, topk: int, lo: int = 4,
 
 def _banded_sigs_adaptive_ctes(dim: int, bands: int, lo: int = 8,
                                hi: int = 16, target: int = 128) -> str:
-    """params/sigs CTE block replaying similarity.band_sig_structs at
+    """params/sigs CTE block replaying similarity.band_sig_structs_np at
     the adaptive width of similarity.adaptive_rows_per_band —
     rpb = LEAST(hi, GREATEST(lo, CEIL(LOG2(count(*) / target)))),
     the exact adaptive_planes formula the kNN CTE already replays.
@@ -398,35 +371,15 @@ def _banded_sigs_adaptive_ctes(dim: int, bands: int, lo: int = 8,
     are masked to ``rpb - 8`` bits, so at rpb = 8 (every corpus up to
     target·2^8) the signature is BIT-IDENTICAL to the fixed-width
     SQL this block replaced — recorded hashes cannot move."""
-    from ..operators.similarity import EXT_PLANE_OFFSET, _plane_sign
+    from ..operators.similarity import EXT_PLANE_OFFSET
 
     assert lo >= 8, "base-8 plane layout requires lo >= 8"
 
-    def dot_p(pl: int) -> str:
-        arr = "[" + ", ".join(
-            f"CAST('{_plane_sign(pl, i)!r}' AS DOUBLE)"
-            for i in range(dim)
-        ) + "]"
-        return (
-            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, {dim}), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), "
-            "(x, y) -> x + y)"
-        )
-
     band_rows = []
     for b in range(bands):
-        base = " + ".join(
-            f"CASE WHEN {dot_p(b * 8 + r)} > 0 "
-            f"THEN CAST({1 << r} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END"
-            for r in range(8)
-        )
-        ext = " + ".join(
-            f"CASE WHEN {dot_p(EXT_PLANE_OFFSET + b * 8 + r)} > 0 "
-            f"THEN CAST({1 << r} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END"
-            for r in range(hi - 8)
+        base = _sign_bits_sql([b * 8 + r for r in range(8)], dim)
+        ext = _sign_bits_sql(
+            [EXT_PLANE_OFFSET + b * 8 + r for r in range(hi - 8)], dim
         )
         band_rows.append(
             f"SELECT vec_id, CAST({b} AS BIGINT) AS band, "

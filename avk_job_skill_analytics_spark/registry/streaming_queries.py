@@ -2113,7 +2113,7 @@ def _stream_semantic_sql(dim: int = 64, bands: int = 4,
     """DuckDB twin of the streaming semantic ingest gate: the batch
     banding SQL at the ADAPTIVE width (shared
     _banded_sigs_adaptive_ctes — same deterministic hyperplane
-    constants as similarity.band_sig_structs, width resolves to the
+    constants as similarity.band_sig_structs_np, width resolves to the
     historical 8 at every verified gate scale) restricted to
     even-index vs odd-arrival candidate pairs, verified by the
     strict-left-fold cosine — the doubled delivery collapses in

@@ -9,10 +9,10 @@ incremental-index family (minhash_stream: text LSH; ssjoin_stream:
 exact sets; lexical_stream: BM25; ann_maintain: IVF-PQ):
 
 - arrivals band with the SAME deterministic hyperplanes as the batch
-  prune through ``similarity.band_sig_structs_np`` — a pandas UDF
-  that signs each Arrow batch with NumPy, bit-identical to the
-  ``band_sig_structs`` Column expressions the oracles replay, no
-  shuffle to sign;
+  prune through ``similarity.band_sig_structs_np`` — the one
+  hyperplane-signature kernel, a pandas UDF that signs each Arrow
+  batch with NumPy in the left-fold order the DuckDB oracles replay,
+  no shuffle to sign;
 - candidates come from the arrivals' band signatures joined against
   (a) the COMMITTED band postings (everything indexed so far) and
   (b) their own micro-batch's co-arrivals (batch self-join with

@@ -828,3 +828,98 @@ def test_every_growing_index_goes_through_the_one_sink():
         if n:
             touches[m] = n
     assert touches == {}, touches
+
+
+def test_every_hyperplane_signature_goes_through_the_one_kernel():
+    """similarity._signatures is the only Spark-side hyperplane
+    signature and scale_common._sign_bits_sql its only DuckDB twin:
+    ``_plane_sign`` is called in the kernel's plane-matrix build and
+    in that oracle helper, nowhere else in the package, tools/ or
+    bench.py."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, "bench.py")] + [
+        p for d in ("avk_job_skill_analytics_spark", "tools")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    ]
+    calls = []
+    for p in files:
+        with open(p, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        tops = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", getattr(node.func, "attr", ""))
+            if name == "_plane_sign":
+                owner = next((t.name for t in tops
+                              if t.lineno <= node.lineno <= t.end_lineno),
+                             None)
+                calls.append((os.path.relpath(p, root), owner))
+    pkg = "avk_job_skill_analytics_spark"
+    assert sorted(calls) == [
+        (os.path.join(pkg, "operators", "similarity.py"), "_signatures"),
+        (os.path.join(pkg, "registry", "scale_common.py"),
+         "_sign_bits_sql"),
+    ], calls
+
+
+def _python_eval_rows(spark, run) -> int:
+    """Output rows of the Python-eval nodes over the SQL executions
+    ``run`` starts, read from the status store (the UI stays off).
+    A persisted frame's plan is listed under every scan of it, so
+    each node's row counter is counted once."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last(k):  # ids of the newest k executions, oldest first
+        n = int(store.executionsCount())
+        lst = store.executionsList(max(0, n - k), k)
+        return [lst.apply(i).executionId() for i in range(lst.size())]
+
+    before = max(last(1), default=-1)
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    recent = last(64)
+    assert len(recent) < 64 or recent[0] <= before, "window too short"
+    rows = {}
+    for eid in (e for e in recent if e > before):
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not re.search(r"Python|Pandas|InArrow", node.name()):
+                continue
+            metrics = node.metrics()
+            for j in range(metrics.size()):
+                m = metrics.apply(j)
+                acc = m.accumulatorId()
+                if (m.name() == "number of output rows"
+                        and values.contains(acc)):
+                    text = values.apply(acc).split("\n")[-1]
+                    rows[acc] = int(text.split()[0].replace(",", ""))
+    return sum(rows.values())
+
+
+@pytest.mark.parametrize("name", [
+    "ann_knn_graph", "ann_lsh_topk", "dd_semantic_prune_lsh",
+])
+def test_signature_kernel_runs_once_per_vector(spark, queries, name):
+    """Each embedding of a query's input frames goes through the
+    signature kernel exactly once: the self-join of knn_graph, the
+    bucket count and pair join of the banded prune, and the
+    inferred ``IS NOT NULL`` filter on the signature join key would
+    each re-run it if the signed frame were not shared."""
+    n = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+    # ann_lsh_topk signs the corpus and its 10 queries
+    want = n + 10 if name == "ann_lsh_topk" else n
+    spark.catalog.clearCache()  # no signed frame left by earlier tests
+    got = _python_eval_rows(
+        spark,
+        lambda: queries[name](spark, SF_DIR)
+        .write.format("noop").mode("overwrite").save(),
+    )
+    assert got == want, f"{name}: {got} rows signed for {want} vectors"

@@ -2034,7 +2034,7 @@ def test_adaptive_band_width_refines_base_buckets(spark):
 
     from avk_job_skill_analytics_spark.operators.similarity import (
         adaptive_rows_per_band,
-        band_sig_structs,
+        band_sig_structs_np,
     )
 
     # (a) the formula at the ledger scales and beyond
@@ -2054,11 +2054,11 @@ def test_adaptive_band_width_refines_base_buckets(spark):
     )
     base = df.select(
         "vec_id",
-        band_sig_structs("embedding", 16, 4, 8).alias("s"),
+        band_sig_structs_np("embedding", 16, 4, 8).alias("s"),
     ).collect()
     wide = df.select(
         "vec_id",
-        band_sig_structs("embedding", 16, 4, 11).alias("s"),
+        band_sig_structs_np("embedding", 16, 4, 11).alias("s"),
     ).collect()
     base_sigs = {r["vec_id"]: [b["sig"] for b in r["s"]] for r in base}
     for r in wide:
@@ -2067,29 +2067,88 @@ def test_adaptive_band_width_refines_base_buckets(spark):
             assert 0 <= b["sig"] < (1 << 11)
 
 
-def test_band_sig_structs_np_matches_expression(spark):
-    """The vectorized (NumPy, cumsum-ordered) banding twin must agree
-    BIT-FOR-BIT with the expression fold on every band signature —
-    including the extended-plane scheme (rows_per_band > 8), NULL
-    vectors, and length-mismatched vectors (both sign to 0)."""
+def _left_fold_sigs(v, dim, plane_ids, width):
+    """Plain-Python reference signatures: one left-fold dot per plane
+    (``acc = acc + x * s`` from 0.0), sign bit r of each group of
+    ``width`` planes; NULL / NULL-element / wrong-length vectors sign
+    to 0."""
+    groups = len(plane_ids) // width
+    if v is None or len(v) != dim or any(x is None for x in v):
+        return [0] * groups
+    out = []
+    for g in range(groups):
+        sig = 0
+        for r, p in enumerate(plane_ids[g * width:(g + 1) * width]):
+            signs = [similarity._plane_sign(p, i) for i in range(dim)]
+            acc = 0.0
+            for x, s in zip(v, signs):
+                acc = acc + x * s
+            if acc > 0:
+                sig |= 1 << r
+        out.append(sig)
+    return out
+
+
+def test_signature_kernel_matches_left_fold_reference(spark):
+    """The one signature kernel, in its packed (lsh_topk / knn_graph)
+    and banded (band_sig_structs_np) forms, equals a plain-Python
+    left fold bit for bit — extended planes (rows_per_band 10 and
+    11), rounding-sensitive and zero vectors included; NULL vectors,
+    NULL elements and wrong-length vectors sign to 0."""
     rows = [
         (1, [float(i) * 0.31 - 9.5 for i in range(16)]),
         (2, [(-1.0) ** i * (i + 0.25) for i in range(16)]),
         (3, [1e-7] * 16),          # near-zero dots: rounding-sensitive
-        (4, [0.0] * 16),           # all-zero vector
-        (5, None),                 # NULL vector -> sig 0 per band
-        (6, [1.0] * 10),           # wrong length -> sig 0 per band
+        (4, [(-1.0) ** i * 10.0 ** (i % 5 * 4 - 8) for i in range(16)]),
+        (5, [1e16, 1.0, -1e16, 1.0] * 4),  # order-dependent sums
+        (6, [0.0] * 16),           # all-zero vector
+        (7, None),                 # NULL vector
+        (8, [1.0, None] + [0.5] * 14),  # NULL element
+        (9, [1.0] * 10),           # wrong length
     ]
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    for bands, rpb in [(4, 4), (2, 10)]:
-        a = df.select(
+    vecs = dict(rows)
+    for planes in (4, 8, 13):
+        got = df.select(
             "vec_id",
-            similarity.band_sig_structs("v", 16, bands, rpb).alias("s"),
+            F.element_at(similarity._signatures(
+                "v", 16, range(planes), planes), 1).alias("sig"),
         ).collect()
-        b = df.select(
+        assert {r.vec_id: r.sig for r in got} == {
+            i: _left_fold_sigs(v, 16, range(planes), planes)[0]
+            for i, v in vecs.items()
+        }, f"planes={planes}"
+    for bands, rpb in [(4, 4), (4, 8), (2, 10), (2, 11)]:
+        got = df.select(
             "vec_id",
             similarity.band_sig_structs_np("v", 16, bands, rpb).alias("s"),
         ).collect()
-        da = {r.vec_id: [(x.band, x.sig) for x in r.s] for r in a}
-        db = {r.vec_id: [(x.band, x.sig) for x in r.s] for r in b}
-        assert da == db, f"bands={bands} rpb={rpb}"
+        want = {
+            i: list(enumerate(_left_fold_sigs(
+                v, 16, similarity._band_planes(bands, rpb), rpb)))
+            for i, v in vecs.items()
+        }
+        assert {r.vec_id: [(x.band, x.sig) for x in r.s]
+                for r in got} == want, f"bands={bands} rpb={rpb}"
+
+
+def test_signature_kernel_memory_is_batch_by_planes():
+    """The kernel's NumPy body holds O(batch × planes) working memory:
+    a 10,000 × 64 batch against 64 planes stays far below the
+    (batch, planes, dim) product tensor (~330 MB per copy)."""
+    import tracemalloc
+
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    V = rng.standard_normal((10_000, 64))
+    S = np.asarray([[similarity._plane_sign(p, i) for i in range(64)]
+                    for p in range(64)])
+    tracemalloc.start()
+    try:
+        sigs = similarity._pack_signs(V, S, 8)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert sigs.shape == (10_000, 8)
+    assert peak < 32 * 2 ** 20, f"peak {peak / 2 ** 20:.1f} MiB"

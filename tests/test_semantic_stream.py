@@ -13,8 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.operators.similarity import (
-    band_sig_structs,
+    _signatures,
     band_sig_structs_np,
+    knn_graph,
 )
 from avk_job_skill_analytics_spark.streaming.batched_index import (
     committed_table_dirs,
@@ -185,7 +186,7 @@ def test_semantic_drain_equals_batch_banding(spark, tmp_path):
     df = _df(spark, rows)
     sigs = df.select(
         F.col("vec_id"),
-        F.explode(band_sig_structs("embedding", DIM, 2, 4)).alias("_bs"),
+        F.explode(band_sig_structs_np("embedding", DIM, 2, 4)).alias("_bs"),
     ).select("vec_id", "_bs.band", "_bs.sig")
     b2 = sigs.select(
         F.col("vec_id").alias("_v2"), "band", "sig"
@@ -222,9 +223,10 @@ def test_semantic_drain_equals_batch_banding(spark, tmp_path):
 
 
 def test_nan_embedding_fails_loudly(spark):
-    """The NumPy banding kernel raises on a NaN element instead of
-    signing the vector to 0 (the expression twin behind the oracles
-    would set bits for it); NULL vectors, NULL elements and
+    """The signature kernel raises on a NaN element instead of
+    signing the vector to 0 (the oracles' fold would set bits for
+    it), in its banded form and in its packed form behind
+    lsh_topk / knn_graph; NULL vectors, NULL elements and
     wrong-length vectors — NaN-bearing or not — still sign to 0."""
     nan = float("nan")
     ok = _df(spark, [
@@ -237,8 +239,17 @@ def test_nan_embedding_fails_loudly(spark):
         F.explode(band_sig_structs_np("embedding", DIM, 2, 4)).alias("s")
     ).select("s.sig").collect()
     assert len(sigs) == 8 and all(r.sig == 0 for r in sigs)
+    packed = ok.select(
+        F.element_at(_signatures("embedding", DIM, range(4), 4), 1)
+        .alias("sig")
+    ).collect()
+    assert len(packed) == 4 and all(r.sig == 0 for r in packed)
     bad = _df(spark, [(1, _vec(1.0)), (2, [nan] + _vec(2.0)[1:])])
-    with pytest.raises(Exception, match="ValueError: NaN element"):
-        bad.select(
+    for signed in (
+        lambda: bad.select(
             band_sig_structs_np("embedding", DIM, 2, 4).alias("s")
-        ).collect()
+        ),
+        lambda: knn_graph(bad, "vec_id", "embedding", DIM, k=1, planes=4),
+    ):
+        with pytest.raises(Exception, match="ValueError: NaN element"):
+            signed().collect()
