@@ -46,22 +46,27 @@ def clean_job_title(col: Column | str, title_case: bool = True,
 
     1. drop bracketed content ``(...)``, ``[...]``, ``{...}``
     2. split on ``- # | /`` and keep the head
-    3. drop roman numerals (``\\b[ivx]+\\b``, case-insensitive)
-    4. drop seniority/noise words (exactly src/transform.py:85-86;
+    3. strip non-alphabetic chars, so a digit or ``_`` glued to a word
+       cannot hide it from the word-boundary passes below (``0jr``)
+    4. drop roman numerals (``\\b[ivx]+\\b``, case-insensitive)
+    5. drop seniority/noise words (exactly src/transform.py:85-86;
        pass ``extra_noise_words=EXTRA_NOISE_WORDS`` to also strip
        non-reference extras like 'onsite'/'staff')
-    5. strip non-alphabetic chars, collapse whitespace
-    6. Title Case (``title_case=False`` keeps lowercase — used where a
+    6. collapse whitespace
+    7. Title Case (``title_case=False`` keeps lowercase — used where a
        downstream engine lacks initcap)
+
+    The reference strips the characters after the noise words, so
+    ``0jr`` there cleans to ``jr``; here it cleans to ``''``.
     """
     c = F.col(col) if isinstance(col, str) else col
     c = F.lower(c)
     c = F.regexp_replace(c, r"\(.*?\)|\[.*?\]|\{.*?\}", " ")
     c = F.split(c, r"[-#|/]").getItem(0)
+    c = F.regexp_replace(c, r"[^a-z ]", " ")
     c = F.regexp_replace(c, r"\b[ivx]+\b", " ")
     noise = "|".join(TITLE_NOISE_WORDS + tuple(extra_noise_words))
     c = F.regexp_replace(c, rf"\b({noise})\b", " ")
-    c = F.regexp_replace(c, r"[^a-z ]", " ")
     c = F.trim(F.regexp_replace(c, r"\s+", " "))
     return F.initcap(c) if title_case else c
 

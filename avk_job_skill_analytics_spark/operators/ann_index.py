@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import tiny_df
+
 
 def _delete_cells_batches(fs, bs: list[str]) -> None:
     """Layout callback for the shared commit protocol
@@ -143,27 +145,21 @@ def build_index(spark, corpus: DataFrame, id_col: str, vec_col: str,
     )
     cbs = similarity._ivfpq_seed_cbs(asg, m, sub_d, k_star, round_digits)
     codes = similarity.ivfpq_encode(asg, cbs, m, sub_d, round_digits)
-    # single-partition from birth: createDataFrame spreads these few
-    # rows over defaultParallelism partitions, and coalesce(1) would
-    # then evaluate all 32 python partitions SEQUENTIALLY in one task
-    # (~4s per tiny write — measured round 10); parallelize(_, 1)
-    # keeps the whole side table one cheap task. The three writes
-    # (cells inventory, coarse, pq) share no lineage with each other,
-    # so they overlap from a driver thread pool (guide §2.6) — the
-    # tiny side-table jobs back-fill cores while the cells write
-    # drains its tail; the commit markers below land after ALL three.
+    # The three writes (cells inventory, coarse, pq) share no lineage
+    # with each other, so they overlap from a driver thread pool (guide
+    # §2.6) — the tiny side-table jobs back-fill cores while the cells
+    # write drains its tail; the commit markers below land after ALL
+    # three.
     from ..streaming.batched_index import parallel_writes
 
-    sc = spark.sparkContext
     parallel_writes(
         lambda: write_cells(codes, f"{index_dir}/cells", -1),
-        lambda: spark.createDataFrame(
-            sc.parallelize(list(coarse), 1), "cell long, cv array<double>"
+        lambda: tiny_df(
+            spark, coarse, "cell long, cv array<double>"
         ).write.mode("overwrite").parquet(f"{index_dir}/coarse"),
-        lambda: spark.createDataFrame(
-            sc.parallelize(
-                [(s, cid, bv)
-                 for s, sub in enumerate(cbs) for cid, bv in sub], 1),
+        lambda: tiny_df(
+            spark,
+            [(s, cid, bv) for s, sub in enumerate(cbs) for cid, bv in sub],
             "s int, cid long, bv array<double>",
         ).write.mode("overwrite").parquet(f"{index_dir}/pq"),
     )
@@ -217,11 +213,9 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
     if not probed:
         # degenerate query frame (no rows -> no probes): a typed
         # empty result, not an empty-isin scan or a crash
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, adc_dist long, rk int"
+        return tiny_df(
+            spark, [], "query_id long, neighbor_id long, adc_dist long, rk int"
         )
-    from ..plans.session import tiny_df
-
     probes = tiny_df(
         spark,
         [(r["_qid"], r["_cell"], r["_tbls"]) for r in probe_rows],

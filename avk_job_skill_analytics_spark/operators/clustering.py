@@ -356,8 +356,8 @@ def kmeans_parallel_init(df: DataFrame, id_col: str, vec_col: str,
         .collect()
     )
     if not seed_rows:
-        return df.sparkSession.createDataFrame(
-            [], "cluster long, centroid array<double>"
+        return tiny_df(
+            df.sparkSession, [], "cluster long, centroid array<double>"
         )
     cands = [(int(r["_cid"]), list(r["_cv"])) for r in seed_rows]
     have = {cands[0][0]}

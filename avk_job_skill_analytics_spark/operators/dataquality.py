@@ -32,6 +32,7 @@ __all__ = [
     "freshness",
 ]
 
+from ..plans.session import tiny_df
 from .exactlog import as_dec
 
 _MIL = 1_000_000
@@ -266,10 +267,8 @@ def psi_from_counts(a: DataFrame, b: DataFrame,
             ))
         psi_fp = sum(r[3] for r in per_rows)
         spark = a.sparkSession
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [r + (psi_fp,) for r in per_rows], 1
-            ),
+        return tiny_df(
+            spark, [r + (psi_fp,) for r in per_rows],
             "bucket int, share_a_fp long, share_b_fp long, "
             "contrib_fp long, psi_fp long",
         )
@@ -462,10 +461,8 @@ def information_value(df: DataFrame, value_col: str, label_expr,
             ))
         iv_fp = sum(r[4] for r in per_rows)
         spark = df.sparkSession
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [r + (iv_fp,) for r in per_rows], 1
-            ),
+        return tiny_df(
+            spark, [r + (iv_fp,) for r in per_rows],
             "bucket int, n_pos long, n_neg long, woe_fp long, "
             "iv_contrib_fp long, iv_fp long",
         )

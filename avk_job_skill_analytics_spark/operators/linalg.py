@@ -238,7 +238,7 @@ def pca_power_component(df: DataFrame, vec_col: str, d: int,
     jstar = min(i for i in range(d) if abs(v[i]) == mxv)
     if v[jstar] < 0:
         v = [-x for x in v]
-    return df.sparkSession.createDataFrame(
-        [(i + 1, int(v[i])) for i in range(d)],
+    return tiny_df(
+        df.sparkSession, [(i + 1, int(v[i])) for i in range(d)],
         "dim int, loading_fp long",
     )

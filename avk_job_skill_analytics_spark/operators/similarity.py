@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.session import scratch_persist
+from ..plans.session import scratch_persist, tiny_df
 from .hashing import md5_long
 
 
@@ -279,8 +279,8 @@ def _empty_topk(corpus: DataFrame, score_col: str,
     frame — the empty-codebook result shape shared by every top-k
     variant (an empty inlined codebook cannot render a valid
     array_min expression)."""
-    return corpus.sparkSession.createDataFrame(
-        [],
+    return tiny_df(
+        corpus.sparkSession, [],
         f"query_id long, neighbor_id long, {score_col} {score_type}, "
         "rk long",
     )
@@ -1101,8 +1101,8 @@ def mmr_select(corpus: DataFrame, id_col: str, vec_col: str,
         .collect()
     )
     if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "sel_order int, vec_id long, score double"
+        return tiny_df(
+            corpus.sparkSession, [], "sel_order int, vec_id long, score double"
         )
     q_row = q_rows[0]
     qid, qv, qn = int(q_row["_qid"]), list(q_row["_qv"]), float(q_row["_qn"])
@@ -1129,8 +1129,8 @@ def mmr_select(corpus: DataFrame, id_col: str, vec_col: str,
         .collect()
     )
     if not first_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "sel_order int, vec_id long, score double"
+        return tiny_df(
+            corpus.sparkSession, [], "sel_order int, vec_id long, score double"
         )
     first = first_rows[0]
     selected = [(1, int(first["_id"]), float(first["_rel"]) + 0.0)]
@@ -1175,9 +1175,8 @@ def mmr_select(corpus: DataFrame, id_col: str, vec_col: str,
         )
         if step < k:  # no fold after the final selection
             cand = fold_newest(cand, top[0]).localCheckpoint()
-    return corpus.sparkSession.createDataFrame(
-        selected, "sel_order int, vec_id long, score double"
-    )
+    return tiny_df(corpus.sparkSession, selected,
+                   "sel_order int, vec_id long, score double")
 
 
 def pq_train_codebooks(corpus: DataFrame, id_col: str, vec_col: str,

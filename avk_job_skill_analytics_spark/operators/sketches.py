@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.session import tiny_df
 from .hashing import affine_hash, md5_long, minhash_coeffs
 
 HASH_SPACE = 1 << 60  # md5_long yields the top 60 bits of the digest
@@ -214,7 +215,7 @@ def histogram_quantiles(df: DataFrame, value_col: str, n_bins: int = 64,
         "cum_before", F.col("cum") - F.col("cnt")
     )
     spark = df.sparkSession
-    pf = spark.createDataFrame([(float(p),) for p in ps], "p double")
+    pf = tiny_df(spark, [(float(p),) for p in ps], "p double")
     cand = (
         cum.crossJoin(F.broadcast(pf))
         .crossJoin(F.broadcast(mm))
@@ -370,8 +371,7 @@ def cms_estimate(items: DataFrame, item_col: str, probes,
     cs = minhash_coeffs(d, seed=seed)
     sk = cms_counts(items, item_col, d, w, seed)
     spark = items.sparkSession
-    probe_df = spark.createDataFrame(
-        [(p,) for p in probes], f"{item_col} string")
+    probe_df = tiny_df(spark, [(p,) for p in probes], f"{item_col} string")
     h = md5_long(F.col(item_col).cast("string"))
     probe_cells = probe_df.select(
         item_col,

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..plans.session import tiny_df
 from .exactlog import as_dec, log_frac
 from .hashing import MERSENNE_P, md5_long
 
@@ -797,8 +798,9 @@ def bpe_merges(df, text_col: str, n_merges: int = 6):
             ).alias("sym"),
             "freq",
         ).localCheckpoint()
-    return spark.createDataFrame(
-        merges, "step int, left_sym string, right_sym string, pair_count long"
+    return tiny_df(
+        spark, merges,
+        "step int, left_sym string, right_sym string, pair_count long",
     )
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dataquality as DQ
 from ..plans.schemas import load
+from ..plans.session import tiny_df
 
 QUERIES = {}
 ORACLES = {}
@@ -422,10 +423,7 @@ def dq_intlog_probe(spark, sf_dir):
     )
 
     rows = [(n, str(a), str(b)) for n, a, b in _LN_PROBE]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "probe string, num_s string, den_s string",
-    )
+    df = tiny_df(spark, rows, "probe string, num_s string, den_s string")
     base = df.select(
         "probe",
         F.col("num_s").cast("decimal(38,0)").alias("_num"),
@@ -476,8 +474,8 @@ def dq_fp6_probe(spark, sf_dir):
         (n, str(dn), str(dd), str(l), str(pn), str(pd))
         for n, dn, dd, l, pn, pd in _FP6_PROBE
     ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
+    df = tiny_df(
+        spark, rows,
         "probe string, dnum_s string, dden_s string, ln14_s string,"
         " pnum_s string, pden_s string",
     )

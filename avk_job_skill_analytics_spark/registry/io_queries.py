@@ -33,6 +33,7 @@ from ..operators.skills import (
 )
 from ..plans.bucketing import time_clustered
 from ..plans.schemas import load
+from ..plans.session import tiny_df
 from ._fixtures import FixtureMemo
 from ..sources import readers, sinks
 from ..sources.manifest import Manifest
@@ -1143,7 +1144,7 @@ def s6_jdbc_stream_upsert(spark, sf_dir):
     )
     # create the empty target up front (the merge needs it to exist)
     sinks.jdbc_sink(
-        stream.sparkSession.createDataFrame([], stream.schema),
+        tiny_df(spark, [], stream.schema),
         url, "events_state", properties=_DERBY_PROPS, mode="overwrite",
     )
     drain_available_now(

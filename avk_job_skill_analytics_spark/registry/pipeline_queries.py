@@ -32,10 +32,10 @@ _TITLE_CLEAN_SQL = f"""trim(regexp_replace(
            regexp_replace(lower(job_title),
              '\\(.*?\\)|\\[.*?\\]|\\{{.*?\\}}', ' ', 'g'),
            '[-#|/]'))[1],
-        '\\b[ivx]+\\b', ' ', 'g'),
-      '\\b({_NOISE_RE})\\b',
-      ' ', 'g'),
-    '[^a-z ]', ' ', 'g'),
+        '[^a-z ]', ' ', 'g'),
+      '\\b[ivx]+\\b', ' ', 'g'),
+    '\\b({_NOISE_RE})\\b',
+    ' ', 'g'),
   '\\s+', ' ', 'g'))"""
 
 _TYPE_INFER_SQL = """coalesce(nullif(concat_ws(', ',

@@ -72,10 +72,10 @@ TITLE_NOISE_RE = "|".join(text.TITLE_NOISE_WORDS)
                            lower(concat(p_name, ' (Remote) - ', p_brand)),
                            '\\(.*?\\)|\\[.*?\\]|\\{{.*?\\}}', ' ', 'g'),
                          '[-#|/]'))[1],
-                      '\\b[ivx]+\\b', ' ', 'g'),
-                    '\\b({TITLE_NOISE_RE})\\b',
-                    ' ', 'g'),
-                  '[^a-z ]', ' ', 'g'),
+                      '[^a-z ]', ' ', 'g'),
+                    '\\b[ivx]+\\b', ' ', 'g'),
+                  '\\b({TITLE_NOISE_RE})\\b',
+                  ' ', 'g'),
                 '\\s+', ' ', 'g')) AS cleaned
        FROM part""",
 )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.schemas import MANIFEST
+from ..plans.session import tiny_df
 
 
 class Manifest:
@@ -49,7 +50,7 @@ class Manifest:
                 )
             except Exception:
                 pass
-        return self.spark.createDataFrame([], MANIFEST)
+        return tiny_df(self.spark, [], MANIFEST)
 
     def is_loaded(self, file_name: str) -> bool:
         """S7 point lookup (`SELECT 1 FROM tracker WHERE file_name=?`,
@@ -93,7 +94,7 @@ class Manifest:
         that :meth:`loaded` de-duplicates reads defensively either
         way, so downstream idempotency holds even if a double-append
         slips in."""
-        new = self.spark.createDataFrame(
-            [(f,) for f in file_names], MANIFEST
+        new = tiny_df(
+            self.spark, [(f,) for f in file_names], MANIFEST
         ).join(F.broadcast(self.loaded()), "file_name", "left_anti")
         new.write.mode("append").parquet(self.path)

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..plans.session import tiny_df
+
 
 def csv_source(spark: SparkSession, path: str, schema: StructType | None = None,
                with_provenance: bool = False, **options) -> DataFrame:
@@ -204,7 +206,7 @@ def hf_snapshot_source(spark: SparkSession, snapshot_path: str,
         except Exception:
             continue  # fallback-to-empty: try the next format
     if df is None:
-        empty = spark.createDataFrame([], StructType([]))
+        empty = tiny_df(spark, [], StructType([]))
         if column_map:
             # project the empty frame to the mapped schema so callers
             # can union it with the other sources without branching

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.classify import _llr_fp
 from ..operators.textstats import tokens
+from ..plans.session import tiny_df
 from .batched_index import (
     committed_table_dirs,
     compact_batched_index,
@@ -115,7 +116,7 @@ def serve_nb_weights(spark, index_dir: str) -> DataFrame:
         fs, "counts", serving_batch_ids(fs, "counts")
     )
     if not dirs:
-        return spark.createDataFrame([], "term string, w_fp long")
+        return tiny_df(spark, [], "term string, w_fp long")
     cnt = (
         spark.read.parquet(*dirs)
         .groupBy("term")

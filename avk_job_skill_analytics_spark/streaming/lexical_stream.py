@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.retrieval import bm25_rank
 from ..operators.textstats import tokens
+from ..plans.session import tiny_df
 from .batched_index import (
     committed_table_dirs,
     compact_batched_index,
@@ -118,8 +119,8 @@ def serve_bm25(spark, index_dir: str, terms: list[str], id_col: str,
     p_dirs = committed_table_dirs(fs, "postings", committed)
     d_dirs = committed_table_dirs(fs, "doclen", committed)
     if not p_dirs:
-        return spark.createDataFrame(
-            [], f"{id_col} long, n_terms long, bm25_fp long, rk long"
+        return tiny_df(
+            spark, [], f"{id_col} long, n_terms long, bm25_fp long, rk long"
         )
     tf = (
         spark.read.parquet(*p_dirs)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import linearmodel as lm
+from ..plans.session import tiny_df
 from .batched_index import (
     committed_table_dirs,
     compact_batched_index,
@@ -110,15 +111,7 @@ def _logreg_train_batch_fn(index_dir: str, feature_cols: list[str],
             grads = [int(row[f"g{j}"]) for j in range(d)]
             w = lm.update_weights(w, grads, n, lr_num, lr_den)
             rows = [(j, w[j], cum_n + n, seq + 1) for j in range(d)]
-            # single-partition from birth: createDataFrame spreads d
-            # python rows over defaultParallelism partitions, and
-            # coalesce(1) then evaluates ALL parent python partitions
-            # sequentially inside the one write task (~4 s per tiny
-            # state write — same pathology as ann_index round 10);
-            # parallelize(_, 1) keeps the write one cheap task
-            spark.createDataFrame(
-                spark.sparkContext.parallelize(rows, 1), _SCHEMA
-            ).write.mode("overwrite").parquet(
+            tiny_df(spark, rows, _SCHEMA).write.mode("overwrite").parquet(
                 fs.uri(f"weights/batch={batch_id}")
             )
 
@@ -154,10 +147,7 @@ def serve_logreg_weights(spark, index_dir: str,
     )
     rows = [(s, w[j]) for j, s in enumerate(stat_names)]
     rows += [("n_batches", seq), ("n_seen", cum_n)]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "stat string, value long",
-    )
+    return tiny_df(spark, rows, "stat string, value long")
 
 
 def compact_logreg_weights(spark, index_dir: str,

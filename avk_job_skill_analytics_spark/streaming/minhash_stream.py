@@ -60,6 +60,7 @@ from ..operators.hashing import (
     md5_long,
     minhash_coeffs,
 )
+from ..plans.session import tiny_df
 
 
 def shingle_hash_array(text_col: Column, k: int = 3) -> Column:
@@ -300,8 +301,8 @@ def _lsh_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
                 idx_b, idx_s, id_col, threshold,
             )
         else:
-            pairs = spark.createDataFrame(
-                [], "doc_a long, doc_b long, jaccard double"
+            pairs = tiny_df(
+                spark, [], "doc_a long, doc_b long, jaccard double"
             )
         pairs.write.mode("overwrite").parquet(
             fs.uri(f"pairs/batch={batch_id}")

@@ -868,25 +868,32 @@ def test_every_hyperplane_signature_goes_through_the_one_kernel():
     ], calls
 
 
-def _python_eval_rows(spark, run) -> int:
-    """Output rows of the Python-eval nodes over the SQL executions
-    ``run`` starts, read from the status store (the UI stays off).
-    A persisted frame's plan is listed under every scan of it, so
-    each node's row counter is counted once."""
+def _new_executions(spark, run) -> list:
+    """Status-store records (the UI stays off) of the SQL executions
+    ``run`` starts, oldest first."""
     store = spark._jsparkSession.sharedState().statusStore()
 
-    def last(k):  # ids of the newest k executions, oldest first
+    def last(k):  # the newest k executions, oldest first
         n = int(store.executionsCount())
         lst = store.executionsList(max(0, n - k), k)
-        return [lst.apply(i).executionId() for i in range(lst.size())]
+        return [lst.apply(i) for i in range(lst.size())]
 
-    before = max(last(1), default=-1)
+    before = max((e.executionId() for e in last(1)), default=-1)
     run()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     recent = last(64)
-    assert len(recent) < 64 or recent[0] <= before, "window too short"
+    assert len(recent) < 64 or recent[0].executionId() <= before, \
+        "window too short"
+    return [e for e in recent if e.executionId() > before]
+
+
+def _python_eval_rows(spark, run) -> int:
+    """Output rows of the Python-eval nodes over the SQL executions
+    ``run`` starts. A persisted frame's plan is listed under every
+    scan of it, so each node's row counter is counted once."""
+    store = spark._jsparkSession.sharedState().statusStore()
     rows = {}
-    for eid in (e for e in recent if e > before):
+    for eid in (e.executionId() for e in _new_executions(spark, run)):
         values = store.executionMetrics(eid)
         nodes = store.planGraph(eid).allNodes()
         for k in range(nodes.size()):
@@ -923,3 +930,57 @@ def test_signature_kernel_runs_once_per_vector(spark, queries, name):
         .write.format("noop").mode("overwrite").save(),
     )
     assert got == want, f"{name}: {got} rows signed for {want} vectors"
+
+
+def test_every_driver_frame_goes_through_tiny_df():
+    """plans.session.tiny_df is the one constructor for driver-built
+    frames: ``createDataFrame(`` and ``.parallelize(`` are called in
+    the package only inside it. The one exemption is
+    ``readers.hf_dataset_source``, whose input is a pandas frame and
+    so already takes Spark's Arrow path."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "avk_job_skill_analytics_spark")
+    calls = []
+    for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(p, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        defs = [n for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None)
+                    in ("createDataFrame", "parallelize")):
+                continue
+            owner = min(
+                (d for d in defs
+                 if d.lineno <= node.lineno <= d.end_lineno),
+                key=lambda d: d.end_lineno - d.lineno, default=None,
+            )
+            calls.append((os.path.relpath(p, pkg), node.func.attr,
+                          owner.name if owner else None))
+    assert sorted(calls) == [
+        (os.path.join("plans", "session.py"), "createDataFrame",
+         "tiny_df"),
+        (os.path.join("sources", "readers.py"), "createDataFrame",
+         "hf_dataset_source"),
+    ], calls
+
+
+def test_manifest_frames_start_no_python_worker(spark, tmp_path):
+    """The S7 manifest builds its driver-side frames as Arrow local
+    relations: marking files loaded and reading a manifest that does
+    not exist yet plan no pickled Python RDD (``ExistingRDD``)."""
+    from avk_job_skill_analytics_spark.sources.manifest import Manifest
+
+    m = Manifest(spark, str(tmp_path / "manifest"))
+    assert "ExistingRDD" not in I.plan_string(m.loaded())
+    plans = [e.physicalPlanDescription() for e in _new_executions(
+        spark, lambda: m.mark_loaded([f"f{i}.csv" for i in range(10)])
+    )]
+    assert any("LocalTableScan" in p for p in plans), plans
+    assert not any("ExistingRDD" in p for p in plans), plans
+    assert m.loaded().count() == 10

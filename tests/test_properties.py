@@ -6,7 +6,7 @@ wall-clock sane."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -43,12 +43,14 @@ def _col_results(spark, values, expr_builder):
 
 @settings(**_SETTINGS)
 @given(_texts)
+@example(["0jR"])  # a digit glued to a noise word
+@example(["senior2 dev"])
 def test_clean_title_invariants(spark, titles):
     # NOTE: F2 is deliberately NOT idempotent in the general case —
-    # stripping digits can expose a roman-numeral token that only the
-    # next pass would drop ('0v' -> 'V' -> ''); the reference's pandas
-    # regex chain (src/transform.py:67-96) behaves identically. The
-    # contract is the OUTPUT shape:
+    # collapsing whitespace can expose a two-word noise phrase that
+    # only the next pass would drop ('immediate i joiner' ->
+    # 'Immediate Joiner' -> ''), as in the reference's pandas regex
+    # chain (src/transform.py:67-96). The contract is the OUTPUT shape:
     out = _col_results(spark, titles, clean_job_title)
     for s in out:
         assert s is not None

@@ -1,14 +1,100 @@
-"""plans.session.tiny_df — the single-partition tiny-frame builder.
+"""plans.session.tiny_df — the one constructor for driver-built frames.
 
-The optimization contract: same rows and dtypes as
+The contract: the same schema and rows as
 ``spark.createDataFrame(rows, schema)`` (results must never change),
-but exactly ONE partition from birth (the round-10/round-14 tiny-frame
-discipline: no 32-way pickled spread, no sequential coalesce(1)).
+built as one Arrow table on the driver and planned as a
+``LocalTableScan`` (no pickled Python RDD, no Python worker on the
+first action), coalesced to exactly ONE partition so a write of it
+is one file.
 """
 
 from __future__ import annotations
 
+import datetime
+import decimal
+
+import pytest
+from pyspark.sql import types as T
+
+from avk_job_skill_analytics_spark.plans import inspect as I
+from avk_job_skill_analytics_spark.plans.schemas import MANIFEST
 from avk_job_skill_analytics_spark.plans.session import tiny_df
+
+_TS = datetime.datetime(2025, 10, 1, 9, 15, 30, 123456)
+
+# one case per schema shape a call site passes, plus the column types
+# the converter treats specially (decimal, boolean, date, timestamp)
+_CASES = {
+    "manifest": ([("a.csv",), (None,)], MANIFEST),
+    "empty_manifest": ([], MANIFEST),
+    "empty_struct": ([], T.StructType([])),
+    "empty_ddl": ([], "doc_a long, doc_b long, jaccard double"),
+    "s6_events_target": (
+        [(1, _TS, 7, "click", 2.5, None)],
+        T.StructType([
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+            T.StructField("props", T.StringType()),
+        ]),
+    ),
+    "linear_state": ([(0, -12, 40, 3), (1, 7, 40, 3)],
+                     "j int, w_micro long, cum_n long, seq long"),
+    "zone_verts": (
+        [("z", [(1, 2), (3, 4)]), ("empty", []), ("null", None)],
+        "zone string, verts array<struct<lat: long, lon: long>>",
+    ),
+    "ivfpq_probes": (
+        [(1, 3, [{0: 5, 1: 9}, {}]), (2, 4, [None, {2: None}])],
+        "_qid long, _cell long, _tbls array<map<long,long>>",
+    ),
+    "coarse_cells": (
+        [(0, [0.5, -1.25, 1e300]), (1, [])],
+        "cell long, cv array<double>",
+    ),
+    "dq_constraints": (
+        [("completeness", 999000, True), ("uniqueness", None, False),
+         ("range", 0, None)],
+        "constraint string, metric_fp long, passed boolean",
+    ),
+    "int_and_decimal": (
+        [(1, decimal.Decimal("3.14159"), 2**40),
+         (-2147483648, decimal.Decimal("-0.5"), None),
+         (None, None, -1)],
+        "k int, d decimal(10,4), n long",
+    ),
+    "bpe_merges": ([(1, "t", "h", 12), (2, "th", "e", 9)],
+                   "step int, left_sym string, right_sym string, "
+                   "pair_count long"),
+    "dates_and_timestamps": (
+        [(datetime.date(2024, 2, 29), _TS),
+         (datetime.date(1970, 1, 1), datetime.datetime(1970, 1, 1)),
+         (None, None)],
+        "d date, ts timestamp",
+    ),
+    "all_null_row": ([(None, None, None)],
+                     "sel_order int, vec_id long, score double"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_tiny_df_equals_createdataframe(spark, case):
+    """Same schema and rows as the pickled-RDD spelling it replaced,
+    under the session's pinned UTC timezone."""
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    rows, schema = _CASES[case]
+    a = tiny_df(spark, rows, schema)
+    b = spark.createDataFrame(rows, schema)
+    assert a.schema == b.schema
+    assert a.collect() == b.collect()
+
+
+def test_tiny_df_plans_a_local_table_scan(spark):
+    df = tiny_df(spark, [(1, "a"), (2, "b")], "k long, v string")
+    assert I.has_node(df, "LocalTableScan")
+    assert "ExistingRDD" not in I.plan_string(df)
 
 
 def test_tiny_df_single_partition(spark):

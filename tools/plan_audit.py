@@ -9,7 +9,8 @@ sf0.01 correctness is green:
   broadcast;
 - ``BatchEvalPython`` / ``ArrowEvalPython`` — row/batch Python eval in
   a batch path (only ``MapInPandas``/``FlatMapGroupsInPandas`` nodes
-  are sanctioned, and only where the operator is genuinely external);
+  are sanctioned, and only where the operator is genuinely external,
+  plus the one hyperplane-signature kernel, allowlisted per query);
 - a ``Window`` with an empty partition spec (all rows to one task) —
   except over already-aggregated tiny frames, which the allowlist
   records with a justification;
@@ -32,6 +33,11 @@ import sys
 ROOT = "/root/repo"
 sys.path.insert(0, ROOT)
 
+_SIGNATURE_KERNEL = (
+    "python-eval",
+    "operators/similarity._signatures, the one sanctioned signature kernel",
+)
+
 # name -> (pattern, why it's acceptable THERE)
 ALLOW: dict[str, list[tuple[str, str]]] = {
     "a1_total_count": [("global-window-or-single", "1-row global aggregate")],
@@ -46,6 +52,9 @@ ALLOW: dict[str, list[tuple[str, str]]] = {
     "tpch_q17_small_quantity": [
         ("CartesianProduct|BroadcastNestedLoopJoin", "1-row threshold")
     ],
+    "ann_knn_graph": [_SIGNATURE_KERNEL],
+    "ann_lsh_topk": [_SIGNATURE_KERNEL],
+    "dd_semantic_prune_lsh": [_SIGNATURE_KERNEL],
     "a11_pct_of_total": [
         ("empty-partition-window", "window over the aggregated per-dim frame"),
     ],
