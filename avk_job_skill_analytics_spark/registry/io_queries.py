@@ -64,6 +64,7 @@ def s2_s5_csv_roundtrip(spark, sf_dir):
     against the parquet original proves the CSV edge round-trips
     longs/doubles/strings exactly."""
     tmp = tempfile.mkdtemp(prefix="csv_roundtrip_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
@@ -96,6 +97,7 @@ def s7_manifest_new_files(spark, sf_dir):
     the query returns the still-unloaded set via the broadcast
     anti-join (S8/J1 — src/transform.py:186-196 done Spark-native)."""
     tmp = tempfile.mkdtemp(prefix="manifest_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     m = Manifest(spark, f"{tmp}/manifest")
     m.mark_loaded([f"file_{k}" for k in range(0, 20, 2)])
     cand = (

@@ -82,3 +82,16 @@ def test_drain_keeps_caller_owned_checkpoint(spark, drain_env, tmp_path):
     assert sum(rows) == 10
     assert list(tmp.iterdir()) == []
     assert spark.conf.get(SHUFFLE) == "5"
+
+
+def test_drain_defaults_to_one_wave_of_task_slots(spark, drain_env, monkeypatch):
+    stream, _tmp = drain_env
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE")
+    seen = []
+
+    def batch(bdf, _epoch):
+        seen.append(bdf.sparkSession.conf.get(SHUFFLE))
+
+    drain_available_now(spark, stream.writeStream.foreachBatch(batch))
+    assert seen == [str(min(8, spark.sparkContext.defaultParallelism))]
+    assert spark.conf.get(SHUFFLE) == "5"

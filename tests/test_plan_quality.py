@@ -868,6 +868,44 @@ def test_every_hyperplane_signature_goes_through_the_one_kernel():
     ], calls
 
 
+def test_worker_bootstrap_lives_in_one_place():
+    """Only the daemon module (``_pydaemon``) touches ``zipimport``,
+    and only ``plans.session.get_spark`` sets
+    ``spark.python.daemon.module``: an import-system patch anywhere
+    else would run in the driver, and a second setter could point the
+    workers at a daemon that fails to import."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, f)
+             for f in ("bench.py", "__spark_entry__.py")] + [
+        p for d in ("avk_job_skill_analytics_spark", "tools")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    ]
+    zip_users, setters = [], []
+    for p in files:
+        rel = os.path.relpath(p, root)
+        if "zipimport" in _code_tokens(p):
+            zip_users.append(rel)
+        with open(p, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        tops = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Constant)
+                    and node.value == "spark.python.daemon.module"):
+                owner = next((t.name for t in tops
+                              if t.lineno <= node.lineno <= t.end_lineno),
+                             None)
+                setters.append((rel, owner))
+    pkg = "avk_job_skill_analytics_spark"
+    assert zip_users == [os.path.join(pkg, "_pydaemon.py")], zip_users
+    assert setters == [(os.path.join(pkg, "plans", "session.py"),
+                        "get_spark")], setters
+
+
 def _new_executions(spark, run) -> list:
     """Status-store records (the UI stays off) of the SQL executions
     ``run`` starts, oldest first."""
