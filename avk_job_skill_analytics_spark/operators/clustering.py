@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.session import tiny_df
+from ..plans.session import run_rounds, tiny_df
 
 
 def _sqdist(a: Column, b: Column) -> Column:
@@ -214,23 +214,17 @@ def kmeans_fit(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
             .localCheckpoint()
         )
     # size the loop's shuffles to the exploded (row × dim) volume the
-    # centroid update actually moves — same discipline as the CC /
-    # pagerank loops. sized_partitions caps at the session default,
-    # which remains the cluster-scale ceiling at 100 TB; the count is
-    # one column-pruned scan against per-iteration full scans.
-    from ..plans.session import scoped_shuffle, sized_partitions
-
-    spark = df.sparkSession
+    # centroid update actually moves; the count is one column-pruned
+    # scan against per-iteration full scans.
     first = df.select(F.size(F.col(vec_col)).alias("d")).first()
     dim = max(int(first["d"]) if first and first["d"] is not None else 1, 1)
-    n_parts = sized_partitions(spark, df.count() * dim)
-    with scoped_shuffle(spark, n_parts):
-        for _ in range(iters):
-            assigned = assign_clusters(df, centroids, id_col, vec_col,
-                                       round_digits)
-            centroids = update_centroids(assigned, vec_col,
-                                         round_digits).localCheckpoint()
-    return centroids
+    return run_rounds(
+        lambda c: update_centroids(
+            assign_clusters(df, c, id_col, vec_col, round_digits),
+            vec_col, round_digits,
+        ),
+        centroids, df.count() * dim, iters,
+    )
 
 
 def inertia(df: DataFrame, centroids: DataFrame, id_col: str,

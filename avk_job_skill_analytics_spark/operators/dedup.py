@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.session import scratch_persist
+from .graph import connected_components_twostar
 from .hashing import MERSENNE_P, affine_hash, md5_long, minhash_coeffs
 
 # ------------------------------------------------------------- exact dedup
@@ -494,85 +495,6 @@ def decontaminate(df: DataFrame, benchmark: DataFrame, id_col: str,
     )
 
 
-# -------------------------------------------------- duplicate clustering
-
-def duplicate_clusters(pairs: DataFrame, a_col: str = "doc_a",
-                       b_col: str = "doc_b",
-                       max_iter: int = 20) -> DataFrame:
-    """Connected components over near-duplicate pairs: every document
-    in a pair gets a ``cluster_id`` = the minimum doc id reachable
-    through the pair graph. This is the step that turns pairwise
-    near-dup evidence into dedup decisions (keep cluster_id, drop the
-    rest).
-
-    Algorithm: iterative min-label propagation — each round every
-    vertex takes the min of its own label and its neighbors' labels;
-    converges in O(graph diameter) rounds, and near-dup clusters are
-    dense (diameter 2-4 in practice). Each round is one self-contained
-    join + aggregate; the loop stops at fixpoint (checked with a
-    count, capped at ``max_iter``). For adversarial long-chain graphs
-    at 100 TB, swap in the large-star/small-star alternation (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
-    same join primitives, O(log n) rounds."""
-    # materialize the (possibly expensive) upstream pair computation
-    # once — edges AND vertices both derive from it
-    fwd = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).localCheckpoint()
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    verts = fwd.select(F.col("src").alias("v")).unionByName(
-        fwd.select(F.col("dst").alias("v"))
-    ).distinct()
-    # self-loops close each neighborhood, so one join+aggregate per
-    # round computes min over N(v) ∪ {v}. localCheckpoint (not
-    # persist): iterative lineage otherwise grows a plan per round and
-    # re-optimization dominates wall clock. On a cluster with
-    # failure-recovery requirements use checkpoint() instead.
-    edges = (
-        fwd.unionByName(rev)
-        .unionByName(verts.select(F.col("v").alias("src"),
-                                  F.col("v").alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = verts.withColumn("label", F.col("v")).localCheckpoint()
-    # size the loop's shuffles to the edge count: each round is a tiny
-    # join+agg whose per-partition fixed cost dominates under the
-    # session default when the graph is far smaller than the cluster
-    # ceiling (plans.session.scoped_shuffle rationale)
-    from ..plans.session import scoped_shuffle, sized_partitions
-
-    spark = pairs.sparkSession
-    n_parts = sized_partitions(spark, edges.count())
-    # labels only ever decrease, so the (exact, decimal) label sum is
-    # strictly monotone until the fixpoint — a 1-row convergence probe
-    # instead of a change-count join
-    prev_sum = None
-    with scoped_shuffle(spark, n_parts):
-        for _ in range(max_iter):
-            labels = (
-                edges.join(
-                    labels.select(
-                        F.col("v").alias("dst"), F.col("label").alias("_nl")
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.min("_nl").alias("label"))
-                .select(F.col("src").alias("v"), "label")
-                .localCheckpoint()
-            )
-            cur_sum = labels.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-    return labels.select(
-        F.col("v").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 # ----------------------------------------------------------------- SimHash
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str,
@@ -746,10 +668,11 @@ def duplicate_weights(docs: DataFrame, id_col: str,
     Returns one row per document: (id, cluster_id, cluster_size,
     weight_fp) with weight = floor(1e6 / cluster_size); documents in
     no pair are their own singleton (weight exactly 1e6). Cost on
-    top of the pair evidence: the cluster map (bounded-round CC over
-    PAIRS, never the corpus), one broadcast-or-shuffle left join to
-    stamp it, one cluster-size aggregate."""
-    clusters = duplicate_clusters(pairs)
+    top of the pair evidence: the cluster map (the two-star CC of
+    ``graph.connected_components_twostar`` over PAIRS, never the
+    corpus), one broadcast-or-shuffle left join to stamp it, one
+    cluster-size aggregate."""
+    clusters = connected_components_twostar(pairs)
     stamped = docs.select(F.col(id_col)).join(
         clusters.withColumnRenamed("doc_id", id_col), id_col, "left"
     ).select(

@@ -1,13 +1,13 @@
 """Graph connectivity at scale — the two-star alternation.
 
-``dedup.duplicate_clusters`` (min-label propagation) converges in
-O(diameter) rounds, which is right for dense near-dup clusters
-(diameter 2-4) but degenerates on adversarial long-chain graphs: a
+Connected components by min-label propagation converge in O(diameter)
+rounds, which degenerates on adversarial long-chain graphs: a
 10⁶-node path needs 10⁶ rounds. The large-star/small-star alternation
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14) restructures the edge set itself each round and converges in
 O(log n) rounds regardless of diameter — the CC you'd actually run on
-a 100 TB pair graph whose shape you don't control.
+a 100 TB pair graph whose shape you don't control, and the package's
+only CC (``dedup`` routes its duplicate clusters through it).
 
 Each operation is one groupBy shuffle over the current edge frame:
 
@@ -18,15 +18,18 @@ Each operation is one groupBy shuffle over the current edge frame:
 
 Both preserve connectivity and strictly shrink a potential function,
 so alternation reaches a fixpoint where every component is a star
-centered on its minimum id. Per-round frames are localCheckpoint-ed —
-iterative lineage otherwise grows a plan per round (same discipline
-as duplicate_clusters / kmeans).
+centered on its minimum id. Every round loop here (CC, k-core,
+PageRank, BFS) goes through ``plans.session.run_rounds``, which
+sizes the loop's shuffles, checkpoints each round and detects the
+fixpoint.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.session import counted_checkpoint, run_rounds
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -92,13 +95,14 @@ def connected_components_twostar(pairs: DataFrame, a_col: str = "doc_a",
     """Connected components via large-star/small-star alternation.
 
     Returns (doc_id, cluster_id) with cluster_id = the component's
-    minimum id — the same contract as ``dedup.duplicate_clusters``,
-    in O(log n) rounds instead of O(diameter).
+    minimum id, in O(log n) rounds instead of O(diameter).
 
-    Convergence probe: one tiny collect per round of
-    (count, Σ label, Σ pair-hash) — equal consecutive probes mean the
-    edge multiset is unchanged (hash-collision odds negligible), i.e.
-    the alternation hit its fixpoint. No frame diff needed."""
+    Convergence probe: (count, Σ label, Σ pair-hash) of each round's
+    edges, observed by the round's checkpoint job — equal consecutive
+    probes mean the edge multiset is unchanged (hash-collision odds
+    negligible), i.e. the alternation hit its fixpoint. No frame diff
+    needed. Raises ``RuntimeError`` if ``max_iter`` rounds do not
+    reach it."""
     raw = pairs.select(
         F.col(a_col).alias("u"), F.col(b_col).alias("v")
     ).localCheckpoint()
@@ -108,34 +112,18 @@ def connected_components_twostar(pairs: DataFrame, a_col: str = "doc_a",
         raw.select(F.col("u").alias("doc_id"))
         .unionByName(raw.select(F.col("v").alias("doc_id")))
         .distinct()
-        .localCheckpoint()
     )
-    edges = (
-        raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    edges, n_edges = counted_checkpoint(
+        raw.filter(F.col("u") != F.col("v")).distinct()
     )
-    # size the per-round shuffles to the edge count (see
-    # plans.session.scoped_shuffle): alternation rounds are tiny
-    # join+agg stages whose fixed cost dominates under the session
-    # default partition count on graphs far below the cluster ceiling
-    from ..plans.session import scoped_shuffle, sized_partitions
-
-    spark = pairs.sparkSession
-    n_parts = sized_partitions(spark, edges.count())
-    prev = None
-    with scoped_shuffle(spark, n_parts):
-        for _ in range(max_iter):
-            edges = _small_star(_large_star(edges)).localCheckpoint()
-            probe = edges.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("v").cast("decimal(38,0)")).alias("s"),
-                F.sum(
-                    F.xxhash64("u", "v").cast("decimal(38,0)")
-                ).alias("h"),
-            ).collect()[0]
-            cur = (probe["n"], probe["s"], probe["h"])
-            if cur == prev:
-                break
-            prev = cur
+    edges = run_rounds(
+        lambda e: _small_star(_large_star(e)), edges, n_edges, max_iter,
+        probe=(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("v").cast("decimal(38,0)")).alias("s"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+        ),
+    )
     # fixpoint edges form stars (u → root). Isolated-in-pairs nodes
     # can't occur (every vertex came from a pair), but roots carry no
     # outgoing edge — they label themselves via the left join.
@@ -191,18 +179,15 @@ def pagerank_fixedpoint(edges: DataFrame, src_col: str = "src",
     per round (iterative-lineage discipline, as above). Nodes without
     out-edges leak their damped mass (the classic simplification);
     symmetrize the edge list if dangling nodes matter."""
-    e = (
+    e, n_edges = counted_checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    nodes = (
+    nodes, n = counted_checkpoint(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    n = nodes.count()
     r0 = scale // n
     base = ((100 - damping_pct) * r0) // 100
     deg = e.groupBy(F.col("src").alias("node")).agg(
@@ -216,38 +201,26 @@ def pagerank_fixedpoint(edges: DataFrame, src_col: str = "src",
         .select("src", "dst", "deg")
         .localCheckpoint()
     )
-    rank = nodes.withColumn("rank", F.lit(r0).cast("long"))
-    # size the per-round join+agg shuffles to the edge count, exactly
-    # as the CC variants do: each round is O(E) work, and under the
-    # session default partition count a small graph pays mostly
-    # per-task fixed cost. sized_partitions caps at the session
-    # default, which stays the cluster-scale ceiling at 100 TB.
-    from ..plans.session import scoped_shuffle, sized_partitions
 
-    spark = edges.sparkSession
-    n_parts = sized_partitions(spark, e.count())
-    with scoped_shuffle(spark, n_parts):
-        for _ in range(iterations):
-            sums = (
-                ed.join(rank, ed.src == rank.node)
-                .select(F.col("dst"), F.expr("rank div deg").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-            )
-            rank = (
-                nodes.join(sums, nodes.node == sums.dst, "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.expr(
-                            f"({damping_pct} * coalesce(s, 0)) div 100"
-                        )
-                    ).cast("long").alias("rank"),
-                )
-                .localCheckpoint()
-            )
-    return rank
+    def step(rank):
+        sums = (
+            ed.join(rank, ed.src == rank.node)
+            .select(F.col("dst"), F.expr("rank div deg").alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("s"))
+        )
+        return nodes.join(sums, nodes.node == sums.dst, "left").select(
+            "node",
+            (
+                F.lit(base)
+                + F.expr(f"({damping_pct} * coalesce(s, 0)) div 100")
+            ).cast("long").alias("rank"),
+        )
+
+    # each round is O(E) work, so its shuffles are sized to the edge
+    # count
+    rank = nodes.withColumn("rank", F.lit(r0).cast("long"))
+    return run_rounds(step, rank, n_edges, iterations)
 
 
 def triangle_counts(edges: DataFrame, src_col: str = "src",
@@ -325,48 +298,40 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
     members from incidental co-occurrence.
 
     Per round: one degree aggregate plus two semi-joins keyed by node
-    — O(E) shuffle, sized to the shrinking edge count via
-    scoped_shuffle (same iterative discipline as the CC variants and
-    pagerank; the session default stays the cluster-scale ceiling).
-    Frames are localCheckpoint-ed per round. Convergence is a 1-row
-    count probe; peeling can need O(n) rounds on adversarial chains,
-    so ``max_rounds`` bounds the loop — on co-occurrence graphs the
+    — O(E) shuffle, sized to the edge count by ``run_rounds``.
+    Convergence is an edge-count probe observed by each round's
+    checkpoint job; peeling can need O(n) rounds on adversarial
+    chains, so ``max_rounds`` bounds the loop and reaching it without
+    a fixpoint raises ``RuntimeError`` — on co-occurrence graphs the
     fixpoint lands in a handful of rounds (their degree distribution
     collapses fast).
 
     Returns (node, core_deg): the members of the k-core with their
     within-core degree."""
-    from ..plans.session import scoped_shuffle, sized_partitions
-
-    e = (
+    e, n_edges = counted_checkpoint(
         edges.select(
             F.least(src_col, dst_col).alias("u"),
             F.greatest(src_col, dst_col).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    spark = edges.sparkSession
-    n_edges = e.count()
-    with scoped_shuffle(spark, sized_partitions(spark, n_edges)):
-        for _ in range(max_rounds):
-            deg = (
-                e.select(F.col("u").alias("node"))
-                .unionByName(e.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("deg"))
-            )
-            keep = deg.filter(F.col("deg") >= k).select("node")
-            e2 = (
-                e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-                .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-                .localCheckpoint()
-            )
-            n2 = e2.count()
-            if n2 == n_edges:
-                break
-            e, n_edges = e2, n2
+
+    def peel(e):
+        deg = (
+            e.select(F.col("u").alias("node"))
+            .unionByName(e.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        keep = deg.filter(F.col("deg") >= k).select("node")
+        return (
+            e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
+            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+        )
+
+    e = run_rounds(peel, e, n_edges, max_rounds,
+                   probe=(F.count(F.lit(1)).alias("n"),))
     return (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -389,32 +354,27 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, rounds: int = 6,
     symmetrized edge list + one min-aggregate — O(E) shuffle, sized
     to the edge count like every iterative operator here.
     Returns (node, hops) for nodes within ``rounds`` of a source."""
-    from ..plans.session import scoped_shuffle, sized_partitions
-
     e = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    sym = e.unionByName(
+    sym, n_edges = counted_checkpoint(e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct().localCheckpoint()
+    ).distinct())
     d = sources.select(
         F.col(sources.columns[0]).alias("node"),
         F.lit(0).alias("h"),
     ).localCheckpoint()
-    spark = edges.sparkSession
-    n_parts = sized_partitions(spark, sym.count())
-    with scoped_shuffle(spark, n_parts):
-        for _ in range(rounds):
-            relaxed = sym.join(d, sym.u == d.node).select(
-                F.col("v").alias("node"), (F.col("h") + 1).alias("h")
-            )
-            d = (
-                d.unionByName(relaxed)
-                .groupBy("node")
-                .agg(F.min("h").alias("h"))
-                .localCheckpoint()
-            )
+
+    def relax(d):
+        relaxed = sym.join(d, sym.u == d.node).select(
+            F.col("v").alias("node"), (F.col("h") + 1).alias("h")
+        )
+        return d.unionByName(relaxed).groupBy("node").agg(
+            F.min("h").alias("h")
+        )
+
+    d = run_rounds(relax, d, n_edges, rounds)
     return d.select("node", F.col("h").cast("int").alias("hops"))
 
 

@@ -29,10 +29,12 @@ pandas); here we centralize the Spark settings that matter for the
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.conversion import LocalDataToArrowConversion
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _parse_datatype_string
@@ -104,7 +106,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     shuffle at gate scale (dd_minhash_lsh 12.8 s -> ~4 s at sf0.01,
     measured on a vanilla local[8] session). A session anyone
     deliberately configured is left alone, so tests pinning
-    shuffle_partitions=4 and scoped_shuffle blocks are unaffected.
+    shuffle_partitions=4 and run_rounds loops are unaffected.
     """
     try:
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
@@ -129,19 +131,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-import contextlib
-
-
 @contextlib.contextmanager
-def scoped_shuffle(spark, n: int):
-    """Temporarily set spark.sql.shuffle.partitions.
-
-    Iterative operators (connected components, k-means) run many tiny
-    shuffle stages whose per-partition fixed cost dominates when the
-    frames are far smaller than the session default partition count;
-    size the loop's shuffles to the DATA (rows per partition), restore
-    the default for everything else. Same principle as the streaming
-    drains' state-store sizing."""
+def _scoped_shuffle(spark, n: int):
+    """Temporarily set spark.sql.shuffle.partitions to ``n``."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
     try:
@@ -150,15 +142,82 @@ def scoped_shuffle(spark, n: int):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def sized_partitions(spark, n_rows: int, rows_per_partition: int = 50_000) -> int:
-    """Partition count for an iterative loop: enough to keep
-    ``rows_per_partition`` per task, never more than the session
+_ROWS_PER_PARTITION = 50_000
+
+
+def _sized_partitions(spark, n_rows: int) -> int:
+    """Partition count for a round loop: enough to keep
+    ``_ROWS_PER_PARTITION`` rows per task, never more than the session
     default (the cluster-scale ceiling), never fewer than 4."""
     try:
         default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         default = 200
-    return max(4, min(default, n_rows // rows_per_partition + 1))
+    return max(4, min(default, n_rows // _ROWS_PER_PARTITION + 1))
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df.localCheckpoint()`` and its row count. The count is an
+    ``Observation`` filled by the checkpoint's own job, so it costs no
+    separate ``count()`` job. This is how a round loop's pre-loop
+    frame yields the row count :func:`run_rounds` sizes from."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return out, obs.get["n"]
+
+
+def run_rounds(step, state: DataFrame, rows: int, rounds: int,
+               probe=()) -> DataFrame:
+    """The one fixed-point round runner: ``state = step(state)`` up to
+    ``rounds`` times, each round's frame ``localCheckpoint``-ed.
+
+    Shuffles: iterative operators run many tiny shuffle stages whose
+    per-partition fixed cost dominates when the frames are far
+    smaller than the session default partition count, so the loop's
+    shuffles are sized to ``rows`` (the data the loop moves; take it
+    from :func:`counted_checkpoint` on the pre-loop frame) and the
+    session default is restored afterwards. The default stays the
+    cluster-scale ceiling.
+
+    Checkpoints: iterative lineage otherwise grows a plan per round
+    and re-optimization dominates wall clock. On a cluster with
+    failure-recovery requirements use ``checkpoint()`` instead.
+
+    Convergence: with ``probe`` aggregate columns, each round's frame
+    is ``observe``-d with them before its checkpoint, so the checkpoint
+    job itself fills the probe (no separate 1-row ``collect()``). The
+    loop stops at the first round whose probe equals the previous
+    round's. The probe must pin the frame (a row count for a step that
+    only drops rows, a content hash otherwise): an unchanged probe then
+    means an unchanged frame, and as ``step`` is deterministic, the
+    fixed point. Reaching ``rounds`` first raises
+    ``RuntimeError`` rather than return an unconverged frame. Without
+    ``probe`` it runs exactly ``rounds`` rounds (a fixed-round
+    contract).
+
+    The argmax loops (``clustering.kcenter_coreset`` and
+    ``kmeans_parallel_init``, ``textstats.bpe_merges``,
+    ``similarity.mmr_select``) stay outside: each round needs the
+    winning ROW back on the driver to build the next round's frame,
+    which a frame-to-frame step cannot express without a
+    caller-specific branch, and none of them sizes a shuffle scope."""
+    spark = state.sparkSession
+    prev = None
+    with _scoped_shuffle(spark, _sized_partitions(spark, rows)):
+        for _ in range(rounds):
+            state = step(state)
+            if probe:
+                obs = Observation()
+                state = state.observe(obs, *probe)
+            state = state.localCheckpoint()
+            if probe:
+                cur = obs.get
+                if cur == prev:
+                    return state
+                prev = cur
+    if probe:
+        raise RuntimeError(f"no fixed point within {rounds} rounds")
+    return state
 
 
 def tiny_df(spark, rows, schema: str | StructType) -> DataFrame:

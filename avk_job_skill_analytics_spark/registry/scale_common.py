@@ -1103,7 +1103,7 @@ def _cluster_map(spark, sf_dir):
         pairs = dedup.ngram_jaccard_pairs(
             d, "doc_id", "text", k=3, threshold=0.5
         ).localCheckpoint()
-        clusters = dedup.duplicate_clusters(pairs).localCheckpoint()
+        clusters = graph.connected_components_twostar(pairs).localCheckpoint()
         _CLUSTER_CACHE[key] = (pairs, clusters)
     return _CLUSTER_CACHE[key]
 

@@ -155,24 +155,18 @@ def dd_ngram_jaccard(spark, sf_dir):
 )
 def dd_dup_clusters(spark, sf_dir):
     """Near-dup pairs → duplicate clusters via connected components
-    (min-label propagation; the oracle computes the same components
-    with a recursive transitive-closure CTE). cluster_id = the
-    surviving (minimum) doc id of each component."""
-    d = load(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", k=3, threshold=0.5)
-    return dedup.duplicate_clusters(pairs)
-
-
-@_q("dd_dup_clusters_twostar", ORACLES["dd_dup_clusters"])
-def dd_dup_clusters_twostar(spark, sf_dir):
-    """Same components, scale algorithm: large-star/small-star
-    alternation (O(log n) rounds regardless of graph diameter —
-    the variant you'd run on an adversarial 100 TB pair graph).
-    Shares dd_dup_clusters' transitive-closure oracle: identical
-    (doc_id, cluster_id) output is the point."""
+    (the package's one CC, graph.connected_components_twostar; the
+    oracle computes the same components with a recursive
+    transitive-closure CTE). cluster_id = the surviving (minimum) doc
+    id of each component."""
     d = load(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", k=3, threshold=0.5)
     return graph.connected_components_twostar(pairs)
+
+
+# both names run the one CC and share the transitive-closure oracle;
+# the second name stays so archived per-query walls keep their key
+_q("dd_dup_clusters_twostar", ORACLES["dd_dup_clusters"])(dd_dup_clusters)
 
 
 @_q("dd_simhash", _simhash_sql(16))
@@ -1106,7 +1100,6 @@ __all__ = [
     "dd_lsh_bucket_audit",
     "dd_ngram_jaccard",
     "dd_dup_clusters",
-    "dd_dup_clusters_twostar",
     "dd_simhash",
     "dd_embedding_cosine",
     "dd_semantic_prune",

@@ -702,7 +702,8 @@ def pii_cc_luhn(spark, sf_dir):
 def graph_kcore(spark, sf_dir):
     """5-core of the l_quantity>=48 co-supply graph
     (operators/graph.k_core): iterative peeling with per-round
-    edge-sized shuffles and a 1-row convergence probe. The oracle
+    edge-sized shuffles and an edge-count convergence probe observed
+    by each round's checkpoint job. The oracle
     unrolls 8 peel rounds — past the measured fixpoint at every test
     sf — so both engines land on the identical core membership and
     within-core degrees."""

@@ -799,6 +799,71 @@ def test_every_drain_goes_through_the_one_runner():
     assert ckpts == want, ckpts
 
 
+def test_every_round_loop_goes_through_the_one_runner():
+    """plans.session.run_rounds owns the round-loop skeleton (shuffle
+    sizing, scoped shuffle, per-round checkpoint, convergence probe):
+    ``scoped_shuffle(`` and ``sized_partitions(`` appear only in its
+    module, and the second CC (``duplicate_clusters``) is gone from
+    the package, tools/ and bench.py, code and docs alike."""
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, "bench.py")] + [
+        p for d in ("avk_job_skill_analytics_spark", "tools")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    ]
+    runner = os.path.join(
+        root, "avk_job_skill_analytics_spark", "plans", "session.py"
+    )
+    skeleton, cc = set(), set()
+    for p in files:
+        code = _code_tokens(p)
+        if p != runner and ("scoped_shuffle(" in code
+                            or "sized_partitions(" in code):
+            skeleton.add(os.path.relpath(p, root))
+        with open(p, encoding="utf-8") as f:
+            if "duplicate_clusters" in f.read():
+                cc.add(os.path.relpath(p, root))
+    assert skeleton == set(), skeleton
+    assert cc == set(), cc
+
+
+def test_round_probe_rides_the_checkpoint_job(spark):
+    """run_rounds fills its convergence probe from each round's own
+    checkpoint job: rounds with a probe fire exactly as many jobs as
+    the same rounds checkpointed with no probe."""
+    from avk_job_skill_analytics_spark.plans.session import run_rounds
+
+    base = spark.range(200).select(
+        (F.col("id") % 13).alias("k")).localCheckpoint()
+
+    def step(f):
+        return f.groupBy("k").count().select("k")
+
+    calls = []
+
+    def counted(f):
+        calls.append(f)
+        return step(f)
+
+    # distinct k is idempotent: round 2's probe equals round 1's
+    probed, n_probed = I.build_jobs(spark, lambda: run_rounds(
+        counted, base, 200, 10, probe=(F.count(F.lit(1)).alias("n"),)))
+    assert len(calls) == 2
+
+    def plain():
+        f = base
+        for _ in range(2):
+            f = step(f).localCheckpoint()
+        return f
+
+    unprobed, n_plain = I.build_jobs(spark, plain)
+    assert n_probed == n_plain > 0
+    assert sorted(probed.collect()) == sorted(unprobed.collect())
+
+
 def test_every_growing_index_goes_through_the_one_sink():
     """streaming/batched_index.index_sink owns the writer-path commit
     skeleton (marker short-circuit → protocol stamp → recovery →

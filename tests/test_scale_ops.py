@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.operators import analytics as A
@@ -154,23 +155,6 @@ def test_kmeans_feeds_ivf(spark):
     assert all(1 <= r["rk"] <= 3 for r in out)
 
 
-# ----------------------------------------------------- duplicate clusters
-def test_duplicate_clusters_components(spark):
-    from avk_job_skill_analytics_spark.operators.dedup import (
-        duplicate_clusters,
-    )
-
-    # two components: {1,2,3,7} via chain 1-2, 2-3, 3-7; {10,11}
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 7), (10, 11)], ["doc_a", "doc_b"]
-    )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in duplicate_clusters(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
-
-
 # ------------------------------------------------------------ text & skew
 def test_tf_idf_values(spark):
     from avk_job_skill_analytics_spark.operators import textstats
@@ -242,33 +226,59 @@ def test_l2_normalize_unit_length_and_zero_guard(spark):
     assert out[2]["unit"] == [1.0, 0.0]
 
 
-def test_twostar_matches_label_propagation(spark):
-    from avk_job_skill_analytics_spark.operators import dedup, graph
+def _union_find_components(pairs):
+    """Plain-Python reference CC: (node, min id of its component)."""
+    parent = {}
 
-    # long chain: adversarial for O(diameter) label propagation, a
-    # few rounds for the two-star alternation
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(120)], "doc_a long, doc_b long"
-    )
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its component's min
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v)) for v in parent}
+
+
+_CC_CASES = {
+    # long chain: adversarial for O(diameter) label propagation, a few
+    # rounds for the two-star alternation
+    "chain121": [(i, i + 1) for i in range(120)],
+    # a self-pair keeps its vertex as a singleton cluster
+    "self_pair": [(10, 11), (11, 12), (50, 60), (7, 7)],
+    # {1,2,3,7} via chain 1-2, 2-3, 3-7; {10,11}
+    "two_components": [(1, 2), (2, 3), (3, 7), (10, 11)],
+    # 20 rounds of min-label propagation leave this chain in 41 clusters
+    "chain61": [(i, i + 1) for i in range(60)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_twostar_matches_union_find(spark, case):
+    from avk_job_skill_analytics_spark.operators import graph
+
+    pairs = _CC_CASES[case]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {
         (r.doc_id, r.cluster_id)
-        for r in graph.connected_components_twostar(chain).collect()
+        for r in graph.connected_components_twostar(df).collect()
     }
-    assert got == {(i, 0) for i in range(121)}
+    assert got == _union_find_components(pairs)
 
-    # self-pair keeps its vertex as a singleton cluster
-    mixed = spark.createDataFrame(
-        [(10, 11), (11, 12), (50, 60), (7, 7)], "doc_a long, doc_b long"
-    )
-    a = {
-        (r.doc_id, r.cluster_id)
-        for r in graph.connected_components_twostar(mixed).collect()
-    }
-    b = {
-        (r.doc_id, r.cluster_id)
-        for r in dedup.duplicate_clusters(mixed).collect()
-    }
-    assert a == b and (7, 7) in a
+
+def test_twostar_raises_at_round_cap(spark):
+    """A cap reached before the fixpoint raises instead of returning
+    partly merged components."""
+    from avk_job_skill_analytics_spark.operators import graph
+
+    chain = spark.createDataFrame(_CC_CASES["chain121"],
+                                  "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="fixed point"):
+        graph.connected_components_twostar(chain, max_iter=1)
 
 
 def test_approx_percentiles_near_exact(spark):
@@ -887,6 +897,21 @@ def test_k_core_peels_to_known_core(spark):
     assert got == {n: 5 for n in range(1, 7)}
     # and a threshold above the clique degree empties the core
     assert k_core(df, k=6).count() == 0
+
+
+def test_k_core_raises_when_peeling_outlasts_the_cap(spark):
+    """A 50-node path has an empty 2-core, but peeling removes only
+    the two end nodes per round: 25 rounds. The default cap (20) must
+    raise rather than return the unpeeled middle; a cap past the
+    fixpoint returns the empty core."""
+    from avk_job_skill_analytics_spark.operators.graph import k_core
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(49)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="fixed point"):
+        k_core(path, k=2)
+    assert k_core(path, k=2, max_rounds=30).count() == 0
 
 
 def test_bpe_merges_learns_known_rules(spark):

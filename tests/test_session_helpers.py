@@ -1,6 +1,8 @@
-"""plans.session.tiny_df — the one constructor for driver-built frames.
+"""plans.session helpers: ``tiny_df``, ``scratch_persist`` and the
+``run_rounds`` round runner.
 
-The contract: the same schema and rows as
+``tiny_df`` is the one constructor for driver-built frames. Its
+contract: the same schema and rows as
 ``spark.createDataFrame(rows, schema)`` (results must never change),
 built as one Arrow table on the driver and planned as a
 ``LocalTableScan`` (no pickled Python RDD, no Python worker on the
@@ -14,11 +16,12 @@ import datetime
 import decimal
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from avk_job_skill_analytics_spark.plans import inspect as I
 from avk_job_skill_analytics_spark.plans.schemas import MANIFEST
-from avk_job_skill_analytics_spark.plans.session import tiny_df
+from avk_job_skill_analytics_spark.plans.session import run_rounds, tiny_df
 
 _TS = datetime.datetime(2025, 10, 1, 9, 15, 30, 123456)
 
@@ -165,3 +168,25 @@ def test_scratch_persist_keeps_cache_of_equal_newer_plan(spark):
     scratch_persist(spark.range(5), keep=2)  # evicts a
     assert b.storageLevel != StorageLevel.NONE
     b.unpersist()
+
+
+def test_run_rounds_fixed_count_and_cap(spark):
+    """Without a probe the runner runs exactly ``rounds`` rounds; with
+    one whose value never repeats it raises at the cap instead of
+    returning the unconverged frame."""
+    base = spark.range(5).localCheckpoint()
+    calls = []
+
+    def shift(f):
+        calls.append(f)
+        return f.select((F.col("id") + 1).alias("id"))
+
+    out = run_rounds(shift, base, 5, 3)
+    assert len(calls) == 3
+    assert sorted(r.id for r in out.collect()) == [3, 4, 5, 6, 7]
+    assert run_rounds(shift, base, 5, 0) is base
+
+    calls.clear()
+    with pytest.raises(RuntimeError, match="no fixed point within 3"):
+        run_rounds(shift, base, 5, 3, probe=(F.sum("id").alias("s"),))
+    assert len(calls) == 3

@@ -18,8 +18,9 @@ sf0.01 correctness is green:
 
 It also builds every DataFrame a second time, on a warm parquet schema
 cache, and prints the Spark jobs each build fired (eager probes,
-``count()``/``collect()`` rounds, footer reads), sorted descending, to
-rank the build-side fixed cost of the short-query tail.
+``count()``/``collect()`` rounds, footer reads), sorted descending and
+closed by their sum, to rank the build-side fixed cost of the
+short-query tail and compare the registry total across changes.
 
 Usage: python tools/plan_audit.py [sf_dir]
 Exit 1 if any un-allowlisted flag fires.
@@ -259,6 +260,7 @@ def main() -> None:
     print("\nSpark jobs fired while building, warm cache:")
     for n, name in sorted(jobs, key=lambda x: (-x[0], x[1])):
         print(f"{n:5d}  {name}")
+    print(f"{sum(n for n, _ in jobs):5d}  total")
     print(f"\n{bad} flagged")
     raise SystemExit(1 if bad else 0)
 
