@@ -2,14 +2,17 @@
 contract shared by the batch serving queries (registry/io_queries),
 the streaming absorption sink (streaming/ann_maintain), and tests.
 
-Layout: ``<index_dir>/cells`` is the code inventory partitioned
-``(_cell, _batch)`` — cell first so probed reads prune at the
-directory listing, batch second so appends are dynamic partition
-overwrites of exactly their own leaves (``_batch=-1`` is the base
-build) — plus two tiny side tables, ``coarse/`` (cell, cv) and
-``pq/`` (s, cid, bv), persisting the frozen quantizers
-(n_cells·d + m·k*·sub_d doubles; parquet round-trips doubles
-bit-exact).
+Layout: ``<index_dir>/cells`` is the code inventory in the shared
+``table/batch=<id>`` commit unit of ``streaming/batched_index`` — one
+``cells/batch=<b>`` directory per committed batch (``batch=-1`` is
+the base build), each written ``partitionBy("_cell")`` so probed
+reads prune at the directory listing — plus two tiny side tables,
+``coarse/`` (cell, cv) and ``pq/`` (s, cid, bv), persisting the
+frozen quantizers (n_cells·d + m·k*·sub_d doubles; parquet
+round-trips doubles bit-exact). Appends go through
+``batched_index.index_sink`` and compaction through
+``compact_batched_index`` over :data:`CELLS_LAYOUT`, like every other
+growing index.
 
 Cited design: the IVF-PQ pipeline is Jégou et al. TPAMI'11; the
 store-offline/probe-pruned/absorb-online discipline mirrors how FAISS
@@ -23,63 +26,29 @@ from pyspark.sql import functions as F
 
 from ..plans.session import tiny_df
 
-
-def _delete_cells_batches(fs, bs: list[str]) -> None:
-    """Layout callback for the shared commit protocol
-    (streaming/fsio): each batch's codes live in one ``_batch=<b>``
-    leaf under every ``_cell=<c>`` directory — the cells enumeration
-    is paid once for the whole batch list."""
-    cells = [cd for cd in fs.listdir("cells") if cd.startswith("_cell=")]
-    for cd in cells:
-        for b in bs:
-            fs.delete(f"cells/{cd}/_batch={b}")
+# the cells compaction spec: hash-cluster on _cell and keep _cell a
+# directory partition inside each generation, so serving still prunes
+CELLS_LAYOUT = {"cells": {"partition_by": ["_cell"]}}
 
 
-def _recover_cells(fs) -> None:
-    """Finish a journal-committed cells compaction — idempotent,
-    no-op without a journal."""
-    from ..streaming.fsio import recover_compaction
+def write_cells(codes: DataFrame, batch_dir: str) -> None:
+    """Write one batch's (_id, _cell, _codes) rows as a plain
+    overwrite of its own ``cells/batch=<id>`` directory, partitioned
+    by ``_cell`` — a redelivered batch rewrites the same directory
+    and converges.
 
-    recover_compaction(fs, _delete_cells_batches)
-
-
-def _leaf_batch_ids(fs) -> set[str]:
-    """Batch ids that actually own data leaves under cells/ — the
-    bounded set (post-compaction: one generation + recent batches)
-    that keeps reader predicates independent of how many markers
-    exist."""
-    return {
-        name.split("=", 1)[1]
-        for cd in fs.listdir("cells")
-        if cd.startswith("_cell=")
-        for name in fs.listdir(f"cells/{cd}")
-        if name.startswith("_batch=")
-    }
-
-
-def write_cells(codes: DataFrame, cells_path: str,
-                batch_id: int, distribute: bool = True) -> None:
-    """Write one batch's (_id, _cell, _codes) rows into the two-level
-    layout as a DYNAMIC partition overwrite of its own leaves — a
-    redelivered batch rewrites identical directories and converges.
-
-    ``distribute`` hash-clusters the codes by ``_cell`` before the
-    partitioned write (guide §6 file sizing): without it every input
-    partition opens a file in every cell directory it touches —
-    input_partitions × cells tiny files per batch (measured 64 files
-    for a 250-row batch at sf0.1); clustered, each cell lands wholly
-    in one task, so each ``(_cell, _batch)`` leaf is exactly one
-    file. The shuffle moves only (id, cell, m-byte codes) — the
-    lightweight proxy, never vectors. Callers that already clustered
-    (compact_cells' bucketed repartition) pass ``distribute=False``."""
-    if distribute:
-        codes = codes.repartition("_cell")
+    The codes hash-cluster by ``_cell`` first (file sizing):
+    without it every input partition opens a file in every cell
+    directory it touches — input_partitions × cells tiny files per
+    batch (measured 64 files for a 250-row batch at sf0.1); clustered,
+    each cell lands wholly in one task, so each ``_cell`` directory of
+    a batch is exactly one file. The shuffle moves only (id, cell,
+    m-byte codes) — the lightweight proxy, never vectors."""
     (
-        codes.withColumn("_batch", F.lit(int(batch_id)))
+        codes.repartition("_cell")
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_cell", "_batch")
-        .parquet(cells_path)
+        .partitionBy("_cell")
+        .parquet(batch_dir)
     )
 
 
@@ -109,7 +78,7 @@ def build_index(spark, corpus: DataFrame, id_col: str, vec_col: str,
                 round_digits: int = 6) -> tuple[list, list]:
     """Train the (deterministic-seed) quantizers on ``corpus``,
     encode it, and persist the full index: cells inventory under
-    ``_batch=-1`` plus both codebook side tables. Returns
+    ``cells/batch=-1`` plus both codebook side tables. Returns
     (coarse, cbs) so the builder can keep serving in-process."""
     from . import similarity
 
@@ -153,7 +122,7 @@ def build_index(spark, corpus: DataFrame, id_col: str, vec_col: str,
     from ..streaming.batched_index import parallel_writes
 
     parallel_writes(
-        lambda: write_cells(codes, f"{index_dir}/cells", -1),
+        lambda: write_cells(codes, f"{index_dir}/cells/batch=-1"),
         lambda: tiny_df(
             spark, coarse, "cell long, cv array<double>"
         ).write.mode("overwrite").parquet(f"{index_dir}/coarse"),
@@ -188,11 +157,11 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
     collects)."""
     from . import similarity
 
-    from ..streaming.fsio import (
-        IndexFS,
-        committed_batch_ids,
-        legacy_overlay_ids,
+    from ..streaming.batched_index import (
+        committed_table_dirs,
+        serving_batch_ids,
     )
+    from ..streaming.fsio import IndexFS
 
     coarse, cbs = load_codebooks(spark, index_dir)
     # ONE job computes the probe frame AND the probed-cell literal
@@ -222,28 +191,15 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
         "_qid long, _cell long, _tbls array<map<long,long>>",
     )
     fs = IndexFS(spark, index_dir)
-    # pre-v2 compat, READ-ONLY: a legacy base build never touched
-    # _batch_-1 — overlay it into this read's committed view instead
-    # of silently serving nothing (serving tiers may lack write
-    # permission on the index root; the next writer stamps durably)
-    leaves = _leaf_batch_ids(fs)
-    overlay = legacy_overlay_ids(
-        fs, lambda: "-1" in leaves, lambda b: b in leaves
-    )
-    # committed ∩ leaves-that-exist: the predicate stays bounded by
-    # LIVE leaves (one generation + recent batches after compaction),
-    # not by how many redelivery markers have ever been written
-    committed = sorted(
-        int(b)
-        for b in (committed_batch_ids(fs) | overlay) & leaves
-    )
+    # only marker/journal-committed batch dirs are read (a crashed
+    # append's half-written dir is invisible; compaction's journal
+    # overlay swaps generations atomically), with basePath at cells/
+    # so every dir's _cell subdirectories read as one partition column
+    dirs = committed_table_dirs(fs, "cells", serving_batch_ids(fs, "cells"))
     inv = (
-        spark.read.parquet(f"{index_dir}/cells")
+        spark.read.option("basePath", fs.uri("cells"))
+        .parquet(*dirs)
         .filter(F.col("_cell").isin(probed))
-        # trust only marker/journal-committed batches: a crashed
-        # append's half-written leaves are invisible, and compaction's
-        # journal overlay swaps generations atomically for readers
-        .filter(F.col("_batch").cast("long").isin(committed))
         .select("_id", F.col("_cell").cast("long").alias("_cell"), "_codes")
     )
     if allowed is not None:
@@ -310,14 +266,10 @@ def rebuild_swap(spark, root_dir: str, corpus: DataFrame, id_col: str,
     cur = resolve_version(fs)
     v = 0 if cur is None else cur + 1
     # a prior rebuild may have crashed mid-build at this same version:
-    # build_index's cells write is a DYNAMIC partition overwrite that
-    # only rewrites partitions present in the NEW codes, so a crashed
-    # attempt whose corpus produced different coarse seed ids would
-    # leave stale _cell=*/_batch=-1 leaves that this retry never
-    # touches — and the marker touch below would commit them for every
-    # full-inventory reader (ADVICE r7 #1). Serving was safe (stale
-    # cells are never probed); clearing the uncommitted dir makes the
-    # retry a genuinely fresh build.
+    # its uncommitted dir may hold artifacts this build would not
+    # overwrite (a pre-commit note naming another batch, a batch dir
+    # beside the base build) that the marker touch below would commit
+    # — clearing it makes the retry a genuinely fresh build.
     fs.delete(f"v{v}")
     build_index(spark, corpus, id_col, vec_col, fs.uri(f"v{v}"),
                 n_cells=n_cells, m=m, sub_d=sub_d, k_star=k_star,
@@ -364,84 +316,13 @@ def serve_current(spark, root_dir: str, queries: DataFrame, id_col: str,
 
 def compact_cells(spark, index_dir: str, buckets: int = 1,
                   marker_horizon: int = 1000) -> dict:
-    """Merge the cells inventory's committed ``_batch`` leaves into a
-    single fresh negative GENERATION per cell — the IVF-PQ twin of
-    minhash_stream.compact_lsh_index, closing the small-files growth
-    of sustained streaming absorption (one ``(_cell, _batch)`` leaf
-    per micro-batch forever otherwise — VERDICT r6 ask #2).
-
-    Same rename-free journaled protocol (streaming/fsio docstring):
-    the compacted generation writes DIRECTLY into its final
-    ``_cell=*/_batch=<gen>`` leaves via dynamic partition overwrite
-    (invisible until committed — readers only trust marker/journal
-    batches), the ``_compact_commit`` journal is the atomic commit
-    point, and the idempotent apply deletes consumed leaves + retired
-    sentinel markers. Real batch markers survive so redelivered
-    pre-compaction batches still short-circuit. The committed
-    snapshot localCheckpoints before the rewrite (same-root read →
-    write); at cluster scale this staging lands on reliable storage.
+    """Merge the committed ``cells/batch=<id>`` directories into one
+    fresh negative GENERATION, still partitioned by ``_cell`` — the
+    file-count bound for sustained streaming absorption, through the
+    shared ``batched_index.compact_batched_index`` (:data:`CELLS_LAYOUT`).
     Returns {'files_before', 'files_after', 'rows'}."""
-    from ..streaming.fsio import (
-        IndexFS,
-        committed_batch_ids,
-        count_committed_files,
-        drop_stale_generations,
-        ensure_protocol,
-        next_generation,
-        retire_real_markers,
-        write_journal,
-    )
+    from ..streaming.batched_index import compact_batched_index
 
-    fs = IndexFS(spark, index_dir)
-    _leaves0 = _leaf_batch_ids(fs)
-    ensure_protocol(fs, lambda: "-1" in _leaves0,
-                    lambda b: b in _leaves0)
-    _recover_cells(fs)
-    # reclaim half-written generations from a pre-commit crash
-    stale = sorted(
-        int(b) for b in _leaf_batch_ids(fs) if int(b) < 0
-    )
-    drop_stale_generations(fs, _delete_cells_batches, stale)
-    committed = committed_batch_ids(fs) & _leaf_batch_ids(fs)
-    before = fs.count_files("cells")
-    if not committed:
-        return {"files_before": before, "files_after": before, "rows": 0}
-    inv = (
-        spark.read.parquet(fs.uri("cells"))
-        .filter(
-            F.col("_batch").cast("string").isin(sorted(committed))
-        )
-        .select("_id", "_codes", F.col("_cell").cast("long").alias("_cell"))
-        .repartition(buckets, "_cell")
-        .localCheckpoint()
-    )
-    # observe the row count inside the generation write instead of a
-    # separate count() job over the checkpointed snapshot (guide §1.2)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    inv = inv.observe(obs, F.count(F.lit(1)).alias("rows"))
-    gen = next_generation(fs)
-    # inv is already bucket-clustered by _cell — no second shuffle
-    write_cells(inv, fs.uri("cells"), gen, distribute=False)
-    rows = obs.get["rows"]
-    write_journal(fs, gen, sorted(committed))  # the atomic commit point
-    _recover_cells(fs)  # apply via the shared idempotent path
-    # every committed real batch is now absorbed — retire markers far
-    # behind the redelivery horizon so root metadata stays bounded
-    retire_real_markers(fs, marker_horizon)
-    # files_after is the COMMITTED view (what every new reader opens):
-    # consumed leaves' data survives one tombstone grace cycle for
-    # in-flight scans and is purged at the next compaction's apply
-    committed_now = committed_batch_ids(fs)
-    after = sum(
-        count_committed_files(fs, f"cells/{cd}", prefix="_batch=",
-                              committed=committed_now)
-        for cd in fs.listdir("cells")
-        if cd.startswith("_cell=")
-    )
-    return {
-        "files_before": before,
-        "files_after": after,
-        "rows": rows,
-    }
+    return compact_batched_index(spark, index_dir, CELLS_LAYOUT,
+                                 buckets=buckets,
+                                 marker_horizon=marker_horizon)

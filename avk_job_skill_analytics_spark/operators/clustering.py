@@ -214,16 +214,20 @@ def kmeans_fit(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
             .localCheckpoint()
         )
     # size the loop's shuffles to the exploded (row × dim) volume the
-    # centroid update actually moves; the count is one column-pruned
-    # scan against per-iteration full scans.
-    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = max(int(first["d"]) if first and first["d"] is not None else 1, 1)
+    # centroid update actually moves: the row count and the dimension
+    # come from one column-pruned aggregate, against per-iteration
+    # full scans.
+    shape = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.size(F.col(vec_col))).alias("d"),
+    ).first()
+    dim = max(int(shape["d"] or 1), 1)
     return run_rounds(
         lambda c: update_centroids(
             assign_clusters(df, c, id_col, vec_col, round_digits),
             vec_col, round_digits,
         ),
-        centroids, df.count() * dim, iters,
+        centroids, shape["n"] * dim, iters,
     )
 
 

@@ -188,6 +188,9 @@ def pagerank_fixedpoint(edges: DataFrame, src_col: str = "src",
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
+    if n == 0:
+        # no edges, no nodes: a typed empty (node, rank) frame
+        return nodes.withColumn("rank", F.lit(0).cast("long"))
     r0 = scale // n
     base = ((100 - damping_pct) * r0) // 100
     deg = e.groupBy(F.col("src").alias("node")).agg(

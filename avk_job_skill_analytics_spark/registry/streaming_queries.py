@@ -634,9 +634,10 @@ _IVFPQ_INC_DIRS: dict = FixtureMemo()
 def _ivfpq_base_index_dir(spark, sf_dir: str) -> str:
     """Base IVF-PQ index over the EVEN vec_ids only: quantizers
     trained on the base corpus and persisted as side tables; base
-    codes written into the two-level (_cell, _batch=-1) layout the
-    streaming append extends (operators/ann_index.build_index — the
-    one implementation of the layout contract)."""
+    codes written as the cells/batch=-1 directory (partitioned by
+    _cell) of the layout the streaming append extends
+    (operators/ann_index.build_index — the one implementation of the
+    layout contract)."""
     from ..operators import ann_index
 
     if sf_dir not in _IVFPQ_INC_DIRS:
@@ -744,9 +745,10 @@ def stream_ivfpq_index_append(spark, sf_dir):
     index is built over the even vec_ids (quantizers frozen + side
     tables persisted, loaded ONCE per sink — not per trigger), the
     odd vec_ids arrive as TWO micro-batches and are encoded with the
-    FROZEN quantizers, each batch a dynamic partition overwrite of
-    its own (_cell, _batch) leaves — so redelivery converges and the
-    marker short-circuits clean replays (pytest-locked). Serving then
+    FROZEN quantizers, each batch an overwrite of its own
+    cells/batch=<id> directory through the shared index sink — so
+    redelivery converges and the marker short-circuits clean replays
+    (pytest-locked). Serving then
     reads the grown index (probed-cell literal pruning, stored-code
     ADC) and must hash-match the oracle's one-shot replay:
     base-trained quantizers, codes for the whole corpus — proving
@@ -768,14 +770,15 @@ def stream_ivfpq_autocompact(spark, sf_dir):
     """Self-compacting incremental IVF-PQ index
     (ann_maintain compact_every + operators/ann_index.compact_cells):
     the odd vec_ids arrive as FOUR micro-batches on a fresh even-id
-    base, and the sink itself compacts the (_cell, _batch) leaves
-    whenever two committed real batches have accumulated — two
-    journaled, rename-free compactions run inside the drain with no
-    operator call. Serving from the compacted generations must
-    hash-match the SAME one-shot oracle as the append query: the
-    driver-gate proof that compaction is lossless and the leaf count
-    stays bounded under sustained streaming (the file-count bound and
-    crash recovery are pytest-locked in tests/test_ann_index.py)."""
+    base, and the shared index sink itself compacts the committed
+    cells/batch=<id> directories whenever two committed real batches
+    have accumulated — two journaled, rename-free compactions run
+    inside the drain with no operator call. Serving from the
+    compacted generations must hash-match the SAME one-shot oracle as
+    the append query: the oracle-gate proof that compaction is
+    lossless and the directory count stays bounded under sustained
+    streaming (the file-count bound and crash recovery are
+    pytest-locked in tests/test_ann_index.py)."""
     from ..operators import ann_index
 
     if sf_dir not in _IVFPQ_AC_DIRS:

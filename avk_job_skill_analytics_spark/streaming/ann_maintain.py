@@ -9,15 +9,15 @@ tables — the standard FAISS-style discipline: retraining is an
 offline batch job, absorption is cheap) and their codes are appended
 into the cell-partitioned inventory exactly once per micro-batch.
 
-Layout contract: the code inventory is partitioned
-``(_cell, _batch)`` — cell first, so probed serving reads still prune
-at the directory listing; batch second, so a batch's append is a
-DYNAMIC partition overwrite of exactly its own ``(_cell, _batch)``
-leaf directories. A crash-redelivered batch rewrites identical rows
-over itself and converges; the ``_batch_<id>`` marker short-circuits
-clean replays — the same exactly-once discipline as
-``minhash_stream.foreach_batch_lsh_maintain``. The base build writes
-``_batch=-1`` (an id foreachBatch never assigns).
+Layout contract (``operators/ann_index``): the code inventory is the
+shared ``table/batch=<id>`` commit unit, each batch one
+``cells/batch=<b>`` directory written ``partitionBy("_cell")`` — cell
+directories inside, so probed serving reads still prune at the
+directory listing. Appends go through ``batched_index.index_sink``: a
+crash-redelivered batch overwrites its own directory and converges,
+and the ``_batch_<id>`` marker short-circuits clean replays — the
+same exactly-once sink as every other growing index. The base build
+writes ``batch=-1`` (an id foreachBatch never assigns).
 
 Per-trigger cost is O(arrivals): one codegen encode projection (the
 inlined-codebook argmins — zero Exchange) + one partitioned write.
@@ -28,19 +28,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .batched_index import spread_batch
+from ..operators.ann_index import (
+    CELLS_LAYOUT,
+    load_codebooks,
+    rebuild_swap,
+    resolve_version,
+    write_cells,
+)
+from .batched_index import (
+    committed_table_dirs,
+    compact_batched_index,
+    index_sink,
+    spread_batch,
+)
 
-# the layout contract lives in ONE place — operators/ann_index —
-# shared with the batch build/serve queries; these aliases keep the
-# streaming-facing names stable
-from ..operators.ann_index import compact_cells as compact_ivfpq_cells
-from ..operators.ann_index import load_codebooks as load_ivfpq_codebooks
-from ..operators.ann_index import write_cells as write_ivfpq_cells
+# the auto-retrain root's raw arrivals log: one unpartitioned
+# raw/batch=<id> directory per batch, plain-repartitioned on compaction
+_RAW_LAYOUT = {"raw": None}
 
 __all__ = [
-    "load_ivfpq_codebooks",
-    "write_ivfpq_cells",
-    "compact_ivfpq_cells",
     "foreach_batch_ivfpq_append",
     "foreach_batch_drift_fold",
     "foreach_batch_auto_retrain",
@@ -93,158 +99,29 @@ def foreach_batch_drift_fold(stream: DataFrame, coarse: list, cbs: list,
 def _ivfpq_append_batch_fn(index_dir: str, id_col: str, vec_col: str,
                            m: int, sub_d: int, round_digits: int = 6,
                            compact_every: int | None = None):
-    """The per-batch append body, exposed for redelivery tests.
+    """The per-batch append body, exposed for redelivery tests: the
+    shared ``batched_index.index_sink`` over the cells layout, so
+    ``compact_every`` is the sink's own auto-compaction.
 
     The quantizers are FROZEN by this module's contract, so they load
-    ONCE per sink construction and live in the closure — not two
-    parquet reads + two collect()s per trigger (VERDICT r6 ask #3).
-    All marker/journal I/O goes through the Hadoop FS shim
-    (fsio.IndexFS), so the index root may be file:/hdfs:/s3a:.
-
-    ``compact_every``: when set, the sink runs the journaled cells
-    compactor after its append whenever that many committed REAL
-    batches have accumulated — the auto-trigger that bounds the
-    (_cell, _batch) leaf count under sustained streaming (VERDICT r6
-    asks #2/#6)."""
-    from ..operators.ann_index import _leaf_batch_ids, _recover_cells
-    from .fsio import IndexFS, committed_batch_ids, ensure_protocol
-
+    ONCE per sink (on its first batch) and live in the closure — not
+    two parquet reads + two collect()s per trigger."""
     frozen: dict = {}
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, fs, batch_id: int,
+                    committed: set[str]) -> None:
         from ..operators import similarity
 
-        spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        # one-time upgrade stamp: adopt a pre-v2 index's unmarkered
-        # base build before any v2 read/recover touches it (the leaf
-        # listing is memoized and only ever taken while UNSTAMPED —
-        # zero extra LIST calls on the steady-state hot path)
-        probe: dict = {}
-
-        def _leaves():
-            if "v" not in probe:
-                probe["v"] = _leaf_batch_ids(fs)
-            return probe["v"]
-
-        ensure_protocol(fs, lambda: "-1" in _leaves(),
-                        lambda b: b in _leaves())
-        _recover_cells(fs)
         if "cb" not in frozen:
-            frozen["cb"] = load_ivfpq_codebooks(spark, index_dir)
+            frozen["cb"] = load_codebooks(bdf.sparkSession, index_dir)
         coarse, cbs = frozen["cb"]
         asg = similarity._ivfpq_assign(
             spread_batch(bdf), id_col, vec_col, coarse, round_digits
         )
         codes = similarity.ivfpq_encode(asg, cbs, m, sub_d, round_digits)
-        write_ivfpq_cells(codes, fs.uri("cells"), batch_id)
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            # committed REAL batches still owning data leaves, NOT
-            # markers (markers outlive compaction by design — counting
-            # them would re-trigger on every later batch). The
-            # directory enumeration runs once per sink lifetime to
-            # seed a closure counter; afterwards each append is +1 and
-            # a compaction resets to 0 — amortized O(1) LIST calls on
-            # the hot append path.
-            if "n_real" not in frozen:
-                committed = committed_batch_ids(fs)
-                frozen["n_real"] = sum(
-                    1
-                    for b in _leaf_batch_ids(fs)
-                    if int(b) >= 0 and b in committed
-                )
-            else:
-                frozen["n_real"] += 1
-            if frozen["n_real"] >= compact_every:
-                compact_ivfpq_cells(spark, index_dir)
-                frozen["n_real"] = 0
+        write_cells(codes, fs.uri(f"cells/batch={batch_id}"))
 
-    return sink
-
-
-def _delete_raw_batches(fs, bs: list[str]) -> None:
-    """Layout callback for the raw arrivals log: one ``_rbatch=<b>``
-    leaf per batch under ``raw/``."""
-    for b in bs:
-        fs.delete(f"raw/_rbatch={b}")
-
-
-def _raw_leaf_ids(fs) -> set[str]:
-    return {
-        name.split("=", 1)[1]
-        for name in fs.listdir("raw")
-        if name.startswith("_rbatch=")
-    }
-
-
-def compact_raw_log(spark, root_dir: str, id_col: str,
-                    vec_col: str) -> dict:
-    """Merge the auto-retrain sink's committed raw-arrival leaves into
-    one fresh negative generation — the third instantiation of the
-    shared journal protocol (LSH bands/sets, IVF-PQ cells, now the raw
-    log), closing the remaining one-leaf-per-batch growth in the
-    versioned-index story. Readers of the log (the retrain corpus
-    read) already trust only root-marker/journal-committed batches, so
-    the half-written generation is invisible until the journal
-    publishes, real batch markers survive as redelivery guards, and
-    any crash window is finished by the next recovery call. Returns
-    {'files_before', 'files_after', 'rows'}."""
-    from pyspark.sql import functions as SF
-
-    from .fsio import (
-        IndexFS,
-        committed_batch_ids,
-        count_committed_files,
-        drop_stale_generations,
-        next_generation,
-        write_journal,
-    )
-    from .fsio import recover_compaction as _recover
-
-    fs = IndexFS(spark, root_dir)
-    _recover(fs, _delete_raw_batches)
-    drop_stale_generations(
-        fs, _delete_raw_batches,
-        sorted(int(b) for b in _raw_leaf_ids(fs) if int(b) < 0),
-    )
-    committed = committed_batch_ids(fs) & _raw_leaf_ids(fs)
-    before = fs.count_files("raw")
-    if len(committed) <= 1:
-        return {"files_before": before, "files_after": before, "rows": 0}
-    rows_df = (
-        spark.read.parquet(fs.uri("raw"))
-        .filter(SF.col("_rbatch").cast("string").isin(sorted(committed)))
-        .select(SF.col(id_col), SF.col(vec_col))
-        .localCheckpoint()
-    )
-    # observe the row count inside the generation write instead of a
-    # separate count() job over the checkpointed snapshot (guide §1.2)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    rows_df = rows_df.observe(obs, SF.count(SF.lit(1)).alias("rows"))
-    gen = next_generation(fs)
-    (
-        rows_df.withColumn("_rbatch", SF.lit(int(gen)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_rbatch")
-        .parquet(fs.uri("raw"))
-    )
-    n = obs.get["rows"]
-    write_journal(fs, gen, sorted(committed))  # the atomic commit
-    _recover(fs, _delete_raw_batches)
-    # committed view only: consumed leaves keep their data for one
-    # tombstone grace cycle (in-flight readers), purged next apply
-    after = count_committed_files(fs, "raw", prefix="_rbatch=")
-    return {
-        "files_before": before,
-        "files_after": after,
-        "rows": n,
-    }
+    return index_sink(index_dir, CELLS_LAYOUT, write_batch, compact_every)
 
 
 def _auto_retrain_batch_fn(root_dir: str, base: DataFrame, id_col: str,
@@ -268,34 +145,34 @@ def _auto_retrain_batch_fn(root_dir: str, base: DataFrame, id_col: str,
     ``rebuild_swap``'s create-only commit — serving flips atomically,
     and later batches absorb against the NEW frozen quantizers.
 
-    Exactly-once machinery, all through the Hadoop FS shim:
+    Exactly-once machinery — the root is an ``index_sink`` over the
+    raw log (:data:`_RAW_LAYOUT`), all I/O through the Hadoop FS shim:
 
-    - every batch's RAW vectors land first in ``raw/_rbatch=<id>``
-      (dynamic partition overwrite of their own leaf — redelivery
-      rewrites identical bytes), so the retrain corpus is recoverable
-      from storage, not from stream history;
-    - the root-level ``_batch_<id>`` marker is created LAST and
-      short-circuits clean redeliveries;
+    - every batch's RAW vectors land first in ``raw/batch=<id>`` (an
+      overwrite of its own directory — redelivery rewrites identical
+      bytes), so the retrain corpus is recoverable from storage, not
+      from stream history;
+    - the root-level ``_batch_<id>`` marker is created LAST by the
+      sink and short-circuits clean redeliveries;
+    - a calm batch appends into ``v<v>`` through the cells sink, whose
+      own ``v<v>/_batch_<id>`` marker makes a redelivery after a crash
+      before the root marker converge;
     - the retrain branch writes ``_base_includes_<id>`` INSIDE the new
       version (via ``rebuild_swap``'s pre-commit hook, so it is
       visible iff the version is committed): a crash between the
       version commit and the root marker re-delivers the batch, and
       the note tells the sink its rows are already in the new base —
-      it just restores the marker instead of double-absorbing.
+      it just restores the marker instead of double-absorbing;
+    - after a retrain, the log's committed batches fold into one
+      generation (``compact_batched_index``) while the full log read
+      is fresh, so its directory count stays bounded.
 
     Per-version state (quantizers + the base cohort's exact error
     stats) loads once per version per sink lifetime, not per trigger.
     """
     from pyspark.sql import functions as SF
 
-    from ..operators.ann_index import (
-        load_codebooks,
-        rebuild_swap,
-        resolve_version,
-        write_cells,
-    )
-    from .fsio import IndexFS, MARKER, committed_batch_ids
-    from .fsio import recover_compaction as _recover
+    from .fsio import IndexFS
 
     state: dict = {}
 
@@ -306,29 +183,20 @@ def _auto_retrain_batch_fn(root_dir: str, base: DataFrame, id_col: str,
         ).collect()[0]
         return int(row["n"] or 0), int(row["s"] or 0)
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, fs, batch_id: int,
+                    committed: set[str]) -> None:
         from ..operators import similarity
 
         spark = bdf.sparkSession
-        fs = IndexFS(spark, root_dir)
-        if fs.exists(f"{MARKER}{batch_id}"):
-            return
-        # finish any crashed raw-log compaction before touching the log
-        _recover(fs, _delete_raw_batches)
+        rows = bdf.select(SF.col(id_col), SF.col(vec_col))
         # 1. raw arrivals log — the durable retrain corpus
-        (
-            bdf.select(SF.col(id_col), SF.col(vec_col))
-            .withColumn("_rbatch", SF.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_rbatch")
-            .parquet(fs.uri("raw"))
-        )
+        rows.write.mode("overwrite").parquet(fs.uri(f"raw/batch={batch_id}"))
         # 2. current version's quantizers + base error stats (memoized
         #    per version — reloaded only after a cutover)
         v = resolve_version(fs)
+        vdir = fs.uri(f"v{v}")
         if state.get("v") != v:
-            coarse, cbs = load_codebooks(spark, fs.uri(f"v{v}"))
+            coarse, cbs = load_codebooks(spark, vdir)
             basg = similarity._ivfpq_assign(
                 base, id_col, vec_col, coarse, round_digits
             )
@@ -338,11 +206,9 @@ def _auto_retrain_batch_fn(root_dir: str, base: DataFrame, id_col: str,
             )
             state.update(v=v, cb=(coarse, cbs), base_n=bn, base_total=btot)
         # 3. crash between version-commit and root marker: the batch's
-        #    rows are already in this version's base — just restore
-        #    the marker
-        vfs = IndexFS(spark, fs.uri(f"v{v}"))
-        if vfs.exists(f"_base_includes_{batch_id}"):
-            fs.touch(f"{MARKER}{batch_id}")
+        #    rows are already in this version's base — the sink just
+        #    restores the marker
+        if IndexFS(spark, vdir).exists(f"_base_includes_{batch_id}"):
             return
         coarse, cbs = state["cb"]
         # 4. this batch's drift under the current frozen quantizers
@@ -358,41 +224,33 @@ def _auto_retrain_batch_fn(root_dir: str, base: DataFrame, id_col: str,
         if fired:
             # committed raw batches INCLUDING compacted generations
             # (markers + journal overlay — the shared reader rule)
-            committed = sorted(
-                committed_batch_ids(fs) & _raw_leaf_ids(fs)
-            )
             corpus = base.select(SF.col(id_col), SF.col(vec_col))
-            if committed:
+            dirs = committed_table_dirs(fs, "raw", committed)
+            if dirs:
                 corpus = corpus.unionByName(
-                    spark.read.parquet(fs.uri("raw"))
-                    .filter(
-                        SF.col("_rbatch").cast("string").isin(committed)
-                    )
+                    spark.read.parquet(*dirs)
                     .select(SF.col(id_col), SF.col(vec_col))
                 )
-            corpus = corpus.unionByName(
-                bdf.select(SF.col(id_col), SF.col(vec_col))
-            )
             rebuild_swap(
-                spark, root_dir, corpus, id_col, vec_col,
-                n_cells=n_cells, m=m, sub_d=sub_d, k_star=k_star,
-                round_digits=round_digits,
+                spark, root_dir, corpus.unionByName(rows), id_col,
+                vec_col, n_cells=n_cells, m=m, sub_d=sub_d,
+                k_star=k_star, round_digits=round_digits,
                 pre_commit=lambda nvfs: nvfs.touch(
                     f"_base_includes_{batch_id}"
                 ),
             )
             state.pop("v", None)  # force reload against the new version
-            # the retrain just paid a full log read — fold the log's
-            # committed leaves into one generation while it's cheap,
-            # so the leaf count stays bounded under sustained arrival
-            compact_raw_log(spark, root_dir, id_col, vec_col)
+            compact_batched_index(spark, root_dir, _RAW_LAYOUT)
         else:
             codes = similarity.ivfpq_encode(asg, cbs, m, sub_d,
                                             round_digits)
-            write_cells(codes, fs.uri(f"v{v}/cells"), batch_id)
-            vfs.touch(f"{MARKER}{batch_id}")  # reader-trust marker
-        fs.touch(f"{MARKER}{batch_id}")  # redelivery guard, always last
-    return sink
+            index_sink(
+                vdir, CELLS_LAYOUT,
+                lambda _bdf, vfs, b, _committed: write_cells(
+                    codes, vfs.uri(f"cells/batch={b}")),
+            )(bdf, batch_id)
+
+    return index_sink(root_dir, _RAW_LAYOUT, write_batch)
 
 
 def foreach_batch_auto_retrain(stream: DataFrame, root_dir: str,
@@ -422,7 +280,7 @@ def foreach_batch_ivfpq_append(stream: DataFrame, index_dir: str,
     """Absorb streaming vector arrivals into a stored IVF-PQ index:
     encode with the frozen quantizers (loaded once, not per trigger),
     append codes exactly once per micro-batch, and — with
-    ``compact_every`` — self-compact the batch leaves so the
+    ``compact_every`` — self-compact the batch directories so the
     inventory's file count stays bounded under sustained streaming.
     Serving (``ivfpq_score`` over the probed cells) immediately sees
     the new vectors — no index rebuild."""

@@ -1,22 +1,24 @@
 """Layout-generic maintenance for growing ``table/batch=<id>``
 indexes on the shared fsio commit protocol.
 
-Six growing-index layouts append through the one sink
-(:func:`index_sink`) and compact through the one compactor
+Every growing-index layout appends through the one sink
+(:func:`index_sink`) and compacts through the one compactor
 (:func:`compact_batched_index`): the banded LSH index
 (``minhash_stream``), the exact prefix-postings index
 (``ssjoin_stream``), the embedding band index (``semantic_stream``),
 the BM25 postings (``lexical_stream``), the Naive Bayes count deltas
-(``classify_stream``) and the logistic-regression state journal
-(``linear_stream``). Each persists per-batch artifacts as one
-``<table>/batch=<id>`` directory per table, committed by a
-``_batch_<id>`` marker, and periodically folds committed batches into
-a negative GENERATION partition via the journaled, rename-free
-cutover documented in ``fsio``. The only layout-specific facts are
-the table names, each table's compaction spec and the per-batch
-write — this module parameterizes exactly those, so the crash-window
-guarantees the LSH compactor's pytest suite locks down are inherited
-by every index built on it instead of re-implemented per family.
+(``classify_stream``), the logistic-regression state journal
+(``linear_stream``), the IVF-PQ cells inventory (``ann_index``) and
+the auto-retrain raw arrivals log (``ann_maintain``). Each persists
+per-batch artifacts as one ``<table>/batch=<id>`` directory per
+table, committed by a ``_batch_<id>`` marker, and periodically folds
+committed batches into a negative GENERATION partition via the
+journaled, rename-free cutover documented in ``fsio``. The only
+layout-specific facts are the table names, each table's compaction
+spec and the per-batch write — this module parameterizes exactly
+those, so the crash-window guarantees the LSH compactor's pytest
+suite locks down are inherited by every index built on it instead
+of re-implemented per family.
 """
 
 from __future__ import annotations
@@ -221,12 +223,21 @@ def compact_batched_index(spark, index_dir: str,
 
     ``cluster_cols`` maps table name -> how to lay out the compacted
     generation: a list of join-key columns to hash-cluster on, None
-    for a plain repartition, or a CALLABLE ``fn(df, buckets) -> df``
+    for a plain repartition, a CALLABLE ``fn(df, buckets) -> df``
     for layouts the two simple forms can't express (an associative
-    SUM-merge, a sortWithinPartitions for row-group pruning). The
-    FIRST table is the probe table (file counts, legacy sentinel
-    detection, row count — counted AFTER the transform, so a merging
-    compactor reports merged rows). ``probes`` optionally overrides
+    SUM-merge, a sortWithinPartitions for row-group pruning), or
+    ``{"partition_by": [cols]}`` to hash-cluster on ``cols`` AND
+    write them as directory partitions inside the generation (the
+    IVF-PQ cells, whose serving prunes probed cells at the directory
+    listing). Each table's committed directories are read with
+    ``basePath`` at the table root, so nested directory partitions
+    come back as columns, and the generation goes to a fresh
+    ``batch=<gen>`` directory that no read of this compaction lists —
+    nothing is staged. The FIRST table is the probe table (file
+    counts, legacy sentinel detection, row count — counted AFTER the
+    transform, so a merging compactor reports merged rows); a probe
+    table whose committed view is already one generation has nothing
+    to fold, so a re-run is a no-op. ``probes`` optionally overrides
     the legacy-detection pair passed to ``ensure_protocol``
     (defaults to the standard ``<probe>/batch=-1`` sentinel probes).
     The cutover is the journaled rename-free protocol of ``fsio``:
@@ -255,16 +266,26 @@ def compact_batched_index(spark, index_dir: str,
     before = fs.count_files(probe)
     committed = committed_batch_ids(fs)
     dirs = {t: committed_table_dirs(fs, t, committed) for t in tables}
-    if not dirs[probe]:
+    ids = [d.rsplit("=", 1)[1] for d in dirs[probe]]
+    if not ids or (len(ids) == 1 and int(ids[0]) < 0):
+        # nothing committed, or already one generation: nothing to fold
         return {"files_before": before, "files_after": before,
                 "rows": 0}
     gen = next_generation(fs)
     rows = 0
     consumed: set[str] = set()
     for t in tables:
-        df = spark.read.parquet(*dirs[t])
+        df = (
+            spark.read.option("basePath", fs.uri(t))
+            .parquet(*dirs[t])
+            .drop("batch")
+        )
         spec = cluster_cols[t]
-        if callable(spec):
+        parts = []
+        if isinstance(spec, dict):
+            parts = spec["partition_by"]
+            rep = df.repartition(buckets, *parts)
+        elif callable(spec):
             rep = spec(df, buckets)
         elif spec:
             rep = df.repartition(buckets, *spec)
@@ -278,7 +299,8 @@ def compact_batched_index(spark, index_dir: str,
             # the probe table is the big one, so this halved its cost)
             obs = Observation()
             rep = rep.observe(obs, F.count(F.lit(1)).alias("rows"))
-        rep.write.mode("overwrite").parquet(fs.uri(f"{t}/batch={gen}"))
+        rep.write.mode("overwrite").partitionBy(*parts).parquet(
+            fs.uri(f"{t}/batch={gen}"))
         if obs is not None:
             rows = obs.get["rows"]
         consumed |= {d.rsplit("=", 1)[1] for d in dirs[t]}

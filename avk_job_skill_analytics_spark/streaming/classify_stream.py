@@ -47,8 +47,7 @@ __all__ = [
 
 def _sum_counts(df: DataFrame, b: int) -> DataFrame:
     """The SUM-merge compaction spec: one row per term holding the
-    summed deltas, localCheckpoint-ed so the compactor's row count and
-    write share one computation."""
+    summed deltas."""
     return (
         df.groupBy("term")
         .agg(
@@ -56,7 +55,6 @@ def _sum_counts(df: DataFrame, b: int) -> DataFrame:
             F.sum("c0").cast("long").alias("c0"),
         )
         .repartition(b)
-        .localCheckpoint()
     )
 
 
@@ -144,9 +142,9 @@ def compact_nb_counts(spark, index_dir: str, buckets: int = 1,
     consumed, so the post-compaction serve aggregates fewer rows to
     the same integers. The cutover body is the layout-generic
     ``batched_index.compact_batched_index`` with a CALLABLE layout
-    (the SUM-merge, localCheckpoint-ed so the count and the write
-    share one computation) — journal, tombstone grace, and crash
-    recovery are the shared machinery unchanged."""
+    (the SUM-merge; the compactor observes the row count inside the
+    write job) — journal, tombstone grace, and crash recovery are the
+    shared machinery unchanged."""
     return compact_batched_index(
         spark, index_dir, _LAYOUT,
         buckets=buckets, marker_horizon=marker_horizon,

@@ -1,5 +1,7 @@
 """Hadoop-FileSystem I/O + the shared exactly-once commit protocol
-for the growing streaming indexes (LSH bands/sets, IVF-PQ cells).
+for the growing streaming indexes (every ``table/batch=<id>`` layout
+of ``batched_index``: LSH bands/sets, IVF-PQ cells, the raw arrivals
+log, ...).
 
 Why not ``os.*``: on a real cluster the index directory lives on the
 CLUSTER filesystem (``hdfs://``, ``s3a://``, ``abfs://``) — the
@@ -15,8 +17,8 @@ Commit protocol — rename-free for data (VERDICT r6 ask #1):
 - **batch markers** ``_batch_<id>`` at the index root, created AFTER
   all of a batch's artifacts: a present marker short-circuits a
   streaming redelivery; a missing one makes the redelivered batch
-  rewrite identical content over itself (dynamic/partitioned
-  overwrites) and converge.
+  rewrite identical content over itself (a plain overwrite of its own
+  ``<table>/batch=<id>`` directory) and converge.
 - **compacted generations**: compaction rewrites all committed rows
   into a fresh NEGATIVE generation id (``batch=-1``, then ``-2``,
   ...; ids a foreachBatch never assigns), written DIRECTLY at the

@@ -63,7 +63,6 @@ def _newest_state(df: DataFrame, b: int) -> DataFrame:
     return (
         df.join(F.broadcast(mx), df.seq == mx.m, "left_semi")
         .repartition(b)
-        .localCheckpoint()
     )
 
 

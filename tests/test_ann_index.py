@@ -8,12 +8,20 @@ from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.operators import ann_index
 from avk_job_skill_analytics_spark.streaming.ann_maintain import (
+    _RAW_LAYOUT,
+    _auto_retrain_batch_fn,
     _ivfpq_append_batch_fn,
+)
+from avk_job_skill_analytics_spark.streaming.batched_index import (
+    committed_table_dirs,
+    compact_batched_index,
+    make_delete_batches,
 )
 from avk_job_skill_analytics_spark.streaming.fsio import (
     IndexFS,
     committed_batch_ids,
     read_journal,
+    recover_compaction,
     write_journal,
 )
 
@@ -46,61 +54,61 @@ def _served(spark, d: str, n_probe: int = 2):
     )
 
 
-def _leaf_ids(fs) -> set[str]:
+def _dir_ids(fs, table: str = "cells") -> set[str]:
+    """Batch ids owning a ``<table>/batch=<id>`` directory."""
     return {
         name.split("=", 1)[1]
-        for cd in fs.listdir("cells")
-        if cd.startswith("_cell=")
-        for name in fs.listdir(f"cells/{cd}")
-        if name.startswith("_batch=")
+        for name in fs.listdir(table)
+        if name.startswith("batch=")
     }
 
 
+def _committed_cells(spark, fs):
+    """The committed inventory rows, read the way serving reads."""
+    return sorted(
+        (int(r["_id"]), int(r["_cell"]), tuple(r["_codes"]))
+        for r in spark.read.option("basePath", fs.uri("cells"))
+        .parquet(*committed_table_dirs(fs, "cells"))
+        .collect()
+    )
+
+
 def test_cells_compaction_preserves_serving(spark, tmp_path):
-    """compact_cells merges the (_cell, _batch) leaves into one fresh
-    generation per cell: file count bounded, inventory row-identical,
-    serving hash-unchanged, and post-compaction absorption + serving
-    still work."""
+    """compact_cells merges the committed cells/batch=<id> dirs into
+    one fresh generation, still _cell-partitioned: file count bounded,
+    inventory row-identical, serving hash-unchanged, and
+    post-compaction absorption + serving still work."""
     d = str(tmp_path / "idx")
     e, sink = _grown_index(spark, d)
-
-    def committed_rows(fs):
-        com = sorted(committed_batch_ids(fs) & _leaf_ids(fs))
-        return sorted(
-            (int(r["_id"]), int(r["_cell"]), tuple(r["_codes"]))
-            for r in spark.read.parquet(f"{d}/cells")
-            .filter(F.col("_batch").cast("string").isin(com))
-            .collect()
-        )
-
     fs = IndexFS(spark, d)
-    before_rows = committed_rows(fs)
+    before_rows = _committed_cells(spark, fs)
     served_before = _served(spark, d)
     stats = ann_index.compact_cells(spark, d)
     assert stats["rows"] == len(before_rows)
     assert stats["files_after"] <= stats["files_before"]
     # the committed VIEW collapsed to the single generation; consumed
-    # leaves survive one tombstone grace cycle for in-flight readers
-    assert committed_batch_ids(fs) & _leaf_ids(fs) == {"-2"}
-    assert {"-1", "0", "1"} <= _leaf_ids(fs)
-    assert committed_rows(fs) == before_rows
+    # dirs survive one tombstone grace cycle for in-flight readers
+    assert committed_batch_ids(fs) & _dir_ids(fs) == {"-2"}
+    assert {"-1", "0", "1"} <= _dir_ids(fs)
+    assert any(n.startswith("_cell=") for n in fs.listdir("cells/batch=-2"))
+    assert _committed_cells(spark, fs) == before_rows
     assert _served(spark, d) == served_before
     # real-batch markers survive: a redelivered absorbed batch
     # short-circuits instead of re-appending into the generation
     sink(e.filter(F.col("vec_id") % 4 == 1), 0)
-    assert committed_batch_ids(fs) & _leaf_ids(fs) == {"-2"}
+    assert committed_batch_ids(fs) & _dir_ids(fs) == {"-2"}
     # and a genuinely new batch appends + serves on top
     n = e.count()
     extra = spark.createDataFrame(
         [(n + 7, [0.01] * 64)], "vec_id long, embedding array<double>"
     )
     sink(extra, 2)
-    assert committed_batch_ids(fs) & _leaf_ids(fs) == {"-2", "2"}
+    assert committed_batch_ids(fs) & _dir_ids(fs) == {"-2", "2"}
     assert len(_served(spark, d)) == len(served_before)
     # the NEXT compaction's apply purges the previous cycle's
     # tombstones — grace is one cycle, not forever
     ann_index.compact_cells(spark, d)
-    assert not ({"-1", "0", "1"} & _leaf_ids(fs))
+    assert not ({"-1", "0", "1"} & _dir_ids(fs))
 
 
 def test_cells_compaction_recovers_from_mid_apply_crash(spark, tmp_path):
@@ -115,38 +123,37 @@ def test_cells_compaction_recovers_from_mid_apply_crash(spark, tmp_path):
     sink(e.filter(F.col("vec_id") % 2 == 1).limit(5), 2)
     served = _served(spark, d)
     fs = IndexFS(spark, d)
+    delete_cells = make_delete_batches(tuple(ann_index.CELLS_LAYOUT))
     # second compaction crash-simulated mid-apply: generation -3
     # written + journal committed (consumed includes '-2'), marker
     # touched, ONE consumed batch deleted, then "crash"
     inv = (
-        spark.read.parquet(fs.uri("cells"))
-        .filter(F.col("_batch").cast("string").isin(
-            sorted(committed_batch_ids(fs))))
+        spark.read.option("basePath", fs.uri("cells"))
+        .parquet(*committed_table_dirs(fs, "cells"))
         .select("_id", "_codes", F.col("_cell").cast("long").alias("_cell"))
-        .localCheckpoint()
     )
-    ann_index.write_cells(inv, fs.uri("cells"), -3)
+    ann_index.write_cells(inv, fs.uri("cells/batch=-3"))
     write_journal(fs, -3, ["-2", "2"])
     fs.touch("_batch_-3")
-    ann_index._delete_cells_batches(fs, ["-2"])
+    delete_cells(fs, ["-2"])
     assert _served(spark, d) == served  # journal overlay: view whole
-    ann_index._recover_cells(fs)
+    recover_compaction(fs, delete_cells)
     assert read_journal(fs) is None
     # committed view is exactly the fresh generation; batch 2's data
     # is tombstoned (one grace cycle), the first cycle's tombstones
     # (-1, 0, 1) were purged by this apply
-    assert committed_batch_ids(fs) & _leaf_ids(fs) == {"-3"}
-    assert _leaf_ids(fs) == {"-3", "2"}
+    assert committed_batch_ids(fs) & _dir_ids(fs) == {"-3"}
+    assert _dir_ids(fs) == {"-3", "2"}
     assert not fs.exists("_batch_-2")
     assert _served(spark, d) == served
     # double recovery is a no-op, not data loss
-    ann_index._recover_cells(fs)
+    recover_compaction(fs, delete_cells)
     assert _served(spark, d) == served
 
 
 def test_ivfpq_auto_compaction_bounds_leaves(spark, tmp_path):
     """compact_every: sustained absorption with the sink's own
-    trigger keeps the per-cell leaf count bounded and serving
+    trigger keeps the batch-directory count bounded and serving
     identical to an uncompacted twin — no operator-initiated
     maintenance call anywhere."""
     d_plain = str(tmp_path / "plain")
@@ -154,7 +161,7 @@ def test_ivfpq_auto_compaction_bounds_leaves(spark, tmp_path):
     e, _ = _grown_index(spark, d_plain)
     _grown_index(spark, d_auto, compact_every=2)
     # two more batches: the auto run compacts again, the plain one
-    # keeps accumulating leaves
+    # keeps accumulating batch dirs
     for d, every in ((d_plain, None), (d_auto, 2)):
         sink = _ivfpq_append_batch_fn(
             d, "vec_id", "embedding", 8, 8, compact_every=every
@@ -163,15 +170,36 @@ def test_ivfpq_auto_compaction_bounds_leaves(spark, tmp_path):
         sink(e.filter(F.col("vec_id") % 8 == 3).limit(5), 3)
     fs_auto = IndexFS(spark, d_auto)
     fs_plain = IndexFS(spark, d_plain)
-    com_auto = committed_batch_ids(fs_auto) & _leaf_ids(fs_auto)
-    com_plain = committed_batch_ids(fs_plain) & _leaf_ids(fs_plain)
+    com_auto = committed_batch_ids(fs_auto) & _dir_ids(fs_auto)
+    com_plain = committed_batch_ids(fs_plain) & _dir_ids(fs_plain)
     real_plain = {b for b in com_plain if int(b) >= 0}
-    assert len(real_plain) == 4  # 0,1,2,3 all still separate leaves
+    assert len(real_plain) == 4  # 0,1,2,3 all still separate dirs
     # every trigger point absorbed the real batches out of the
-    # committed view (their leaves may linger one tombstone cycle)
+    # committed view (their dirs may linger one tombstone cycle)
     assert {b for b in com_auto if int(b) >= 0} == set()
     assert len(com_auto) < len(com_plain)
     assert _served(spark, d_auto) == _served(spark, d_plain)
+
+
+def test_empty_arrivals_batch_commits_serves_and_compacts(spark, tmp_path):
+    """A micro-batch with no rows still commits (its batch dir holds
+    no cell directory), serving reads past it, and compaction folds
+    it away with the rest."""
+    d = str(tmp_path / "idx")
+    e, sink = _grown_index(spark, d)
+    served = _served(spark, d)
+    fs = IndexFS(spark, d)
+    before_rows = _committed_cells(spark, fs)
+    sink(spark.createDataFrame([], "vec_id long, embedding array<double>"),
+         2)
+    assert fs.exists("_batch_2")
+    assert "2" in committed_batch_ids(fs) & _dir_ids(fs)
+    assert _served(spark, d) == served
+    stats = ann_index.compact_cells(spark, d)
+    assert stats["rows"] == len(before_rows)
+    assert committed_batch_ids(fs) & _dir_ids(fs) == {"-2"}
+    assert _committed_cells(spark, fs) == before_rows
+    assert _served(spark, d) == served
 
 
 def test_serve_topk_probe_degeneracy(spark, tmp_path):
@@ -236,27 +264,28 @@ def test_rebuild_swap_versioned_cutover(spark, tmp_path):
 
     served_v0 = serve()
     # crash mid-build of v1: directory exists, no commit marker —
-    # serving must keep resolving v0. Plant a STALE cells leaf from
-    # the crashed attempt (a coarse seed id the retry won't produce):
-    # build_index's dynamic partition overwrite would never touch it,
-    # so without the pre-build clear the retry would commit garbage
-    # into the full inventory (ADVICE r7 #1)
-    fs.mkdirs("v1/cells")
+    # serving must keep resolving v0. Plant what a crashed attempt
+    # could leave that the retry's build would not overwrite: a
+    # pre-commit note naming another batch and a batch dir beside
+    # the base build — without the pre-build clear the retry's
+    # commit marker would commit both
+    fs.touch("v1/_base_includes_7")
     spark.createDataFrame(
         [(999999, [1] * 8)], "_id long, _codes array<int>"
-    ).withColumn("_cell", F.lit(424242)).withColumn(
-        "_batch", F.lit(-1)
-    ).write.partitionBy("_cell", "_batch").parquet(
-        fs.uri("v1/cells"), mode="append"
-    )
+    ).withColumn("_cell", F.lit(424242)).write.partitionBy(
+        "_cell"
+    ).parquet(fs.uri("v1/cells/batch=0"))
+    fs.touch("v1/_batch_0")
     assert ann_index.resolve_version(fs) == 0
     assert serve() == served_v0
     # the real retrain clears the crashed dir, rebuilds, and cuts over
     v1 = ann_index.rebuild_swap(spark, root, e, "vec_id", "embedding")
     assert v1 == 1
     assert ann_index.resolve_version(fs) == 1
-    # the crashed attempt's stale cell is gone from the inventory
-    assert not fs.is_dir("v1/cells/_cell=424242")
+    # the crashed attempt's stale artifacts are gone
+    assert not fs.is_dir("v1/cells/batch=0")
+    assert not fs.exists("v1/_batch_0")
+    assert not fs.exists("v1/_base_includes_7")
     served_v1 = serve()
     assert served_v1 != served_v0  # retrained quantizers really serve
     # superseded version retires with ONE version of grace: v0 stays
@@ -315,11 +344,8 @@ def test_auto_retrain_policy_and_crash_windows(spark, tmp_path):
     """The self-retraining sink: calm batches absorb frozen, the
     drifted batch fires a retrain + atomic cutover, and every
     redelivery window converges — including the crash between the
-    version commit and the root marker (the _base_includes note)."""
-    from avk_job_skill_analytics_spark.streaming.ann_maintain import (
-        _auto_retrain_batch_fn,
-    )
-
+    version commit and the root marker (the _base_includes note) and
+    between a calm append's version marker and the root marker."""
     e2 = _shifted(spark.read.parquet(EMB))
     base = e2.filter(F.col("vec_id") % 4 == 0)
     root = str(tmp_path / "aroot")
@@ -335,9 +361,14 @@ def test_auto_retrain_policy_and_crash_windows(spark, tmp_path):
     sink(b0, 0)
     assert ann_index.resolve_version(fs) == 0  # calm: absorbed frozen
     assert fs.exists("_batch_0")
+    # the calm append committed through the cells sink inside v0
+    assert IndexFS(spark, fs.uri("v0")).exists("_batch_0")
+    assert _dir_ids(IndexFS(spark, fs.uri("v0"))) == {"-1", "0"}
     sink(b1, 1)
     assert ann_index.resolve_version(fs) == 1  # drifted: fired
     assert IndexFS(spark, fs.uri("v1")).exists("_base_includes_1")
+    # the retrain folded the log's committed batches into a generation
+    assert committed_batch_ids(fs) & _dir_ids(fs, "raw") == {"-1", "1"}
     sink(b2, 2)
     assert ann_index.resolve_version(fs) == 1  # calm vs NEW quantizers
 
@@ -363,6 +394,15 @@ def test_auto_retrain_policy_and_crash_windows(spark, tmp_path):
     sink(b1, 1)
     assert fs.exists("_batch_1")
     assert serve() == served
+    # crash window: the calm append committed inside v1 but the root
+    # marker was lost — the redelivery short-circuits in v1's sink
+    v1 = IndexFS(spark, fs.uri("v1"))
+    cells_before = v1.listdir("cells/batch=2")
+    fs.delete("_batch_2")
+    sink(b2, 2)
+    assert fs.exists("_batch_2")
+    assert v1.listdir("cells/batch=2") == cells_before
+    assert serve() == served
     # the final state equals a fresh reference: one-shot build on
     # base ∪ calm ∪ shifted, with the last batch absorbed frozen
     ref = str(tmp_path / "ref")
@@ -379,33 +419,24 @@ def test_auto_retrain_policy_and_crash_windows(spark, tmp_path):
             ).collect())
     )
     assert served == direct
-    # raw-log compaction: the journal protocol's third instantiation —
-    # committed leaves fold into one generation, the retrain corpus
-    # read is unchanged, and a re-run is a no-op
-    from avk_job_skill_analytics_spark.streaming.ann_maintain import (
-        _raw_leaf_ids,
-        compact_raw_log,
-    )
-    from avk_job_skill_analytics_spark.streaming.fsio import (
-        committed_batch_ids,
-    )
-
+    # raw-log compaction through the shared compactor: committed
+    # dirs fold into one generation, the retrain corpus read is
+    # unchanged, and a re-run is a no-op
     def committed_raw_ids():
-        com = committed_batch_ids(fs) & _raw_leaf_ids(fs)
         return sorted(
             r["vec_id"]
-            for r in spark.read.parquet(fs.uri("raw"))
-            .filter(F.col("_rbatch").cast("string").isin(sorted(com)))
+            for r in spark.read.parquet(*committed_table_dirs(fs, "raw"))
             .select("vec_id").collect()
         )
 
     ids_before = committed_raw_ids()
-    stats = compact_raw_log(spark, root, "vec_id", "embedding")
+    stats = compact_batched_index(spark, root, _RAW_LAYOUT)
     assert stats["rows"] == len(ids_before)
-    # committed view = the generation; consumed leaves are tombstoned
+    # committed view = the generation; consumed dirs are tombstoned
     # one grace cycle for in-flight readers
-    assert committed_batch_ids(fs) & _raw_leaf_ids(fs) == {"-1"}
+    assert committed_batch_ids(fs) & _dir_ids(fs, "raw") == {"-2"}
     assert committed_raw_ids() == ids_before  # lossless for retrains
-    again = compact_raw_log(spark, root, "vec_id", "embedding")
+    again = compact_batched_index(spark, root, _RAW_LAYOUT)
     assert again["rows"] == 0  # single committed generation: no-op
+    assert committed_batch_ids(fs) & _dir_ids(fs, "raw") == {"-2"}
     assert serve() == served  # serving untouched by log maintenance

@@ -10,13 +10,16 @@ contract checked here is the part the factories no longer spell out:
 a clean redelivery writes nothing, a pending compaction journal is
 finished before the batch reads or writes, and ``compact_every``
 folds committed batches into one generation without changing what
-is served."""
+is served. Compaction of those six plus the IVF-PQ cells and the
+auto-retrain raw log is also checked to need no ``localCheckpoint``
+staging."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from conftest import SF_DIR
 
 from avk_job_skill_analytics_spark.streaming import (
     batched_index,
@@ -237,3 +240,96 @@ def test_compact_every_leaves_one_generation(spark, tmp_path, case):
     # batches 0-1 fold into -1, then -1 and 2-3 into -2; 4 is later
     assert ids == ["-2", "4"], ids
     assert served(spark, auto) == served(spark, plain)
+
+
+EMB = f"{SF_DIR}/embeddings.parquet"
+
+
+def _grow_ivfpq(spark, d):
+    """A base IVF-PQ index over even vec_ids plus two absorbed
+    batches; the cells layout compacts through ``compact_cells``."""
+    from pyspark.sql import functions as F
+
+    from avk_job_skill_analytics_spark.operators import ann_index
+    from avk_job_skill_analytics_spark.streaming import ann_maintain
+
+    e = spark.read.parquet(EMB)
+    ann_index.build_index(
+        spark, e.filter(F.col("vec_id") % 2 == 0), "vec_id", "embedding", d)
+    sink = ann_maintain._ivfpq_append_batch_fn(d, "vec_id", "embedding",
+                                               8, 8)
+    sink(e.filter(F.col("vec_id") % 4 == 1), 0)
+    sink(e.filter(F.col("vec_id") % 4 == 3), 1)
+    q = e.filter(F.col("vec_id") < 10)
+    return (
+        lambda: ann_index.compact_cells(spark, d),
+        lambda: _rows(ann_index.serve_topk(
+            spark, d, q, "vec_id", "embedding", n_probe=2, sub_d=8, k=5)),
+    )
+
+
+def _grow_raw(spark, d):
+    """A versioned root whose auto-retrain sink logged two calm
+    batches (the ratio never fires); the raw log compacts through
+    ``compact_batched_index`` over its layout."""
+    from pyspark.sql import functions as F
+
+    from avk_job_skill_analytics_spark.operators import ann_index
+    from avk_job_skill_analytics_spark.streaming import ann_maintain
+
+    e = spark.read.parquet(EMB)
+    base = e.filter(F.col("vec_id") % 4 == 0)
+    ann_index.rebuild_swap(spark, d, base, "vec_id", "embedding")
+    sink = ann_maintain._auto_retrain_batch_fn(
+        d, base, "vec_id", "embedding", ratio_num=10 ** 6)
+    sink(e.filter(F.col("vec_id") % 4 == 1), 0)
+    sink(e.filter(F.col("vec_id") % 4 == 3), 1)
+    fs = IndexFS(spark, d)
+    return (
+        lambda: batched_index.compact_batched_index(
+            spark, d, ann_maintain._RAW_LAYOUT),
+        lambda: _rows(spark.read.parquet(*committed_table_dirs(fs, "raw"))),
+    )
+
+
+def _grow_case(case):
+    def grow(spark, d):
+        mod, factory, batches, schema, served = CASES[case]
+        _run(spark, factory(d, None), batches, schema, 3)
+        return (
+            lambda: batched_index.compact_batched_index(
+                spark, d, mod._LAYOUT),
+            lambda: served(spark, d),
+        )
+
+    return grow
+
+
+GROW = {case: _grow_case(case) for case in CASES}
+GROW["ivfpq"] = _grow_ivfpq
+GROW["raw"] = _grow_raw
+
+
+@pytest.mark.parametrize("case", sorted(GROW))
+def test_compaction_never_stages_through_local_checkpoint(
+        spark, tmp_path, monkeypatch, case):
+    """Every layout's compaction reads committed batch dirs and writes
+    a fresh generation dir, so no layout spec or compactor needs a
+    ``localCheckpoint`` staging: compacting with it raising succeeds
+    and serves what was served before."""
+    from pyspark.sql import DataFrame
+
+    d = str(tmp_path / "idx")
+    os.makedirs(d)
+    compact, served = GROW[case](spark, d)
+    view = served()
+
+    def staged(*args, **kwargs):
+        raise AssertionError("compaction staged through localCheckpoint")
+
+    with monkeypatch.context() as mp:
+        for cls in {DataFrame, type(spark.range(0))}:
+            mp.setattr(cls, "localCheckpoint", staged)
+        stats = compact()
+    assert stats["rows"] > 0
+    assert served() == view

@@ -865,11 +865,13 @@ def test_round_probe_rides_the_checkpoint_job(spark):
 
 
 def test_every_growing_index_goes_through_the_one_sink():
-    """streaming/batched_index.index_sink owns the writer-path commit
-    skeleton (marker short-circuit → protocol stamp → recovery →
-    write → marker → auto-compaction): ``ensure_protocol`` is called
-    only there and in the two IVF-PQ modules (their own leaf layout),
-    and no growing-index layout module touches a marker itself."""
+    """streaming/batched_index owns the commit protocol (marker
+    short-circuit → protocol stamp → recovery → write → marker →
+    auto-compaction, and the journaled compactor): ``ensure_protocol``,
+    ``recover_compaction`` and ``write_journal`` are called only there,
+    no growing-index layout module touches a marker itself, and the
+    IVF-PQ modules neither stage through ``localCheckpoint`` nor write
+    dynamic partition overwrites."""
     import glob
     import os
 
@@ -877,14 +879,15 @@ def test_every_growing_index_goes_through_the_one_sink():
     pkg = os.path.join(root, "avk_job_skill_analytics_spark")
     calls = {}
     for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        n = len(re.findall(r"(?<!def)ensure_protocol\(", _code_tokens(p)))
-        if n:
-            calls[os.path.relpath(p, pkg)] = n
-    assert set(calls) == {
-        os.path.join("streaming", "batched_index.py"),
-        os.path.join("streaming", "ann_maintain.py"),
-        os.path.join("operators", "ann_index.py"),
-    }, calls
+        code = _code_tokens(p)
+        for fn in ("ensure_protocol", "recover_compaction",
+                   "write_journal"):
+            n = len(re.findall(rf"(?<!def){fn}\(", code))
+            if n:
+                calls.setdefault(fn, set()).add(os.path.relpath(p, pkg))
+    one = {os.path.join("streaming", "batched_index.py")}
+    assert calls == {"ensure_protocol": one, "recover_compaction": one,
+                     "write_journal": one}, calls
     touches = {}
     for m in ("minhash_stream", "ssjoin_stream", "semantic_stream",
               "lexical_stream", "classify_stream", "linear_stream"):
@@ -893,6 +896,12 @@ def test_every_growing_index_goes_through_the_one_sink():
         if n:
             touches[m] = n
     assert touches == {}, touches
+    for rel in (("streaming", "ann_maintain.py"),
+                ("operators", "ann_index.py")):
+        code = _code_tokens(os.path.join(pkg, *rel))
+        assert "localCheckpoint(" not in code, rel
+        with open(os.path.join(pkg, *rel), encoding="utf-8") as f:
+            assert "partitionOverwriteMode" not in f.read(), rel
 
 
 def test_every_hyperplane_signature_goes_through_the_one_kernel():

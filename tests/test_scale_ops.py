@@ -403,6 +403,17 @@ def test_image_patches_tile_exactly(spark):
         assert {p["patch_id"] for p in ps} == set(range(len(ps)))
 
 
+def test_pagerank_fixedpoint_empty_edges_is_typed_empty(spark):
+    from avk_job_skill_analytics_spark.operators.graph import (
+        pagerank_fixedpoint,
+    )
+
+    out = pagerank_fixedpoint(
+        spark.createDataFrame([], "src long, dst long"))
+    assert out.schema.simpleString() == "struct<node:bigint,rank:bigint>"
+    assert out.collect() == []
+
+
 def test_pagerank_fixedpoint_matches_reference(spark):
     from avk_job_skill_analytics_spark.operators.graph import (
         pagerank_fixedpoint,

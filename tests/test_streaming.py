@@ -254,16 +254,18 @@ def test_stream_kmv_distinct_bounded_and_replay_idempotent(spark, tmp_path):
 def test_ivfpq_append_redelivery_converges(spark, tmp_path):
     """Incremental IVF-PQ append: a redelivered batch (clean replay
     AND crash replay with the marker gone) leaves the stored code
-    inventory row-identical — dynamic partition overwrite of the
-    batch's own (_cell, _batch) leaves converges."""
+    inventory row-identical — the overwrite of the batch's own
+    cells/batch=<id> directory converges."""
     import os
 
     from pyspark.sql import functions as F
 
     from avk_job_skill_analytics_spark.operators import similarity
+    from avk_job_skill_analytics_spark.operators.ann_index import (
+        write_cells,
+    )
     from avk_job_skill_analytics_spark.streaming.ann_maintain import (
         _ivfpq_append_batch_fn,
-        write_ivfpq_cells,
     )
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -280,8 +282,8 @@ def test_ivfpq_append_redelivery_converges(spark, tmp_path):
     asg = similarity._ivfpq_assign(base, "vec_id", "embedding", coarse, 6)
     cbs = similarity._ivfpq_seed_cbs(asg, 2, 8, 4, 6)
     d = str(tmp_path / "idx")
-    write_ivfpq_cells(
-        similarity.ivfpq_encode(asg, cbs, 2, 8, 6), f"{d}/cells", -1
+    write_cells(
+        similarity.ivfpq_encode(asg, cbs, 2, 8, 6), f"{d}/cells/batch=-1"
     )
     spark.createDataFrame(
         list(coarse), "cell long, cv array<double>"

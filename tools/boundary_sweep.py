@@ -33,15 +33,20 @@ Writes BOUNDARY_SWEEP.json and exits 1 on any flip.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-ROOT = "/root/repo"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
 from tools.verify_local import TABLES, table_hash  # noqa: E402
+
+# verify_local puts a fixed checkout first on sys.path at import; this
+# checkout's package must win for the __spark_entry__ import below
+sys.path.insert(0, ROOT)
 
 EPS_FP = 1e-7        # half-up offset nudge
 EPS_LIBM = 1e-12     # relative libm-output perturbation

@@ -28,10 +28,11 @@ Exit 1 if any un-allowlisted flag fires.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-ROOT = "/root/repo"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 _SIGNATURE_KERNEL = (
