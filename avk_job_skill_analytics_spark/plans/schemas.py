@@ -26,6 +26,12 @@ launches no job. The cache contract:
   path that does not exist. Both are read exactly as before, so a
   missing path raises the same ``AnalysisException``.
 - One entry per (path, settings); a new file version replaces it.
+- **Recorded entries**: a directory the package has just written with
+  Spark's parquet writer is stored by :func:`record_written` under the
+  same key, with the file statuses listed right after the write and
+  the written frame's schema in nullable form (what a plain read of
+  the directory returns), so reading it back infers nothing. A later
+  rewrite changes the statuses, and the next read is an ordinary miss.
 """
 
 from __future__ import annotations
@@ -188,6 +194,33 @@ def _cached_schema(spark, path: str) -> T.StructType | None:
     schema = spark.read.parquet(path).schema
     _SCHEMAS[where] = (statuses, schema)
     return schema
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable:
+    the form a parquet read reports for the schema a writer stored."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def record_written(spark, path: str, schema: T.StructType) -> None:
+    """Record ``schema`` for the parquet directory ``path`` that was
+    just written from a frame with that schema, so the next
+    :func:`parquet_schema` of it launches no inference job. Call it
+    right after the write, before anything else can change the files.
+    A partitioned or missing path is not cached and records nothing."""
+    key = _cache_key(spark, path)
+    if key is not None:
+        where, statuses = key
+        _SCHEMAS[where] = (statuses, _nullable(schema))
 
 
 def parquet_schema(spark, path: str) -> T.StructType:

@@ -78,16 +78,10 @@ def xlsx_sink(df: DataFrame, dir_path: str, num_files: int = 1) -> DataFrame:
     )
 
 
-def jdbc_exec(spark, url: str, *statements: str,
-              properties: dict[str, str] | None = None) -> None:
-    """Run DDL/DML statements on the JDBC target from the driver.
-
-    Spark's JDBC writer only appends/overwrites; upserts and staging
-    merges need target-side SQL. ``foreachBatch`` functions run ON THE
-    DRIVER, so a driver-side ``java.sql.DriverManager`` connection is
-    the correct (and cluster-valid) place to issue them — the bulk
-    rows still move through the distributed JDBC writer, only the
-    set-based merge statements run here."""
+def jdbc_connect(spark, url: str,
+                 properties: dict[str, str] | None = None):
+    """A driver-side ``java.sql.Connection`` to the JDBC target; the
+    caller closes it."""
     props = properties or {}
     jprops = spark._jvm.java.util.Properties()
     for k in ("user", "password"):
@@ -99,9 +93,21 @@ def jdbc_exec(spark, url: str, *statements: str,
         # after which DriverManager reports "no suitable driver" even
         # though the class loads fine.
         cls = spark._jvm.java.lang.Class.forName(props["driver"])
-        conn = cls.newInstance().connect(url, jprops)
-    else:
-        conn = spark._jvm.java.sql.DriverManager.getConnection(url, jprops)
+        return cls.newInstance().connect(url, jprops)
+    return spark._jvm.java.sql.DriverManager.getConnection(url, jprops)
+
+
+def jdbc_exec(spark, url: str, *statements: str,
+              properties: dict[str, str] | None = None) -> None:
+    """Run DDL/DML statements on the JDBC target from the driver.
+
+    Spark's JDBC writer only appends/overwrites; upserts and staging
+    merges need target-side SQL. ``foreachBatch`` functions run ON THE
+    DRIVER, so a driver-side ``java.sql.DriverManager`` connection is
+    the correct (and cluster-valid) place to issue them — the bulk
+    rows still move through the distributed JDBC writer, only the
+    set-based merge statements run here."""
+    conn = jdbc_connect(spark, url, properties)
     try:
         st = conn.createStatement()
         for sql in statements:
@@ -121,28 +127,31 @@ def compact_parquet(spark, src_path: str, dst_path: str,
     tiny file. Rewrite ``src_path`` into ``dst_path`` with
     ``ceil(total_bytes / target_mb)`` output files of even size.
 
-    File sizes come from a driver-side directory listing (Hadoop
-    FileSystem — metadata only); the rewrite is one round-robin
+    File sizes come from one driver-side listing through
+    ``streaming.fsio.IndexFS`` (Hadoop FileSystem — metadata only).
+    The source schema comes from ``plans.schemas.parquet_schema``, so
+    a directory the package just wrote and recorded is read with no
+    footer-inference job, and ``dst_path``'s schema is recorded the
+    same way after the write. The rewrite is one round-robin
     repartition, which balances output files regardless of input
     skew and needs no data-dependent statistics. Returns
     {n_src_files, src_bytes, n_out_files} so callers can log the
     before/after. Compact per partition directory in a date-
     partitioned table to keep pruning intact."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = p.getFileSystem(conf)
-    files = [
-        f for f in fs.listStatus(p)
-        if f.isFile() and not f.getPath().getName().startswith("_")
-    ]
-    total = sum(f.getLen() for f in files)
+    from ..plans.schemas import parquet_schema, record_written
+    from ..streaming.fsio import IndexFS
+
+    schema = parquet_schema(spark, src_path)
+    _, statuses = IndexFS(spark, src_path).statuses()
+    sizes = [length for name, is_dir, length, _ in statuses
+             if not is_dir and not name.startswith("_")]
+    total = sum(sizes)
     n_out = max(1, -(-total // (target_mb * 1024 * 1024)))
-    spark.read.parquet(src_path).repartition(n_out).write.mode(
-        "overwrite"
-    ).parquet(dst_path)
+    spark.read.schema(schema).parquet(src_path).repartition(
+        n_out).write.mode("overwrite").parquet(dst_path)
+    record_written(spark, dst_path, schema)
     return {
-        "n_src_files": len(files),
+        "n_src_files": len(sizes),
         "src_bytes": int(total),
         "n_out_files": int(n_out),
     }

@@ -288,7 +288,10 @@ def stateful_user_stats(
             }
         )
 
-    return events.groupBy(key_col).applyInPandasWithState(
+    # update reads only these: projecting first keeps the other
+    # columns out of the shuffle and the per-key Arrow batches
+    return events.select(key_col, ts_col, "value").groupBy(
+        key_col).applyInPandasWithState(
         update,
         out_schema,
         state_schema,

@@ -84,3 +84,109 @@ def test_foreach_batch_jdbc_upsert_merges_and_replays(spark, derby_url):
         2: (10, 102, 3.0),
         3: (5, 104, 4.0),
     }
+
+
+# ------------------------------------- the registry's one warehouse
+def _oracle_digest(sf_dir, name):
+    import duckdb
+
+    from avk_job_skill_analytics_spark.registry import all_oracles
+    from tools.verify_local import TABLES, table_hash
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    res = con.execute(all_oracles()[name])
+    cols = [d[0] for d in res.description]
+    rows = res.fetchall()
+    return len(rows), sorted(cols), table_hash(cols, rows)
+
+
+def _warehouse_schemas(spark, url):
+    conn = sinks.jdbc_connect(spark, url, DERBY_PROPS)
+    try:
+        found = conn.createStatement().executeQuery(
+            "SELECT SCHEMANAME FROM SYS.SYSSCHEMAS")
+        names = set()
+        while found.next():
+            names.add(found.getString(1))
+        return names
+    finally:
+        conn.close()
+
+
+def test_s6_queries_share_one_warehouse_and_drop_their_schemas(
+        spark, monkeypatch):
+    """upsert → roundtrip → upsert in one session: each equals its
+    oracle, each works in a schema of its own in the process's one
+    warehouse, and none of its schemas outlives the call."""
+    from avk_job_skill_analytics_spark.registry import all_queries, io_queries
+    from tools.verify_local import table_hash
+
+    from conftest import SF_DIR
+
+    created = []
+    exec_ = sinks.jdbc_exec
+
+    def spy(spark_, url, *statements, **kw):
+        created.extend(s.split()[-1] for s in statements
+                       if s.startswith("CREATE SCHEMA "))
+        return exec_(spark_, url, *statements, **kw)
+
+    monkeypatch.setattr(sinks, "jdbc_exec", spy)
+    qs = all_queries()
+    urls = set()
+    for name in ("s6_jdbc_stream_upsert", "s6_jdbc_roundtrip",
+                 "s6_jdbc_stream_upsert"):
+        before = len(created)
+        df = qs[name](spark, SF_DIR)
+        cols, rows = df.columns, [tuple(r) for r in df.collect()]
+        assert (len(rows), sorted(cols), table_hash(cols, rows)) == (
+            _oracle_digest(SF_DIR, name)), name
+        assert len(created) == before + 1, created
+        url = io_queries._warehouse(spark)
+        urls.add(url)
+        assert not set(created) & _warehouse_schemas(spark, url), created
+    assert len(urls) == 1 and len(set(created)) == 3, (urls, created)
+
+
+def test_warehouse_directory_is_removed_at_exit(tmp_path):
+    """A process that ran an S6 query leaves no warehouse behind: the
+    exit hook shuts the engine down and removes its directory."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from conftest import SF_DIR
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    script = textwrap.dedent(f"""
+        import os, sys
+        sys.path.insert(0, {root!r})
+        from avk_job_skill_analytics_spark.plans.session import get_spark
+        from avk_job_skill_analytics_spark.registry import all_queries
+        from avk_job_skill_analytics_spark.registry import io_queries
+
+        spark = get_spark(app_name="warehouse-exit", master="local[2]",
+                          shuffle_partitions=2)
+        n = all_queries()["s6_jdbc_roundtrip"](spark, {SF_DIR!r}).count()
+        url = io_queries._warehouse(spark)
+        d = os.path.dirname(url[len("jdbc:derby:"):])
+        print("RESULT", n, d, os.path.isdir(d))
+    """)
+    env = dict(os.environ, TMPDIR=str(scratch), SPARK_DRIVER_MEMORY="1g")
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    line = next((x for x in out.stdout.splitlines()
+                 if x.startswith("RESULT ")), None)
+    assert line is not None, out.stderr[-3000:]
+    _, n, d, existed = line.split()
+    assert int(n) > 0 and existed == "True"
+    assert d.startswith(str(scratch)), d
+    assert not os.path.exists(d)
+    assert not any(p.name.startswith("derby_warehouse_")
+                   for p in scratch.iterdir())

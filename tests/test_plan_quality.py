@@ -1096,3 +1096,67 @@ def test_manifest_frames_start_no_python_worker(spark, tmp_path):
     assert any("LocalTableScan" in p for p in plans), plans
     assert not any("ExistingRDD" in p for p in plans), plans
     assert m.loaded().count() == 10
+
+
+def test_compact_fixture_build_writes_from_one_task_and_infers_nothing(
+        spark, queries):
+    """io_compact_roundtrip's fixture build, with load()'s events
+    schema warm, fires 4 jobs: the one-partition count, the one-task
+    write of the accreted files and the compaction's shuffle and
+    write. Every one belongs to a SQL execution, so none is a
+    footer-inference job: the accreted and compacted directories are
+    read back through their recorded schemas."""
+    import os
+
+    from avk_job_skill_analytics_spark.registry import io_queries
+
+    queries["io_compact_roundtrip"](spark, SF_DIR)
+    io_queries._COMPACT_DIRS.pop(SF_DIR)
+    counted = []
+    execs = _new_executions(spark, lambda: counted.append(I.build_jobs(
+        spark, lambda: queries["io_compact_roundtrip"](spark, SF_DIR))[1]))
+    assert counted == [4], counted
+    assert sum(e.jobs().size() for e in execs) == 4
+    small = os.path.join(io_queries._COMPACT_DIRS[SF_DIR], "small")
+    files = [f for f in os.listdir(small) if f.endswith(".parquet")]
+    assert len(files) >= 40, files
+    # part-<task>-<uuid>-c<seq>: one task wrote them all
+    assert {f.split("-")[1] for f in files} == {"00000"}, files
+
+
+def test_warehouse_database_is_made_in_one_place():
+    """registry.io_queries._warehouse is the only code that names a
+    Derby URL or creates a database: ``jdbc:derby:`` and
+    ``create=true`` appear in the package, tools/, bench.py and
+    __spark_entry__.py only inside it, so no S6 call can make a
+    database of its own again."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, f)
+             for f in ("bench.py", "__spark_entry__.py")] + [
+        p for d in ("avk_job_skill_analytics_spark", "tools")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    ]
+    found = set()
+    for p in files:
+        with open(p, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        tops = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)):
+                continue
+            for token in ("jdbc:derby:", "create=true"):
+                if token in node.value:
+                    owner = next((t.name for t in tops
+                                  if t.lineno <= node.lineno
+                                  <= t.end_lineno), None)
+                    found.add((os.path.relpath(p, root), owner, token))
+    where = os.path.join("avk_job_skill_analytics_spark", "registry",
+                         "io_queries.py")
+    assert found == {(where, "_warehouse", "jdbc:derby:"),
+                     (where, "_warehouse", "create=true")}, found

@@ -136,3 +136,66 @@ def test_partitioned_directory_is_not_cached(spark, tmp_path):
     assert "k" in got.columns
     assert not any(where.endswith(f"{d}/part.parquet")
                    for where, _ in schemas._SCHEMAS)
+
+
+def _uncached(spark, path):
+    return spark.read.parquet(path).schema
+
+
+def _recorded_hit(spark, path):
+    """The cached schema of ``path``, asserting it came with no job."""
+    got, jobs = build_jobs(spark, lambda: schemas.parquet_schema(spark, path))
+    assert jobs == 0, path
+    return got
+
+
+@pytest.mark.parametrize("which", ["small", "compacted"])
+def test_recorded_fixture_schema_matches_uncached_read(spark, which):
+    """io_compact_roundtrip's fixture records its accreted ``small`` dir
+    and compact_parquet records its output: both read back with no
+    inference job and equal what a plain read infers."""
+    import os
+
+    from avk_job_skill_analytics_spark.registry import io_queries
+
+    io_queries._COMPACT_DIRS.pop(SF_DIR, None)
+    compacted = io_queries._compacted_events(spark, SF_DIR)
+    path = os.path.join(os.path.dirname(compacted), which)
+    assert _recorded_hit(spark, path) == _uncached(spark, path)
+
+
+def test_recorded_schema_is_the_nullable_form(spark, tmp_path):
+    from avk_job_skill_analytics_spark.sources.sinks import compact_parquet
+
+    df = spark.range(6).groupBy((F.col("id") % 2).alias("k")).agg(
+        F.count("id").alias("n")
+    ).select(
+        "k", "n", F.lit(1).alias("one"),
+        F.array(F.lit(1)).alias("arr"),
+        F.create_map(F.lit("a"), F.lit(2)).alias("m"),
+        F.struct(F.lit(3).alias("x")).alias("st"),
+    )
+    assert not df.schema["n"].nullable and not df.schema["one"].nullable
+    path = str(tmp_path / "written")
+    df.write.parquet(path)
+    schemas.record_written(spark, path, df.schema)
+    got = _recorded_hit(spark, path)
+    assert got == _uncached(spark, path) != df.schema
+    dst = str(tmp_path / "compacted")
+    compact_parquet(spark, path, dst)
+    assert _recorded_hit(spark, dst) == _uncached(spark, dst) == got
+
+
+def test_overwritten_recorded_dir_is_a_miss(spark, tmp_path):
+    path = str(tmp_path / "t")
+    first = spark.range(3)
+    first.write.parquet(path)
+    schemas.record_written(spark, path, first.schema)
+    assert _recorded_hit(spark, path) == _uncached(spark, path)
+
+    spark.range(3).selectExpr("CAST(id AS STRING) AS id", "id AS n").write.mode(
+        "overwrite").parquet(path)
+    got, jobs = build_jobs(spark, lambda: schemas.parquet_schema(spark, path))
+    assert jobs == 1
+    assert got == _uncached(spark, path)
+    assert got.fieldNames() == ["id", "n"]

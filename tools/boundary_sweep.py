@@ -44,10 +44,6 @@ import duckdb  # noqa: E402
 
 from tools.verify_local import TABLES, table_hash  # noqa: E402
 
-# verify_local puts a fixed checkout first on sys.path at import; this
-# checkout's package must win for the __spark_entry__ import below
-sys.path.insert(0, ROOT)
-
 EPS_FP = 1e-7        # half-up offset nudge
 EPS_LIBM = 1e-12     # relative libm-output perturbation
 

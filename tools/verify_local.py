@@ -29,8 +29,9 @@ import os
 import sys
 import time
 
-ROOT = "/root/repo"
-sys.path.insert(0, ROOT)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if ROOT not in sys.path:
+    sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
