@@ -134,11 +134,9 @@ def build_index(spark, corpus: DataFrame, id_col: str, vec_col: str,
     )
     # commit the base build under the shared marker protocol: readers
     # (serve_topk, compact_cells) only trust marker-committed batches
-    from ..streaming.fsio import PROTOCOL, IndexFS
+    from ..streaming.fsio import IndexFS
 
-    fs = IndexFS(spark, index_dir)
-    fs.touch("_batch_-1")
-    fs.touch(PROTOCOL)  # fresh roots are v2 from birth
+    IndexFS(spark, index_dir).touch("_batch_-1")
     return coarse, cbs
 
 
@@ -157,10 +155,7 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
     collects)."""
     from . import similarity
 
-    from ..streaming.batched_index import (
-        committed_table_dirs,
-        serving_batch_ids,
-    )
+    from ..streaming.batched_index import committed_table_dirs
     from ..streaming.fsio import IndexFS
 
     coarse, cbs = load_codebooks(spark, index_dir)
@@ -195,7 +190,7 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
     # append's half-written dir is invisible; compaction's journal
     # overlay swaps generations atomically), with basePath at cells/
     # so every dir's _cell subdirectories read as one partition column
-    dirs = committed_table_dirs(fs, "cells", serving_batch_ids(fs, "cells"))
+    dirs = committed_table_dirs(fs, "cells")
     inv = (
         spark.read.option("basePath", fs.uri("cells"))
         .parquet(*dirs)
@@ -218,24 +213,9 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
     return similarity.ivfpq_score(inv, probes, k)
 
 
-def resolve_version(fs) -> int | None:
-    """Highest committed index version under a versioned root (a
-    ``_commit_index_<v>`` marker whose ``v<v>`` directory exists) —
-    the same create-only resolution discipline as the upsert state
-    cutover: no pointer file to overwrite, no rename, no window where
-    a reader resolves a half-built index."""
-    versions = sorted(
-        (
-            int(n[len("_commit_index_"):])
-            for n in fs.listdir()
-            if n.startswith("_commit_index_")
-        ),
-        reverse=True,
-    )
-    for v in versions:
-        if fs.is_dir(f"v{v}"):
-            return v
-    return None
+# a versioned root's cutover (fsio.Cutover): index version v<v>,
+# committed by _commit_index_<v>
+VERSIONS = ("_commit_index_", "v{}")
 
 
 def rebuild_swap(spark, root_dir: str, corpus: DataFrame, id_col: str,
@@ -259,40 +239,31 @@ def rebuild_swap(spark, root_dir: str, corpus: DataFrame, id_col: str,
     IndexFS after the build but BEFORE the commit marker — extra
     per-version metadata written here (e.g. the auto-retrain sink's
     ``_base_includes_<batch>`` note) becomes visible atomically with
-    the version itself."""
-    from ..streaming.fsio import IndexFS
+    the version itself. A root written before round 7 is no longer
+    adopted."""
+    from ..streaming.fsio import Cutover, IndexFS
 
     fs = IndexFS(spark, root_dir)
-    cur = resolve_version(fs)
+    cut = Cutover(fs, *VERSIONS)
+    cur = cut.resolve()
     v = 0 if cur is None else cur + 1
     # a prior rebuild may have crashed mid-build at this same version:
     # its uncommitted dir may hold artifacts this build would not
     # overwrite (a pre-commit note naming another batch, a batch dir
     # beside the base build) that the marker touch below would commit
     # — clearing it makes the retry a genuinely fresh build.
-    fs.delete(f"v{v}")
-    build_index(spark, corpus, id_col, vec_col, fs.uri(f"v{v}"),
+    fs.delete(cut.path(v))
+    vdir = fs.uri(cut.path(v))
+    build_index(spark, corpus, id_col, vec_col, vdir,
                 n_cells=n_cells, m=m, sub_d=sub_d, k_star=k_star,
                 round_digits=round_digits)
     if pre_commit is not None:
-        pre_commit(IndexFS(spark, fs.uri(f"v{v}")))
-    fs.touch(f"_commit_index_{v}")  # the atomic cutover
-    # retire with one version of GRACE: the immediately-superseded
-    # version stays committed so a reader that resolved it an instant
-    # before the cutover still finds its files (snapshot isolation for
-    # in-flight queries — the standard two-version discipline); only
-    # versions at least two generations back retire, commit-file-first
-    # so a crash between the deletes leaves an uncommitted dir, never
-    # a committed dangle
-    for n in fs.listdir():
-        if n.startswith("_commit_index_") and int(
-            n[len("_commit_index_"):]
-        ) < v - 1:
-            fs.delete(n)
-    for n in fs.listdir():
-        if (n.startswith("v") and n[1:].isdigit()
-                and int(n[1:]) < v - 1):
-            fs.delete(n)
+        pre_commit(IndexFS(spark, vdir))
+    cut.commit(v)
+    # one version of GRACE: a reader that resolved the superseded
+    # version an instant before the cutover still finds its files
+    # (snapshot isolation for in-flight queries)
+    cut.retire(v)
     return v
 
 
@@ -301,15 +272,16 @@ def serve_current(spark, root_dir: str, queries: DataFrame, id_col: str,
                   k: int = 5, round_digits: int = 6) -> DataFrame:
     """Serve from the versioned root: resolve the highest committed
     version, then the standard probed-cell stored-index retrieval."""
-    from ..streaming.fsio import IndexFS
+    from ..streaming.fsio import Cutover, IndexFS
 
     fs = IndexFS(spark, root_dir)
-    v = resolve_version(fs)
+    cut = Cutover(fs, *VERSIONS)
+    v = cut.resolve()
     if v is None:
         raise FileNotFoundError(
             f"no committed index version under {root_dir}"
         )
-    return serve_topk(spark, fs.uri(f"v{v}"), queries, id_col, vec_col,
+    return serve_topk(spark, fs.uri(cut.path(v)), queries, id_col, vec_col,
                       n_probe=n_probe, sub_d=sub_d, k=k,
                       round_digits=round_digits)
 

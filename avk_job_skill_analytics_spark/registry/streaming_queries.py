@@ -951,10 +951,10 @@ def stream_index_auto_retrain(spark, sf_dir):
             ),
         )
         # the policy must have fired exactly once, on the shifted batch
-        from ..streaming.fsio import IndexFS
+        from ..streaming.fsio import Cutover, IndexFS
 
         fs = IndexFS(spark, root)
-        assert ann_index.resolve_version(fs) == 1
+        assert Cutover(fs, *ann_index.VERSIONS).resolve() == 1
         assert IndexFS(spark, fs.uri("v1")).exists("_base_includes_1")
         _AUTO_RETRAIN_ROOTS[sf_dir] = root
     root = _AUTO_RETRAIN_ROOTS[sf_dir]

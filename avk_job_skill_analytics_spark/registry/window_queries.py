@@ -11,7 +11,8 @@ design point wants them).
 - ``agg_percentiles`` — exact interpolated percentiles per group
   (both engines use the same linear interpolation).
 - ``agg_approx_distinct`` — HyperLogLog++ distinct (sketch values are
-  engine-specific → rows-only check; the exact twin is a2).
+  engine-specific → rows-only check; tier-1 bounds its error against
+  the exact distinct count).
 """
 
 from __future__ import annotations
@@ -296,7 +297,8 @@ def agg_approx_distinct(spark, sf_dir):
     """A2 at the 100 TB design point: HyperLogLog++ distinct customers
     per order status (mergeable sketch, no exact-distinct shuffle).
     Estimates are engine-specific, so the driver records rows-only;
-    the exact semantics are covered by a2_distinct_counts."""
+    tests/test_scale_ops.py::test_approx_distinct_near_exact holds
+    each estimate within 3 × rsd of the exact ``countDistinct``."""
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.approx_count_distinct("o_custkey", 0.02).alias("approx_customers")

@@ -30,9 +30,9 @@ from pyspark.sql import DataFrame
 
 from ..operators.ann_index import (
     CELLS_LAYOUT,
+    VERSIONS,
     load_codebooks,
     rebuild_swap,
-    resolve_version,
     write_cells,
 )
 from .batched_index import (
@@ -172,7 +172,7 @@ def _auto_retrain_batch_fn(root_dir: str, base: DataFrame, id_col: str,
     """
     from pyspark.sql import functions as SF
 
-    from .fsio import IndexFS
+    from .fsio import Cutover, IndexFS
 
     state: dict = {}
 
@@ -193,8 +193,9 @@ def _auto_retrain_batch_fn(root_dir: str, base: DataFrame, id_col: str,
         rows.write.mode("overwrite").parquet(fs.uri(f"raw/batch={batch_id}"))
         # 2. current version's quantizers + base error stats (memoized
         #    per version — reloaded only after a cutover)
-        v = resolve_version(fs)
-        vdir = fs.uri(f"v{v}")
+        cut = Cutover(fs, *VERSIONS)
+        v = cut.resolve()
+        vdir = fs.uri(cut.path(v))
         if state.get("v") != v:
             coarse, cbs = load_codebooks(spark, vdir)
             basg = similarity._ivfpq_assign(

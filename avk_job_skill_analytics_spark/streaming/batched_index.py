@@ -32,8 +32,6 @@ from .fsio import (
     committed_batch_ids,
     count_committed_files,
     drop_stale_generations,
-    ensure_protocol,
-    legacy_overlay_ids,
     next_generation,
     recover_compaction,
     retire_real_markers,
@@ -43,7 +41,6 @@ from .fsio import (
 __all__ = [
     "make_delete_batches",
     "committed_table_dirs",
-    "serving_batch_ids",
     "index_sink",
     "compact_batched_index",
     "spread_batch",
@@ -116,14 +113,6 @@ def make_delete_batches(tables: tuple[str, ...]):
     return _delete
 
 
-def _layout_probes(fs: IndexFS, probe: str):
-    """(legacy_gen_probe, batch_dir_probe) for ``ensure_protocol`` /
-    ``legacy_overlay_ids``: a layout's pre-v2 sentinel is an
-    unmarkered ``<probe>/batch=-1`` directory."""
-    return (lambda: fs.is_dir(f"{probe}/batch=-1"),
-            lambda b: fs.is_dir(f"{probe}/batch={b}"))
-
-
 def committed_table_dirs(fs: IndexFS, table: str,
                          committed: set[str] | None = None
                          ) -> list[str]:
@@ -143,16 +132,6 @@ def committed_table_dirs(fs: IndexFS, table: str,
     ]
 
 
-def serving_batch_ids(fs: IndexFS, probe: str) -> set[str]:
-    """The committed view of a READ-ONLY serving path: the committed
-    batch ids plus, on a pre-v2 root, the legacy ``batch=-1``
-    sentinel (``fsio.legacy_overlay_ids``) — serving never writes the
-    protocol stamp; the next writer does."""
-    return committed_batch_ids(fs) | legacy_overlay_ids(
-        fs, *_layout_probes(fs, probe)
-    )
-
-
 def index_sink(index_dir: str, layout: dict, write_batch,
                compact_every: int | None = None):
     """The ``foreachBatch`` body every growing-index layout appends
@@ -160,10 +139,8 @@ def index_sink(index_dir: str, layout: dict, write_batch,
 
     1. a present ``_batch_<id>`` marker short-circuits a clean
        redelivery (nothing is written);
-    2. the writer-path protocol stamp (``ensure_protocol``, standard
-       ``<probe>/batch=-1`` sentinel probes) and ``recover_compaction``
-       finish any journal-committed compaction before this batch
-       reads the index;
+    2. ``recover_compaction`` finishes any journal-committed
+       compaction before this batch reads the index;
     3. ONE committed-set resolution (root listing + journal read) is
        handed to ``write_batch(bdf, fs, batch_id, committed)``, which
        writes every artifact of the batch as ``<table>/batch=<id>``
@@ -189,7 +166,6 @@ def index_sink(index_dir: str, layout: dict, write_batch,
         fs = IndexFS(bdf.sparkSession, index_dir)
         if fs.exists(f"{MARKER}{batch_id}"):
             return
-        ensure_protocol(fs, *_layout_probes(fs, probe))
         recover_compaction(fs, delete_fn)
         committed = committed_batch_ids(fs)
         write_batch(bdf, fs, batch_id, committed)
@@ -214,8 +190,7 @@ def index_sink(index_dir: str, layout: dict, write_batch,
 def compact_batched_index(spark, index_dir: str,
                           cluster_cols: dict,
                           buckets: int = 1,
-                          marker_horizon: int = 1000,
-                          probes=None) -> dict:
+                          marker_horizon: int = 1000) -> dict:
     """Fold every COMMITTED ``batch=<id>`` directory into one fresh
     generation partition per table — the file-count bound that keeps
     a growing index's per-trigger listing from degrading as batches
@@ -234,14 +209,11 @@ def compact_batched_index(spark, index_dir: str,
     come back as columns, and the generation goes to a fresh
     ``batch=<gen>`` directory that no read of this compaction lists —
     nothing is staged. The FIRST table is the probe table (file
-    counts, legacy sentinel detection, row count — counted AFTER the
-    transform, so a merging compactor reports merged rows); a probe
-    table whose committed view is already one generation has nothing
-    to fold, so a re-run is a no-op. ``probes`` optionally overrides
-    the legacy-detection pair passed to ``ensure_protocol``
-    (defaults to the standard ``<probe>/batch=-1`` sentinel probes).
-    The cutover is the journaled rename-free protocol of ``fsio``:
-    write the generation directly at its final
+    counts and row count — counted AFTER the transform, so a merging
+    compactor reports merged rows); a probe table whose committed
+    view is already one generation has nothing to fold, so a re-run
+    is a no-op. The cutover is the journaled rename-free protocol of
+    ``fsio``: write the generation directly at its final
     (invisible-until-committed) path, publish the journal atomically,
     apply idempotently — every crash window recovers via
     ``recover_compaction``, consumed data survives one tombstone
@@ -253,7 +225,6 @@ def compact_batched_index(spark, index_dir: str,
     probe = tables[0]
     delete_fn = make_delete_batches(tables)
     fs = IndexFS(spark, index_dir)
-    ensure_protocol(fs, *(probes or _layout_probes(fs, probe)))
     recover_compaction(fs, delete_fn)
     # reclaim half-written generations from a pre-commit crash
     stale = [

@@ -34,7 +34,6 @@ from .batched_index import (
     committed_table_dirs,
     compact_batched_index,
     index_sink,
-    serving_batch_ids,
 )
 from .fsio import IndexFS
 
@@ -107,12 +106,10 @@ def serve_nb_weights(spark, index_dir: str) -> DataFrame:
     the fixed-point log-likelihood-ratio weights — bit-identical to
     batch-training on the union of committed arrivals, because the
     sufficient statistics are exact integers and the one float op per
-    term consumes identical operands. Read-only (legacy overlay, no
-    stamping)."""
+    term consumes identical operands. Read-only: nothing is written
+    to the index root."""
     fs = IndexFS(spark, index_dir)
-    dirs = committed_table_dirs(
-        fs, "counts", serving_batch_ids(fs, "counts")
-    )
+    dirs = committed_table_dirs(fs, "counts")
     if not dirs:
         return tiny_df(spark, [], "term string, w_fp long")
     cnt = (

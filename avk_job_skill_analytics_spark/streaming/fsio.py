@@ -1,7 +1,10 @@
-"""Hadoop-FileSystem I/O + the shared exactly-once commit protocol
-for the growing streaming indexes (every ``table/batch=<id>`` layout
-of ``batched_index``: LSH bands/sets, IVF-PQ cells, the raw arrivals
-log, ...).
+"""Hadoop-FileSystem I/O + the two shared exactly-once commit
+protocols: the journaled one for the growing streaming indexes (every
+``table/batch=<id>`` layout of ``batched_index``: LSH bands/sets,
+IVF-PQ cells, the raw arrivals log, ...) and the versioned cutover
+(:class:`Cutover`) for state and index roots that are rewritten
+whole per commit (the upsert states, the partitioned state's buckets,
+``ann_index.rebuild_swap``'s index versions).
 
 Why not ``os.*``: on a real cluster the index directory lives on the
 CLUSTER filesystem (``hdfs://``, ``s3a://``, ``abfs://``) — the
@@ -48,20 +51,28 @@ Commit protocol — rename-free for data (VERDICT r6 ask #1):
   write is guarded by the generation id so a re-run never purges the
   list it just published).
 
-- **protocol stamp + legacy migration** ``_protocol_v2``: pre-round-7
-  roots committed their compacted data as an UNMARKERED ``batch=-1``
-  sentinel with a list-form journal. On first contact, a v2 WRITER
-  stamps the root; if the root predates the stamp, carries an
-  unmarkered ``batch=-1``, and the adoption evidence holds (some real
-  marker's data dir already consumed, or no real markers at all —
-  see ``_legacy_adoptable``; a crashed pre-commit generation matches
-  neither and stays garbage), that generation is adopted as committed
-  instead of being silently excluded and then destroyed as a stale
-  generation (ADVICE r7 #3). Read-only serving paths never write:
-  they union ``legacy_overlay_ids`` into their committed view and
-  leave the durable stamp to the next writer. Once the stamp exists,
-  an unmarkered negative generation is what the v2 protocol says it
-  is: pre-commit garbage.
+Versioned cutover — one :class:`Cutover` per versioned root (or per
+bucket of the partitioned state):
+
+- **resolve**: version ``v`` lives in its own directory and is
+  committed by a create-only file ``<commit prefix><v>`` at the root;
+  readers take the highest committed version whose directory exists
+  (a commit file without its directory is skipped). No pointer file
+  is overwritten and no directory renamed, so a higher-numbered
+  directory that a crash left uncommitted is never resolved, and the
+  next writer of that version overwrites it before committing.
+- **commit**: touch the marker — the single atomic cutover point.
+- **retire**: keep the new version and the highest older committed
+  one (one version of grace for a reader that resolved it an instant
+  before the cutover), delete every other commit file FIRST and its
+  directory after, so a crash between the two deletes leaves an
+  uncommitted directory (reclaimed by the next retire), never a
+  committed file naming a half-deleted one.
+
+Every root uses protocol v2 from birth: an unmarkered negative
+generation is pre-commit garbage, and a root written before round 7
+(an unmarkered committed ``batch=-1`` sentinel, a list-form journal,
+a rename-swapped ``current/`` upsert state) is no longer adopted.
 
 The only rename anywhere is the tmp→final swap of the journal file
 itself: atomic on HDFS/POSIX; on S3A the copy half is one atomic PUT,
@@ -76,7 +87,6 @@ import json
 MARKER = "_batch_"
 JOURNAL = "_compact_commit"
 RETIRED = "_retired"
-PROTOCOL = "_protocol_v2"
 
 
 def _is_not_found(exc: Exception) -> bool:
@@ -239,19 +249,11 @@ class IndexFS:
 
 def read_journal(fs: IndexFS) -> dict | None:
     """The pending compaction commit, or None. ``{"gen": int,
-    "consumed": [str, ...]}``. A pre-round-7 journal was a bare
-    consumed LIST (its generation was always the ``batch=-1``
-    sentinel) — accepted and normalized instead of raising, so an
-    upgrade mid-crash-window still recovers (ADVICE r7 #3)."""
+    "consumed": [str, ...]}``."""
     txt = fs.read_text(JOURNAL)
     if txt is None:
         return None
     j = json.loads(txt)
-    if isinstance(j, list):
-        # legacy list-form journal: {gen: -1, consumed: the list};
-        # the sentinel is never its own consumed entry
-        return {"gen": -1,
-                "consumed": [str(b) for b in j if str(b) != "-1"]}
     return {"gen": int(j["gen"]), "consumed": [str(b) for b in j["consumed"]]}
 
 
@@ -427,68 +429,61 @@ def retire_real_markers(fs: IndexFS, horizon: int = 1000) -> None:
             fs.delete(f"{MARKER}{b}")
 
 
-def _legacy_adoptable(fs: IndexFS, legacy_gen_probe,
-                      batch_dir_probe) -> bool:
-    """True when an unmarkered ``batch=-1`` on an UNSTAMPED root is
-    best explained as a pre-v2 COMMITTED sentinel rather than a
-    crashed compaction's pre-commit garbage. Evidence: a pre-v2 apply
-    deleted its consumed batch directories but kept their real
-    markers, so either (a) some real marker exists whose data
-    directory is gone (a past legacy compaction really consumed it),
-    or (b) no real markers exist at all (a pure legacy base build —
-    the old ann build_index wrote ``batch=-1`` with no marker and no
-    batches). A crashed pre-commit generation coexists with the
-    batches it would have consumed — every real marker still has its
-    directory — so it matches neither arm and stays garbage."""
-    if not legacy_gen_probe():
-        return False
-    real = [
-        name[len(MARKER):]
-        for name in fs.listdir()
-        if name.startswith(MARKER)
-        and not name[len(MARKER):].startswith("-")
-    ]
-    if not real:
-        return True
-    return any(not batch_dir_probe(b) for b in real)
+# ------------------------------------------------- versioned cutover
 
 
-def ensure_protocol(fs: IndexFS, legacy_gen_probe,
-                    batch_dir_probe) -> None:
-    """WRITER-path one-time upgrade stamp (ADVICE r7 #3). Pre-round-7
-    roots committed compacted data as an UNMARKERED ``batch=-1``
-    sentinel; under v2 semantics that partition would be silently
-    excluded from every read and then DELETED as a stale uncommitted
-    generation. On first contact with an unstamped root: if the
-    sentinel data exists, no ``_batch_-1`` marker does, and the
-    adoption EVIDENCE holds (:func:`_legacy_adoptable` — so a crashed
-    pre-commit generation from the unstamped predecessor is not
-    promoted into committed duplicate rows), adopt it by touching the
-    marker; then stamp the root. After the stamp, an unmarkered
-    negative generation is what v2 says it is — pre-commit garbage.
-    Writers only (sinks, compactors — single writer by contract);
-    read-only serving paths use :func:`legacy_overlay_ids` instead.
-    One exists() probe per call once stamped."""
-    if fs.exists(PROTOCOL):
-        return
-    if not fs.exists(f"{MARKER}-1") and _legacy_adoptable(
-        fs, legacy_gen_probe, batch_dir_probe
-    ):
-        fs.touch(f"{MARKER}-1")
-    fs.touch(PROTOCOL)
+class Cutover:
+    """The versioned cutover of one root (see the module docstring):
+    version ``v`` is the directory ``vdir.format(v)`` (relative to the
+    root, e.g. ``state_{}``, ``data/_b=3/_v={}``, ``v{}``), committed
+    by the create-only file ``<commit><v>`` at the root.
 
+    The root is listed once, when the cutover is made, and so is the
+    version directories' parent when it is not the root; ``names``
+    hands in a root listing the caller already holds, so the buckets
+    of one partitioned trigger share it. Single writer by contract:
+    the listings stay valid for the rest of the writer's trigger,
+    plus the version it writes and commits itself."""
 
-def legacy_overlay_ids(fs: IndexFS, legacy_gen_probe,
-                       batch_dir_probe) -> set[str]:
-    """READ-ONLY twin of :func:`ensure_protocol` for serving paths: a
-    reader of a pre-v2 root must see the legacy sentinel as committed
-    but must not WRITE to the index root (query tiers commonly hold
-    read-only credentials, and concurrent readers must not race on a
-    stamp). Returns the extra batch ids to union into the committed
-    view — {'-1'} on an unstamped root with adoptable legacy data,
-    else empty. The next writer contact performs the durable stamp."""
-    if fs.exists(PROTOCOL) or fs.exists(f"{MARKER}-1"):
-        return set()
-    if _legacy_adoptable(fs, legacy_gen_probe, batch_dir_probe):
-        return {"-1"}
-    return set()
+    def __init__(self, fs: IndexFS, commit: str, vdir: str,
+                 names: list[str] | None = None):
+        self._fs, self._commit, self._vdir = fs, commit, vdir
+        if names is None:
+            names = fs.listdir()
+        self._committed = sorted(
+            int(n[len(commit):]) for n in names if n.startswith(commit)
+        )
+        parent, _, leaf = vdir.rpartition("/")
+        stem = leaf[:leaf.index("{}")]
+        self._present = sorted(
+            int(n[len(stem):])
+            for n in (fs.listdir(parent) if parent else names)
+            if n.startswith(stem) and n[len(stem):].isdigit()
+        )
+
+    def path(self, v: int) -> str:
+        """Version ``v``'s directory, relative to the root."""
+        return self._vdir.format(v)
+
+    def resolve(self) -> int | None:
+        """Highest committed version whose directory exists."""
+        present = set(self._present)
+        return max((v for v in self._committed if v in present),
+                   default=None)
+
+    def commit(self, v: int) -> None:
+        """The atomic cutover to version ``v``."""
+        self._fs.touch(f"{self._commit}{v}")
+
+    def retire(self, keep: int) -> None:
+        """Delete every version but ``keep`` and the highest committed
+        one below it: commit files first, then directories — including
+        uncommitted ones a crash left behind."""
+        older = [v for v in self._committed if v < keep]
+        grace = {keep, *older[-1:]}
+        for v in self._committed:
+            if v not in grace:
+                self._fs.delete(f"{self._commit}{v}")
+        for v in self._present:
+            if v not in grace:
+                self._fs.delete(self.path(v))

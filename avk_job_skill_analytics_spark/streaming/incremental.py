@@ -351,130 +351,73 @@ def foreach_batch_upsert(
     Server append, src/load_sqlserver.py:70-98, upgraded to
     merge-on-key semantics). Per micro-batch: reduce the batch to its
     latest row per key, merge with the current state, keep the
-    overall latest, write the result as a NEW versioned directory
-    ``state_<batch_id>``, and commit it by CREATING the
-    ``_commit_state_<batch_id>`` marker — readers resolve the highest
-    committed version. Create-only commits: no directory rename, no
-    pointer overwrite, so the cutover holds on object stores where
-    rename is copy+delete and a delete-then-replace pointer would
-    have a lost-pointer crash window (all metadata goes through the
-    Hadoop FS shim, fsio.IndexFS; read the state back with
-    :func:`upsert_state`). A ``_batch_<id>`` marker makes replays
-    no-ops — foreachBatch re-delivers a batch after a crash, so the
-    sink, not the engine, owns idempotency (same contract the parquet
-    Manifest gives file loads). Crash windows: before the commit
-    marker, the redelivered batch recomputes from the OLD resolved
-    state and overwrites its own versioned dir (converges); after the
-    commit but before cleanup/marker, resolution already names the
-    batch's own output, so the redelivery just finishes cleanup
-    (retire the older version's commit file first, then its
-    directory) — readers always resolve a complete directory. On a
-    real lake you'd land this on a transactional table format and
-    MERGE.
+    overall latest, and publish the result as a new state version
+    through :func:`_versioned_state_batch_fn` (read it back with
+    :func:`upsert_state`). On a real lake you'd land this on a
+    transactional table format and MERGE.
 
     Scale: state rewrite cost is O(state) per batch — right for
     dimension-sized latest-state tables (users, sessions); for
     fact-sized state use the partitioned variant (rewrite only the
     key partitions present in the batch)."""
-    from .fsio import IndexFS
-
-    spark = stream.sparkSession
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        fs = IndexFS(spark, state_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        from pyspark.sql import Window
-
-        cur = _resolve_state(fs)
-        if cur == batch_id:
-            # crashed after the commit marker: the state is already
-            # this batch's output — finish cleanup, don't recompute
-            # (recomputing would read the dir it overwrites)
-            _retire_older_states(fs, batch_id)
-            fs.touch(f"_batch_{batch_id}")
-            return
-        w = Window.partitionBy(key_col).orderBy(
-            *[F.desc(c) for c in order_cols]
-        )
-        latest = (
-            bdf.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if cur is not None:
-            prev = fs.uri(f"state_{cur}")
-        elif fs.is_dir("current"):
-            # pre-versioning layout (rename-swapped ``current/`` dir):
-            # adopt it as the merge source so upgrading doesn't
-            # silently restart the state from empty (ADVICE r7 #3's
-            # upsert twin); it retires after one full versioned cycle
-            prev = fs.uri("current")
-        else:
-            prev = None
-        if prev is not None:
-            latest = (
-                spark.read.parquet(prev)
-                .unionByName(latest)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        latest.write.mode("overwrite").parquet(fs.uri(f"state_{batch_id}"))
-        fs.touch(f"_commit_state_{batch_id}")  # the atomic cutover
-        _retire_older_states(fs, batch_id)
-        fs.touch(f"_batch_{batch_id}")
-
+    merge = _latest_merge(key_col, order_cols)
+    sink = _versioned_state_batch_fn(
+        state_dir,
+        lambda bdf, prev: merge(prev, _latest_rows(bdf, key_col, order_cols)),
+    )
     return stream.writeStream.foreachBatch(sink)
 
 
-def _resolve_state(fs) -> int | None:
-    """Highest committed state version whose directory exists (a
-    commit file without its directory means retirement crashed
-    between the two deletes — skip it)."""
-    versions = sorted(
-        (
-            int(n[len("_commit_state_"):])
-            for n in fs.listdir()
-            if n.startswith("_commit_state_")
-        ),
-        reverse=True,
-    )
-    for b in versions:
-        if fs.is_dir(f"state_{b}"):
-            return b
-    return None
+# the whole-state sinks' versioned cutover: state_<batch_id> committed
+# by _commit_state_<batch_id> (fsio.Cutover)
+_STATE = ("_commit_state_", "state_{}")
 
 
-def _retire_older_states(fs, keep: int) -> None:
-    """Garbage-collect superseded versions with ONE version of grace
-    (ADVICE r7 #5): the immediately-superseded version stays committed
-    so a reader that resolved it an instant before the cutover still
-    finds its files mid-scan — the rebuild_swap two-version
-    discipline. Everything older retires commit-file-first (a crash
-    between the deletes leaves an uncommitted dir, not a committed
-    dangle). The legacy pre-versioning ``current/`` dir retires once a
-    full versioned cycle has superseded it."""
-    committed = sorted(
-        int(n[len("_commit_state_"):])
-        for n in fs.listdir()
-        if n.startswith("_commit_state_")
-    )
-    older = [v for v in committed if v < keep]
-    grace = {keep} | set(older[-1:])
-    for n in fs.listdir():
-        if n.startswith("_commit_state_") and int(
-            n[len("_commit_state_"):]
-        ) not in grace:
-            fs.delete(n)
-    for n in fs.listdir():
-        if (n.startswith("state_") and n[len("state_"):].isdigit()
-                and int(n[len("state_"):]) not in grace):
-            fs.delete(n)
-    if older and fs.is_dir("current"):
-        # migrated pre-versioning state: superseded at least one full
-        # cycle ago, every in-flight legacy reader has finished
-        fs.delete("current")
+def _versioned_state_batch_fn(state_dir: str, fold):
+    """Per-batch body of the whole-state sinks
+    (:func:`foreach_batch_upsert`, :func:`foreach_batch_cdc`,
+    :func:`foreach_batch_topk_sample`). ``fold(bdf, prev) -> df``
+    folds the micro-batch into the previous state (``prev`` is None
+    before the first commit); the result is written as a NEW
+    directory ``state_<batch_id>`` and committed by CREATING the
+    ``_commit_state_<batch_id>`` marker — readers resolve the highest
+    committed version (``fsio.Cutover``). Create-only commits: no
+    directory rename, no pointer overwrite, so the cutover holds on
+    object stores where rename is copy+delete and a
+    delete-then-replace pointer would have a lost-pointer crash
+    window. A ``_batch_<id>`` marker makes replays no-ops —
+    foreachBatch re-delivers a batch after a crash, so the sink, not
+    the engine, owns idempotency (same contract the parquet Manifest
+    gives file loads). Crash windows: before the commit marker, the
+    redelivered batch recomputes from the OLD resolved state and
+    overwrites its own versioned dir (converges); after the commit
+    but before cleanup/marker, resolution already names the batch's
+    own output, so the redelivery just finishes cleanup — readers
+    always resolve a complete directory. A root written before round
+    7 (a rename-swapped ``current/`` state dir) is no longer
+    adopted."""
+    from .fsio import Cutover, IndexFS
+
+    def sink(bdf: DataFrame, batch_id: int) -> None:
+        spark = bdf.sparkSession
+        fs = IndexFS(spark, state_dir)
+        if fs.exists(f"_batch_{batch_id}"):
+            return
+        cut = Cutover(fs, *_STATE)
+        cur = cut.resolve()
+        # cur == batch_id: crashed after the commit marker — the state
+        # is already this batch's output; recomputing would read the
+        # dir it overwrites, so only the cleanup is finished
+        if cur != batch_id:
+            prev = None if cur is None else spark.read.parquet(
+                fs.uri(cut.path(cur)))
+            fold(bdf, prev).write.mode("overwrite").parquet(
+                fs.uri(cut.path(batch_id)))
+            cut.commit(batch_id)
+        cut.retire(batch_id)
+        fs.touch(f"_batch_{batch_id}")
+
+    return sink
 
 
 def foreach_batch_cdc(
@@ -524,38 +467,22 @@ def foreach_batch_topk_sample(
     rows forever — the streaming reservoir whose memory does not grow
     with the stream."""
     from ..operators.hashing import md5_long
-    from .fsio import IndexFS
 
-    spark = stream.sparkSession
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        fs = IndexFS(spark, state_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        cur = _resolve_state(fs)
-        if cur == batch_id:
-            _retire_older_states(fs, batch_id)
-            fs.touch(f"_batch_{batch_id}")
-            return
+    def fold(bdf: DataFrame, prev: DataFrame | None) -> DataFrame:
         pr = md5_long(
             F.concat(F.lit(seed + "|"), F.col(key_col).cast("string"))
         )
-        botk = (
-            bdf.withColumn("priority", pr).orderBy("priority").limit(k)
+        botk = bdf.withColumn("priority", pr).orderBy("priority").limit(k)
+        if prev is None:
+            return botk
+        return (
+            prev.unionByName(botk)
+            .dropDuplicates([key_col])
+            .orderBy("priority")
+            .limit(k)
         )
-        if cur is not None:
-            botk = (
-                spark.read.parquet(fs.uri(f"state_{cur}"))
-                .unionByName(botk)
-                .dropDuplicates([key_col])
-                .orderBy("priority")
-                .limit(k)
-            )
-        botk.write.mode("overwrite").parquet(fs.uri(f"state_{batch_id}"))
-        fs.touch(f"_commit_state_{batch_id}")
-        _retire_older_states(fs, batch_id)
-        fs.touch(f"_batch_{batch_id}")
 
+    sink = _versioned_state_batch_fn(state_dir, fold)
     return stream.writeStream.foreachBatch(sink)
 
 
@@ -569,19 +496,16 @@ def upsert_state(spark, state_dir: str) -> DataFrame:
     """The latest-state table maintained by
     :func:`foreach_batch_upsert`: resolve the highest committed
     version, read that directory."""
-    from .fsio import IndexFS
+    from .fsio import Cutover, IndexFS
 
     fs = IndexFS(spark, state_dir)
-    cur = _resolve_state(fs)
+    cut = Cutover(fs, *_STATE)
+    cur = cut.resolve()
     if cur is None:
-        if fs.is_dir("current"):
-            # pre-versioning layout, not yet superseded by a
-            # versioned commit — still the live state
-            return spark.read.parquet(fs.uri("current"))
         raise FileNotFoundError(
             f"no upsert state committed under {state_dir}"
         )
-    return spark.read.parquet(fs.uri(f"state_{cur}"))
+    return spark.read.parquet(fs.uri(cut.path(cur)))
 
 
 # -------------------------------------- partitioned (fact-sized) upsert
@@ -600,41 +524,10 @@ def _bucket_col(key_col: str, buckets: int):
     return F.pmod(F.col(key_col).cast("long"), F.lit(int(buckets)))
 
 
-def _resolve_bucket(fs, b: int, exclude: int | None = None) -> int | None:
-    """Highest committed version of bucket ``b`` whose data leaf
-    exists; ``exclude`` skips the version a redelivery is currently
-    rewriting (reading it while dynamically overwriting it would race
-    the write's own scan)."""
-    versions = sorted(
-        (
-            int(n.rsplit("_", 1)[1])
-            for n in fs.listdir()
-            if n.startswith(f"_commit_b{b}_")
-        ),
-        reverse=True,
-    )
-    for v in versions:
-        if v != exclude and fs.is_dir(f"data/_b={b}/_v={v}"):
-            return v
-    return None
-
-
-def _retire_bucket_versions(fs, b: int, keep: int) -> None:
-    """Per-bucket GC with one version of grace (the upsert-state
-    discipline): commit file first, then the leaf."""
-    committed = sorted(
-        int(n.rsplit("_", 1)[1])
-        for n in fs.listdir()
-        if n.startswith(f"_commit_b{b}_")
-    )
-    older = [v for v in committed if v < keep]
-    grace = {keep} | set(older[-1:])
-    for v in committed:
-        if v not in grace:
-            fs.delete(f"_commit_b{b}_{v}")
-    for name in fs.listdir(f"data/_b={b}"):
-        if name.startswith("_v=") and int(name[3:]) not in grace:
-            fs.delete(f"data/_b={b}/{name}")
+def _bucket(b: int) -> tuple[str, str]:
+    """Bucket ``b``'s versioned cutover (``fsio.Cutover``): leaf
+    ``data/_b=<b>/_v=<id>`` committed by ``_commit_b<b>_<id>``."""
+    return f"_commit_b{b}_", f"data/_b={b}/_v={{}}"
 
 
 def _partitioned_state_batch_fn(state_dir: str, reduce_batch,
@@ -656,8 +549,8 @@ def _partitioned_state_batch_fn(state_dir: str, reduce_batch,
     already-committed buckets (their version already IS this batch's
     output) and recomputes only the rest from their previous
     versions — dynamic overwrite rewrites identical leaves and
-    converges."""
-    from .fsio import IndexFS
+    converges. A root written before round 7 is no longer adopted."""
+    from .fsio import Cutover, IndexFS
 
     def sink(bdf: DataFrame, batch_id: int) -> None:
         spark = bdf.sparkSession
@@ -669,17 +562,17 @@ def _partitioned_state_batch_fn(state_dir: str, reduce_batch,
             int(r["_b"])
             for r in reduced.select("_b").distinct().collect()
         )
-        todo, prev = [], {}
-        for b in touched:
-            cur = _resolve_bucket(fs, b)
-            if cur == batch_id:
-                continue  # committed by a crashed earlier attempt
-            todo.append(b)
-            prev[b] = _resolve_bucket(fs, b, exclude=batch_id)
+        names = fs.listdir()  # one root listing serves every bucket
+        cuts = {b: Cutover(fs, *_bucket(b), names) for b in touched}
+        prev = {b: cuts[b].resolve() for b in touched}
+        # a bucket already at this batch's version was committed by a
+        # crashed earlier attempt; the rest never read the version
+        # they are about to overwrite
+        todo = [b for b in touched if prev[b] != batch_id]
         if todo:
             new_rows = reduced.filter(F.col("_b").isin(todo))
             old_paths = [
-                fs.uri(f"data/_b={b}/_v={prev[b]}")
+                fs.uri(cuts[b].path(prev[b]))
                 for b in todo
                 if prev[b] is not None
             ]
@@ -696,24 +589,31 @@ def _partitioned_state_batch_fn(state_dir: str, reduce_batch,
                 .parquet(fs.uri("data"))
             )
             for b in todo:
-                fs.touch(f"_commit_b{b}_{batch_id}")
+                cuts[b].commit(batch_id)
         for b in touched:
-            _retire_bucket_versions(fs, b, batch_id)
+            cuts[b].retire(batch_id)
         fs.touch(f"_batch_{batch_id}")
 
     return sink
 
 
+def _latest_rows(df: DataFrame, key_col: str,
+                 order_cols: tuple) -> DataFrame:
+    """The latest row per key: highest ``order_cols``, descending."""
+    w = Window.partitionBy(key_col).orderBy(
+        *[F.desc(c) for c in order_cols]
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def _latest_reduce(key_col: str, order_cols: tuple, buckets: int):
     def reduce_batch(bdf: DataFrame) -> DataFrame:
-        w = Window.partitionBy(key_col).orderBy(
-            *[F.desc(c) for c in order_cols]
-        )
-        return (
-            bdf.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .withColumn("_b", _bucket_col(key_col, buckets))
+        return _latest_rows(bdf, key_col, order_cols).withColumn(
+            "_b", _bucket_col(key_col, buckets)
         )
 
     return reduce_batch
@@ -723,15 +623,7 @@ def _latest_merge(key_col: str, order_cols: tuple):
     def merge(old: DataFrame | None, new: DataFrame) -> DataFrame:
         if old is None:
             return new
-        w = Window.partitionBy(key_col).orderBy(
-            *[F.desc(c) for c in order_cols]
-        )
-        return (
-            old.unionByName(new)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return _latest_rows(old.unionByName(new), key_col, order_cols)
 
     return merge
 
@@ -893,17 +785,18 @@ def upsert_state_partitioned(spark, state_dir: str) -> DataFrame:
     """The partitioned state table: per bucket, resolve the highest
     committed version and union the leaves (an untouched bucket's
     latest version may be many batches old — that is the point)."""
-    from .fsio import IndexFS
+    from .fsio import Cutover, IndexFS
 
     fs = IndexFS(spark, state_dir)
+    names = fs.listdir()  # one root listing serves every bucket
     paths = []
     for name in fs.listdir("data"):
         if not name.startswith("_b="):
             continue
-        b = int(name[3:])
-        v = _resolve_bucket(fs, b)
+        cut = Cutover(fs, *_bucket(int(name[3:])), names)
+        v = cut.resolve()
         if v is not None:
-            paths.append(fs.uri(f"data/_b={b}/_v={v}"))
+            paths.append(fs.uri(cut.path(v)))
     if not paths:
         raise FileNotFoundError(
             f"no partitioned state committed under {state_dir}"

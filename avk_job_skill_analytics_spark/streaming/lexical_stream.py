@@ -38,10 +38,9 @@ from .batched_index import (
     committed_table_dirs,
     compact_batched_index,
     index_sink,
-    serving_batch_ids,
     spread_batch,
 )
-from .fsio import IndexFS
+from .fsio import IndexFS, committed_batch_ids
 
 __all__ = [
     "foreach_batch_bm25_maintain",
@@ -115,7 +114,7 @@ def serve_bm25(spark, index_dir: str, terms: list[str], id_col: str,
     and the shared ``bm25_rank`` scoring core — hash-identical to the
     batch BM25 over the same committed documents."""
     fs = IndexFS(spark, index_dir)
-    committed = serving_batch_ids(fs, "postings")
+    committed = committed_batch_ids(fs)
     p_dirs = committed_table_dirs(fs, "postings", committed)
     d_dirs = committed_table_dirs(fs, "doclen", committed)
     if not p_dirs:

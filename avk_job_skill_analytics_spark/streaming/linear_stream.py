@@ -43,9 +43,8 @@ from .batched_index import (
     committed_table_dirs,
     compact_batched_index,
     index_sink,
-    serving_batch_ids,
 )
-from .fsio import IndexFS
+from .fsio import IndexFS, committed_batch_ids
 
 __all__ = [
     "foreach_batch_logreg_train",
@@ -142,7 +141,7 @@ def serve_logreg_weights(spark, index_dir: str,
     fs = IndexFS(spark, index_dir)
     d = len(stat_names)
     w, cum_n, seq = _latest_state(
-        spark, fs, d, serving_batch_ids(fs, "weights")
+        spark, fs, d, committed_batch_ids(fs)
     )
     rows = [(s, w[j]) for j, s in enumerate(stat_names)]
     rows += [("n_batches", seq), ("n_seen", cum_n)]

@@ -18,6 +18,7 @@ from avk_job_skill_analytics_spark.streaming.batched_index import (
     make_delete_batches,
 )
 from avk_job_skill_analytics_spark.streaming.fsio import (
+    Cutover,
     IndexFS,
     committed_batch_ids,
     read_journal,
@@ -26,6 +27,10 @@ from avk_job_skill_analytics_spark.streaming.fsio import (
 )
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
+
+
+def _resolve_version(fs):
+    return Cutover(fs, *ann_index.VERSIONS).resolve()
 
 
 def _grown_index(spark, d: str, compact_every=None):
@@ -276,12 +281,12 @@ def test_rebuild_swap_versioned_cutover(spark, tmp_path):
         "_cell"
     ).parquet(fs.uri("v1/cells/batch=0"))
     fs.touch("v1/_batch_0")
-    assert ann_index.resolve_version(fs) == 0
+    assert _resolve_version(fs) == 0
     assert serve() == served_v0
     # the real retrain clears the crashed dir, rebuilds, and cuts over
     v1 = ann_index.rebuild_swap(spark, root, e, "vec_id", "embedding")
     assert v1 == 1
-    assert ann_index.resolve_version(fs) == 1
+    assert _resolve_version(fs) == 1
     # the crashed attempt's stale artifacts are gone
     assert not fs.is_dir("v1/cells/batch=0")
     assert not fs.exists("v1/_batch_0")
@@ -359,18 +364,18 @@ def test_auto_retrain_policy_and_crash_windows(spark, tmp_path):
     b2 = e2.filter(F.col("vec_id") % 4 == 3)
 
     sink(b0, 0)
-    assert ann_index.resolve_version(fs) == 0  # calm: absorbed frozen
+    assert _resolve_version(fs) == 0  # calm: absorbed frozen
     assert fs.exists("_batch_0")
     # the calm append committed through the cells sink inside v0
     assert IndexFS(spark, fs.uri("v0")).exists("_batch_0")
     assert _dir_ids(IndexFS(spark, fs.uri("v0"))) == {"-1", "0"}
     sink(b1, 1)
-    assert ann_index.resolve_version(fs) == 1  # drifted: fired
+    assert _resolve_version(fs) == 1  # drifted: fired
     assert IndexFS(spark, fs.uri("v1")).exists("_base_includes_1")
     # the retrain folded the log's committed batches into a generation
     assert committed_batch_ids(fs) & _dir_ids(fs, "raw") == {"-1", "1"}
     sink(b2, 2)
-    assert ann_index.resolve_version(fs) == 1  # calm vs NEW quantizers
+    assert _resolve_version(fs) == 1  # calm vs NEW quantizers
 
     q = e2.filter(F.col("vec_id") < 10)
 

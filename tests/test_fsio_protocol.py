@@ -1,20 +1,20 @@
 """Shared commit-protocol hardening (ADVICE r7): tombstone grace for
-in-flight readers, legacy (pre-v2) on-disk format migration, journal
-overwrite refusal, create-only markers, bounded epoch-guard state."""
+in-flight readers, journal overwrite refusal, create-only markers,
+bounded epoch-guard state, and the versioned cutover's crash windows
+and per-trigger filesystem calls."""
 
 from __future__ import annotations
 
-import json
+import collections
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.streaming.fsio import (
-    PROTOCOL,
+    Cutover,
     IndexFS,
     committed_batch_ids,
-    ensure_protocol,
     read_journal,
     write_journal,
 )
@@ -61,61 +61,14 @@ def test_inflight_reader_snapshot_survives_compaction(spark, tmp_path):
     assert post == snapshot
 
 
-def test_legacy_pre_v2_root_migrates_not_destroyed(spark, tmp_path):
-    """ADVICE r7 #3: a pre-round-7 index root — unmarkered batch=-1
-    compacted sentinel + list-form journal — must be adopted, not
-    silently excluded and then deleted as a stale generation."""
-    d = str(tmp_path / "legacy")
-    os.makedirs(d)
-    # fabricate the legacy layout: real batch 0 absorbed into an
-    # UNMARKERED batch=-1 sentinel (its dir deleted), marker kept,
-    # and a stale legacy list-form journal from a crashed apply
-    sig = spark.createDataFrame(
-        [(1, 0, "11_22"), (1, 1, "33_44")],
-        "_idx_id long, band int, sig string",
-    )
-    sig.write.parquet(f"{d}/bands/batch=-1")
-    spark.createDataFrame(
-        [(1, [11, 22], 2)], "_idx_id long, _idx_sh array<long>, _idx_n int"
-    ).write.parquet(f"{d}/sets/batch=-1")
-    open(f"{d}/_batch_0", "w").close()   # real marker (data absorbed)
-    with open(f"{d}/_compact_commit", "w") as f:
-        json.dump(["0"], f)              # legacy list-form journal
-    fs = IndexFS(spark, d)
-    # the legacy journal parses (gen=-1 sentinel) instead of raising
-    assert read_journal(fs) == {"gen": -1, "consumed": ["0"]}
-    # first v2 contact (the maintenance sink) adopts the sentinel
-    sink = _lsh_maintain_batch_fn(d, "doc_id", "text", 3, 16, 8, 0.5, 7)
-    sink(spark.createDataFrame(
-        [(5, "new words arriving after the upgrade")],
-        "doc_id long, text string"), 1)
-    assert fs.exists(PROTOCOL)
-    assert fs.exists("_batch_-1")
-    assert {"-1", "1"} <= committed_batch_ids(fs)
-    rows = sorted(
-        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
-            .select("_idx_id", "band", "sig").collect())
-    )
-    assert (1, 0, "11_22") in rows       # legacy rows survived
-    assert any(r[0] == 5 for r in rows)  # and the new batch appended
-    # a compaction does NOT drop the adopted sentinel as stale
-    compact_lsh_index(spark, d)
-    rows2 = sorted(
-        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
-            .select("_idx_id", "band", "sig").collect())
-    )
-    assert rows2 == rows
-
-
 def test_v2_root_still_drops_uncommitted_generation(spark, tmp_path):
-    """Once stamped, an unmarkered negative generation is pre-commit
-    garbage (the migration must not weaken v2 crash recovery)."""
+    """An unmarkered negative generation is pre-commit garbage: it is
+    never read and the next compaction reclaims it."""
     d = str(tmp_path / "idx")
     os.makedirs(d)
     fs = IndexFS(spark, d)
     sink = _lsh_maintain_batch_fn(d, "doc_id", "text", 3, 16, 8, 0.5, 7)
     sink(spark.createDataFrame([(1, T)], "doc_id long, text string"), 0)
-    assert fs.exists(PROTOCOL)
     # a compaction that crashed BEFORE its journal commit
     spark.createDataFrame(
         [(77, 0, 1)], "_idx_id long, band int, sig long"
@@ -155,87 +108,6 @@ def test_touch_is_create_only(spark, tmp_path):
     assert fs.read_text("_batch_7") == "sentinel-content"
 
 
-def test_ensure_protocol_probe_skipped_once_stamped(spark, tmp_path):
-    """The legacy probe (a directory listing on object stores) runs
-    only while the root is unstamped."""
-    d = str(tmp_path / "idx")
-    os.makedirs(d)
-    fs = IndexFS(spark, d)
-    calls = {"n": 0}
-
-    def probe():
-        calls["n"] += 1
-        return False
-
-    ensure_protocol(fs, probe, lambda b: True)
-    assert calls["n"] == 1 and fs.exists(PROTOCOL)
-    ensure_protocol(fs, probe, lambda b: True)
-    assert calls["n"] == 1  # stamped: one exists() check, no probe
-
-
-def test_unstamped_precommit_garbage_not_adopted(spark, tmp_path):
-    """An UNSTAMPED root whose batch=-1 came from a CRASHED pre-commit
-    compaction (every real marker still has its data dir) must NOT be
-    adopted as committed — adopting it would double-count the batches
-    it half-copied. Only a root with legacy-apply evidence (a real
-    marker whose dir was consumed, or no real markers at all) is
-    migrated."""
-    d = str(tmp_path / "idx")
-    os.makedirs(d)
-    fs = IndexFS(spark, d)
-    sig = spark.createDataFrame(
-        [(1, 0, "11_22")], "_idx_id long, band int, sig string"
-    )
-    sets = spark.createDataFrame(
-        [(1, [11, 22], 2)],
-        "_idx_id long, _idx_sh array<long>, _idx_n int",
-    )
-    sig.write.parquet(f"{d}/bands/batch=0")
-    sets.write.parquet(f"{d}/sets/batch=0")
-    open(f"{d}/_batch_0", "w").close()
-    # crashed compaction's half-written generation: batch 0's dir is
-    # still present alongside it
-    sig.write.parquet(f"{d}/bands/batch=-1")
-    sets.write.parquet(f"{d}/sets/batch=-1")
-    sink = _lsh_maintain_batch_fn(d, "doc_id", "text", 3, 16, 8, 0.5, 7)
-    sink(spark.createDataFrame(
-        [(5, "fresh words")], "doc_id long, text string"), 1)
-    assert fs.exists(PROTOCOL)
-    assert not fs.exists("_batch_-1")  # garbage stayed garbage
-    assert {"0", "1"} <= committed_batch_ids(fs)
-    # the next compaction reclaims it as a stale generation
-    compact_lsh_index(spark, d)
-    rows = sorted(
-        map(tuple, spark.read.parquet(*committed_table_dirs(fs, "bands"))
-            .select("_idx_id", "band", "sig").collect())
-    )
-    # exactly one copy of doc 1's legacy row — no double-count
-    assert rows.count((1, 0, "11_22")) == 1
-
-
-def test_readonly_overlay_serves_legacy_without_writing(spark, tmp_path):
-    """serve paths on a pre-v2 root must see the legacy sentinel WITHOUT
-    writing anything to the root (read-only serving credentials)."""
-    from avk_job_skill_analytics_spark.streaming.lexical_stream import (
-        serve_bm25,
-    )
-
-    d = str(tmp_path / "idx")
-    os.makedirs(d)
-    # pure legacy base: postings at batch=-1, no markers at all
-    spark.createDataFrame(
-        [(1, "spark", 3), (2, "spark", 1)],
-        "doc_id long, term string, _tf long",
-    ).write.parquet(f"{d}/postings/batch=-1")
-    spark.createDataFrame(
-        [(1, 5), (2, 5)], "doc_id long, _dl long"
-    ).write.parquet(f"{d}/doclen/batch=-1")
-    before = sorted(os.listdir(d))
-    out = serve_bm25(spark, d, ["spark"], "doc_id", k=10).collect()
-    assert {r["doc_id"] for r in out} == {1, 2}
-    assert sorted(os.listdir(d)) == before  # nothing written
-
-
 def test_epoch_guard_state_is_bounded():
     """ADVICE r7 #5: the foreachBatch epoch-guard set prunes behind
     the redelivery horizon instead of growing one entry per trigger
@@ -257,32 +129,19 @@ def test_epoch_guard_state_is_bounded():
     assert not epoch_already_applied(state, 5000)
 
 
-def test_upsert_retire_grace_and_legacy_migration(spark, tmp_path):
+def test_upsert_retire_grace(spark, tmp_path):
     """ADVICE r7 #5: the immediately-superseded upsert state version
-    survives one extra batch (snapshot isolation), and a
-    pre-versioning ``current/`` state dir is adopted as the merge
-    source instead of silently restarting from empty."""
+    survives one extra batch (snapshot isolation); the next cutover
+    retires it."""
     from avk_job_skill_analytics_spark.streaming.incremental import (
-        _resolve_state,
+        _STATE,
         foreach_batch_upsert,
         upsert_state,
     )
 
     d = str(tmp_path / "state")
     os.makedirs(d)
-    # legacy layout: a rename-swapped current/ dir (its _batch_*
-    # markers stay valid only with the ORIGINAL checkpoint, whose
-    # batch numbering continues — this fixture models the fresh-
-    # checkpoint migration, so no legacy markers carry over)
-    spark.createDataFrame(
-        [(1, 10, 100), (2, 10, 101)], "user_id long, ts long, event_id long"
-    ).write.parquet(f"{d}/current")
     fs = IndexFS(spark, d)
-    assert _resolve_state(fs) is None
-    # reader falls back to the legacy dir pre-migration
-    assert sorted(
-        r["user_id"] for r in upsert_state(spark, d).collect()
-    ) == [1, 2]
     import glob
     import shutil
 
@@ -300,45 +159,165 @@ def test_upsert_retire_grace_and_legacy_migration(spark, tmp_path):
         shutil.copy(glob.glob(f"{stage}/part-*.parquet")[0],
                     f"{src}/{name}.parquet")
 
-    drop([(1, 20, 200), (3, 20, 201)], "f1")
     stream = (
         spark.readStream.format("parquet")
         .schema("user_id long, ts long, event_id long")
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
-    q = (
-        foreach_batch_upsert(stream, d)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # merged with the LEGACY state: users 1 (updated), 2 (kept), 3 (new)
+
+    def drain():
+        q = (
+            foreach_batch_upsert(stream, d)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    def committed():
+        return sorted(
+            int(n[len("_commit_state_"):])
+            for n in fs.listdir()
+            if n.startswith("_commit_state_")
+        )
+
+    drop([(1, 10, 100), (2, 10, 101)], "f0")
+    drain()
+    drop([(1, 20, 200), (3, 20, 201)], "f1")
+    drain()
     merged = {
         r["user_id"]: r["ts"] for r in upsert_state(spark, d).collect()
     }
     assert merged == {1: 20, 2: 10, 3: 20}
-    # legacy dir survives its grace cycle (no older committed version)
-    assert fs.is_dir("current")
-    # second batch: a new version commits -> grace rolls forward
+    # the superseded version survives its grace cycle
+    v_old, v_now = committed()
+    assert fs.is_dir(f"state_{v_old}")
+    # third batch: a new version commits -> grace rolls forward
     drop([(4, 30, 300)], "f2")
-    q = (
-        foreach_batch_upsert(stream, d)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    v_now = _resolve_state(fs)
-    committed = sorted(
-        int(n[len("_commit_state_"):])
-        for n in fs.listdir()
-        if n.startswith("_commit_state_")
-    )
-    # newest + exactly one superseded version remain; legacy retired
-    assert len(committed) == 2 and committed[-1] == v_now
-    assert not fs.is_dir("current")
+    drain()
+    # newest + exactly one superseded version remain; the oldest retired
+    assert committed() == [v_now, Cutover(fs, *_STATE).resolve()]
+    assert not fs.is_dir(f"state_{v_old}")
     assert {
         r["user_id"] for r in upsert_state(spark, d).collect()
     } == {1, 2, 3, 4}
+
+
+def _layouts():
+    from avk_job_skill_analytics_spark.operators.ann_index import VERSIONS
+    from avk_job_skill_analytics_spark.streaming.incremental import (
+        _STATE,
+        _bucket,
+    )
+
+    return [_STATE, _bucket(3), VERSIONS]
+
+
+@pytest.mark.parametrize("layout", _layouts(),
+                         ids=["state", "bucket", "index"])
+def test_cutover_crash_windows(spark, tmp_path, layout):
+    """Every versioned layout resolves past the cutover's crash
+    leftovers: a commit file without its directory, an uncommitted
+    higher-numbered directory, and a retire that died between its
+    commit-file delete and its directory delete."""
+    d = str(tmp_path / "root")
+    os.makedirs(d)
+    fs = IndexFS(spark, d)
+    commit, vdir = layout
+
+    def resolve():
+        return Cutover(fs, *layout).resolve()
+
+    def publish(v, retire=True):
+        cut = Cutover(fs, *layout)
+        fs.mkdirs(cut.path(v))
+        cut.commit(v)
+        if retire:
+            cut.retire(v)
+        return cut
+
+    publish(0)
+    publish(1)
+    assert resolve() == 1
+    # a commit file whose directory is gone is skipped
+    fs.touch(f"{commit}5")
+    assert resolve() == 1
+    # a higher-numbered uncommitted directory is never resolved
+    fs.mkdirs(vdir.format(7))
+    assert resolve() == 1
+    # the next cutover reclaims both leftovers and the oldest version
+    publish(2)
+    assert resolve() == 2
+    assert not fs.exists(f"{commit}5") and not fs.is_dir(vdir.format(7))
+    assert not fs.exists(f"{commit}0") and not fs.is_dir(vdir.format(0))
+    # crash between retire's two deletes: version 1's commit file is
+    # gone, its directory is not
+    cut = publish(3, retire=False)
+    real_delete = fs.delete
+
+    def crash(rel):
+        if not rel.startswith(commit):
+            raise RuntimeError("crash before the directory delete")
+        real_delete(rel)
+
+    fs.delete = crash
+    with pytest.raises(RuntimeError):
+        cut.retire(3)
+    del fs.delete
+    assert resolve() == 3
+    assert fs.is_dir(vdir.format(1))
+    committed = [int(n[len(commit):]) for n in fs.listdir()
+                 if n.startswith(commit)]
+    assert sorted(committed) == [2, 3]
+    assert all(fs.is_dir(vdir.format(v)) for v in committed)
+    # the uncommitted directory goes with the next retire
+    publish(4)
+    assert resolve() == 4 and not fs.is_dir(vdir.format(1))
+
+
+def test_cutover_fs_calls_per_trigger(spark, tmp_path, monkeypatch):
+    """IndexFS calls of one upsert trigger and one 8-bucket partitioned
+    trigger over a root that already holds one committed version. Each
+    trigger lists the root once; the partitioned one also lists each
+    touched bucket's leaf directory once, and probes no directory."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from avk_job_skill_analytics_spark.streaming import incremental
+
+    schema = "user_id long, ts long, event_id long"
+    os.makedirs(tmp_path / "src")
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "src"))
+    # the sinks hand their per-batch body to foreachBatch: keep it
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch",
+                        lambda self, fn: fn)
+    calls = collections.Counter()
+    for name, fn in list(vars(IndexFS).items()):
+        if callable(fn) and not name.startswith("_"):
+            def counted(self, *a, _fn=fn, _name=name, **k):
+                calls[_name] += 1
+                return _fn(self, *a, **k)
+
+            monkeypatch.setattr(IndexFS, name, counted)
+    counts = {}
+    for label, make in (
+        ("upsert", incremental.foreach_batch_upsert),
+        ("partitioned", lambda s, d: incremental
+         .foreach_batch_upsert_partitioned(s, d, buckets=8)),
+    ):
+        d = str(tmp_path / label)
+        os.makedirs(d)
+        sink = make(stream, d)
+        sink(spark.createDataFrame(
+            [(k, 1, k) for k in range(8)], schema), 0)
+        calls.clear()
+        sink(spark.createDataFrame(
+            [(k, 2, 10 + k) for k in range(8)], schema), 1)
+        counts[label] = dict(calls)
+    # before fsio.Cutover the same triggers made 11 calls (4 root
+    # listings) and 67 calls (32 listings, 16 directory probes)
+    assert counts["upsert"]["listdir"] == 1
+    assert sum(counts["upsert"].values()) <= 6, counts
+    assert counts["partitioned"]["listdir"] <= 1 + 8
+    assert "is_dir" not in counts["partitioned"], counts
+    assert sum(counts["partitioned"].values()) <= 28, counts

@@ -866,9 +866,9 @@ def test_round_probe_rides_the_checkpoint_job(spark):
 
 def test_every_growing_index_goes_through_the_one_sink():
     """streaming/batched_index owns the commit protocol (marker
-    short-circuit → protocol stamp → recovery → write → marker →
-    auto-compaction, and the journaled compactor): ``ensure_protocol``,
-    ``recover_compaction`` and ``write_journal`` are called only there,
+    short-circuit → recovery → write → marker → auto-compaction, and
+    the journaled compactor): ``recover_compaction`` and
+    ``write_journal`` are called only there,
     no growing-index layout module touches a marker itself, and the
     IVF-PQ modules neither stage through ``localCheckpoint`` nor write
     dynamic partition overwrites."""
@@ -880,14 +880,12 @@ def test_every_growing_index_goes_through_the_one_sink():
     calls = {}
     for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
         code = _code_tokens(p)
-        for fn in ("ensure_protocol", "recover_compaction",
-                   "write_journal"):
+        for fn in ("recover_compaction", "write_journal"):
             n = len(re.findall(rf"(?<!def){fn}\(", code))
             if n:
                 calls.setdefault(fn, set()).add(os.path.relpath(p, pkg))
     one = {os.path.join("streaming", "batched_index.py")}
-    assert calls == {"ensure_protocol": one, "recover_compaction": one,
-                     "write_journal": one}, calls
+    assert calls == {"recover_compaction": one, "write_journal": one}, calls
     touches = {}
     for m in ("minhash_stream", "ssjoin_stream", "semantic_stream",
               "lexical_stream", "classify_stream", "linear_stream"):
@@ -902,6 +900,49 @@ def test_every_growing_index_goes_through_the_one_sink():
         assert "localCheckpoint(" not in code, rel
         with open(os.path.join(pkg, *rel), encoding="utf-8") as f:
             assert "partitionOverwriteMode" not in f.read(), rel
+
+
+def test_every_versioned_cutover_goes_through_fsio():
+    """streaming/fsio.Cutover is the one versioned cutover: no module
+    of the package, tools/ or bench.py creates or deletes a
+    ``_commit_`` file itself (a call whose literal argument names one),
+    and the pre-v2 migration names are gone everywhere."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, "bench.py")] + [
+        p for d in ("avk_job_skill_analytics_spark", "tools")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    ]
+    fsio = os.path.join("avk_job_skill_analytics_spark", "streaming",
+                        "fsio.py")
+    mutators = {"touch", "delete", "write_text", "mkdirs", "create",
+                "open", "remove", "unlink", "rmtree"}
+    outside, legacy = [], []
+    for p in files:
+        rel = os.path.relpath(p, root)
+        with open(p, encoding="utf-8") as f:
+            src = f.read()
+        legacy += [(rel, n) for n in ("ensure_protocol",
+                                      "legacy_overlay_ids", "_protocol_v2")
+                   if n in src]
+        if rel == fsio:
+            continue
+        for node in ast.walk(ast.parse(src)):
+            if not (isinstance(node, ast.Call)
+                    and getattr(node.func, "attr",
+                                getattr(node.func, "id", "")) in mutators):
+                continue
+            lits = [c.value for a in node.args for c in ast.walk(a)
+                    if isinstance(c, ast.Constant)
+                    and isinstance(c.value, str)]
+            if any("_commit_" in v for v in lits):
+                outside.append((rel, node.lineno))
+    assert outside == [], outside
+    assert legacy == [], legacy
 
 
 def test_every_hyperplane_signature_goes_through_the_one_kernel():

@@ -298,6 +298,28 @@ def test_approx_percentiles_near_exact(spark):
         assert abs(exact[k] - approx[k]) / exact[k] < 0.02, (k, exact[k], approx[k])
 
 
+def test_approx_distinct_near_exact(spark):
+    """HLL++ at the query's rsd=0.02: every per-status estimate lies
+    within 3 × rsd of the exact distinct customer count."""
+    import __spark_entry__ as E
+
+    from avk_job_skill_analytics_spark.plans.schemas import load
+
+    exact = {
+        r.o_orderstatus: r.n
+        for r in load(spark, SF_DIR, "orders").groupBy("o_orderstatus")
+        .agg(F.countDistinct("o_custkey").alias("n")).collect()
+    }
+    approx = {
+        r.o_orderstatus: r.approx_customers
+        for r in E.queries()["agg_approx_distinct"](spark, SF_DIR).collect()
+    }
+    assert exact.keys() == approx.keys()
+    for k in exact:
+        assert abs(approx[k] - exact[k]) / exact[k] <= 3 * 0.02, (
+            k, exact[k], approx[k])
+
+
 def test_candidate_pairs_bucket_cap(spark):
     from avk_job_skill_analytics_spark.operators import dedup
 

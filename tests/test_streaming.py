@@ -360,14 +360,17 @@ def test_partitioned_upsert_touches_only_batch_buckets(spark, tmp_path):
     merged across bucket generations."""
     import os
 
-    from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
+    from avk_job_skill_analytics_spark.streaming.fsio import Cutover, IndexFS
     from avk_job_skill_analytics_spark.streaming.incremental import (
+        _bucket,
         _partitioned_state_batch_fn,
         _latest_merge,
         _latest_reduce,
-        _resolve_bucket,
         upsert_state_partitioned,
     )
+
+    def _resolve_bucket(fs, b):
+        return Cutover(fs, *_bucket(b)).resolve()
 
     d = str(tmp_path / "state")
     os.makedirs(d)

@@ -140,7 +140,7 @@ def main():
             n_rows_only += 1
             print(f"rows {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
             manifest[name] = {
-                "rows_match": len(srows) >= 0, "schema_match": None,
+                "rows_match": None, "schema_match": None,
                 "hash_match": None, "spark_rows": len(srows),
                 "oracle_rows": None, "err": None, "rows_only": True,
             }
