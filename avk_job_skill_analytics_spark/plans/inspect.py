@@ -98,3 +98,16 @@ def build_jobs(spark, build) -> tuple[DataFrame, int]:
     before = dag.nextJobId()
     df = build()
     return df, dag.nextJobId() - before
+
+
+def codegen_compiles(spark, run) -> int:
+    """Janino compiles while ``run()`` executes: classes the session's
+    codegen cache did not hold, on the driver or in local-mode tasks.
+    Read from the JVM-wide ``CodegenMetrics`` compile histogram, so
+    nothing else may run queries meanwhile."""
+    timer = getattr(spark._jvm,
+                    "org.apache.spark.metrics.source.CodegenMetrics"
+                    ).METRIC_COMPILATION_TIME()
+    before = timer.getCount()
+    run()
+    return timer.getCount() - before

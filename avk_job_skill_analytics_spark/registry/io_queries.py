@@ -1071,7 +1071,7 @@ def _warehouse(spark) -> str:
 
             def close() -> None:
                 try:
-                    jvm.java.sql.DriverManager.getConnection(
+                    getattr(jvm, "java.sql.DriverManager").getConnection(
                         "jdbc:derby:;shutdown=true")
                 except Exception:
                     pass  # XJ015 "Derby system shutdown" is the success path

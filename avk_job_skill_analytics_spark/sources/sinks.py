@@ -83,7 +83,7 @@ def jdbc_connect(spark, url: str,
     """A driver-side ``java.sql.Connection`` to the JDBC target; the
     caller closes it."""
     props = properties or {}
-    jprops = spark._jvm.java.util.Properties()
+    jprops = getattr(spark._jvm, "java.util.Properties")()
     for k in ("user", "password"):
         if k in props:
             jprops.setProperty(k, props[k])
@@ -92,9 +92,10 @@ def jdbc_connect(spark, url: str,
         # embedded engines (Derby) deregister their driver on shutdown,
         # after which DriverManager reports "no suitable driver" even
         # though the class loads fine.
-        cls = spark._jvm.java.lang.Class.forName(props["driver"])
+        cls = getattr(spark._jvm, "java.lang.Class").forName(props["driver"])
         return cls.newInstance().connect(url, jprops)
-    return spark._jvm.java.sql.DriverManager.getConnection(url, jprops)
+    return getattr(spark._jvm, "java.sql.DriverManager").getConnection(
+        url, jprops)
 
 
 def jdbc_exec(spark, url: str, *statements: str,

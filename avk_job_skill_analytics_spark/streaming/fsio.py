@@ -114,7 +114,9 @@ class IndexFS:
 
     def __init__(self, spark, root: str):
         self._jvm = spark._jvm
-        self._jPath = self._jvm.org.apache.hadoop.fs.Path
+        # one py4j lookup by full name: ``_jvm.org.apache...`` makes a
+        # reflective round trip per package link
+        self._jPath = getattr(self._jvm, "org.apache.hadoop.fs.Path")
         self._root = self._jPath(root)
         self._fs = self._root.getFileSystem(
             spark.sparkContext._jsc.hadoopConfiguration()
@@ -129,14 +131,6 @@ class IndexFS:
 
     def exists(self, rel: str = "") -> bool:
         return bool(self._fs.exists(self._p(rel)))
-
-    def is_dir(self, rel: str = "") -> bool:
-        try:
-            return bool(self._fs.getFileStatus(self._p(rel)).isDirectory())
-        except Exception as exc:
-            if _is_not_found(exc):
-                return False
-            raise
 
     def listdir(self, rel: str = "") -> list[str]:
         """Child names (empty if the directory is missing)."""
@@ -220,9 +214,8 @@ class IndexFS:
                 return None
             raise
         try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(
-                ins, "UTF-8"
-            )
+            return getattr(self._jvm, "org.apache.commons.io.IOUtils"
+                           ).toString(ins, "UTF-8")
         finally:
             ins.close()
 

@@ -15,6 +15,15 @@ from avk_job_skill_analytics_spark.plans.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def is_dir(fs, rel: str) -> bool:
+    """True when ``rel`` under ``fs``'s root (an ``IndexFS``) is a
+    directory, read from its parent's listing."""
+    parent, _, name = rel.rpartition("/")
+    found = fs.statuses(parent)
+    return found is not None and any(
+        n == name and d for n, d, _, _ in found[1])
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)

@@ -9,6 +9,7 @@ import collections
 import os
 
 import pytest
+from conftest import is_dir
 from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.streaming.fsio import (
@@ -192,13 +193,13 @@ def test_upsert_retire_grace(spark, tmp_path):
     assert merged == {1: 20, 2: 10, 3: 20}
     # the superseded version survives its grace cycle
     v_old, v_now = committed()
-    assert fs.is_dir(f"state_{v_old}")
+    assert is_dir(fs, f"state_{v_old}")
     # third batch: a new version commits -> grace rolls forward
     drop([(4, 30, 300)], "f2")
     drain()
     # newest + exactly one superseded version remain; the oldest retired
     assert committed() == [v_now, Cutover(fs, *_STATE).resolve()]
-    assert not fs.is_dir(f"state_{v_old}")
+    assert not is_dir(fs, f"state_{v_old}")
     assert {
         r["user_id"] for r in upsert_state(spark, d).collect()
     } == {1, 2, 3, 4}
@@ -249,8 +250,10 @@ def test_cutover_crash_windows(spark, tmp_path, layout):
     # the next cutover reclaims both leftovers and the oldest version
     publish(2)
     assert resolve() == 2
-    assert not fs.exists(f"{commit}5") and not fs.is_dir(vdir.format(7))
-    assert not fs.exists(f"{commit}0") and not fs.is_dir(vdir.format(0))
+    assert not fs.exists(f"{commit}5")
+    assert not is_dir(fs, vdir.format(7))
+    assert not fs.exists(f"{commit}0")
+    assert not is_dir(fs, vdir.format(0))
     # crash between retire's two deletes: version 1's commit file is
     # gone, its directory is not
     cut = publish(3, retire=False)
@@ -266,21 +269,21 @@ def test_cutover_crash_windows(spark, tmp_path, layout):
         cut.retire(3)
     del fs.delete
     assert resolve() == 3
-    assert fs.is_dir(vdir.format(1))
+    assert is_dir(fs, vdir.format(1))
     committed = [int(n[len(commit):]) for n in fs.listdir()
                  if n.startswith(commit)]
     assert sorted(committed) == [2, 3]
-    assert all(fs.is_dir(vdir.format(v)) for v in committed)
+    assert all(is_dir(fs, vdir.format(v)) for v in committed)
     # the uncommitted directory goes with the next retire
     publish(4)
-    assert resolve() == 4 and not fs.is_dir(vdir.format(1))
+    assert resolve() == 4 and not is_dir(fs, vdir.format(1))
 
 
 def test_cutover_fs_calls_per_trigger(spark, tmp_path, monkeypatch):
     """IndexFS calls of one upsert trigger and one 8-bucket partitioned
     trigger over a root that already holds one committed version. Each
     trigger lists the root once; the partitioned one also lists each
-    touched bucket's leaf directory once, and probes no directory."""
+    touched bucket's leaf directory once."""
     from pyspark.sql.streaming import DataStreamWriter
 
     from avk_job_skill_analytics_spark.streaming import incremental
@@ -319,5 +322,4 @@ def test_cutover_fs_calls_per_trigger(spark, tmp_path, monkeypatch):
     assert counts["upsert"]["listdir"] == 1
     assert sum(counts["upsert"].values()) <= 6, counts
     assert counts["partitioned"]["listdir"] <= 1 + 8
-    assert "is_dir" not in counts["partitioned"], counts
     assert sum(counts["partitioned"].values()) <= 28, counts

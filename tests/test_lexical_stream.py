@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+from conftest import is_dir
 from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
@@ -98,7 +99,7 @@ def test_bm25_compaction_lossless_on_file_scheme(spark, tmp_path):
     assert {r[0] for r in _serve(spark, d)} == {1, 2, 4}
     # second compaction purges the first cycle's tombstones
     compact_bm25_index(spark, d)
-    assert not fs.is_dir("postings/batch=0")
+    assert not is_dir(fs, "postings/batch=0")
 
 
 def test_bm25_empty_index_serves_typed_empty(spark, tmp_path):

@@ -140,6 +140,22 @@ def test_bi_card_build_launches_no_job(spark, queries, name):
     assert jobs == 0, f"{name} launched {jobs} jobs while building"
 
 
+def test_bi_refresh_recompiles_nothing(spark, queries):
+    """A second refresh of the 12 cards finds every generated class in
+    the session's codegen cache. At Spark's 100 entries it recompiled
+    51-73 of them. The frames are built once: Spark's distinct-aggregate
+    rewrite orders ``a2_distinct_counts``' Expand groups by expression
+    id, so a rebuilt frame can compile its other, equally valid plan."""
+    frames = [queries[name](spark, SF_DIR) for name in BI_CARDS]
+
+    def refresh():
+        for df in frames:
+            df.write.format("noop").mode("overwrite").save()
+
+    refresh()
+    assert I.codegen_compiles(spark, refresh) == 0
+
+
 def test_bucketed_join_needs_no_exchange(spark):
     from avk_job_skill_analytics_spark.plans import bucketing
 
@@ -1201,3 +1217,40 @@ def test_warehouse_database_is_made_in_one_place():
                          "io_queries.py")
     assert found == {(where, "_warehouse", "jdbc:derby:"),
                      (where, "_warehouse", "create=true")}, found
+
+
+def test_jvm_classes_are_looked_up_by_full_name():
+    """A JVM class is fetched in one py4j call,
+    ``getattr(spark._jvm, "org.apache.hadoop.fs.Path")``. A chained
+    ``spark._jvm.org.apache...`` makes one reflective round trip per
+    package link, and the JVM searches its class path for each
+    (3.7 ms against 0.07 ms for ``IndexFS``'s ``Path``). No chain
+    from ``_jvm`` or a ``jvm`` alias through a lowercase package name
+    is left in the package, tools/ and bench.py."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, f)
+             for f in ("bench.py", "__spark_entry__.py")] + [
+        p for d in ("avk_job_skill_analytics_spark", "tools")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    ]
+
+    def is_jvm(node):
+        return (getattr(node, "id", None) in ("jvm", "_jvm")
+                or getattr(node, "attr", None) == "_jvm")
+
+    chains = []
+    for p in files:
+        with open(p, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Attribute)
+                    and is_jvm(node.value.value)
+                    and node.value.attr[:1].islower()):
+                chains.append((os.path.relpath(p, root), node.lineno))
+    assert chains == [], chains

@@ -5,6 +5,7 @@ processed exactly once."""
 
 from __future__ import annotations
 
+from conftest import is_dir
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -392,7 +393,7 @@ def test_partitioned_upsert_touches_only_batch_buckets(spark, tmp_path):
     assert _resolve_bucket(fs, 1) == 1
     assert _resolve_bucket(fs, 0) == 0  # untouched: version unchanged
     assert _resolve_bucket(fs, 2) == 0
-    assert not fs.is_dir("data/_b=0/_v=1")  # no rewrite happened
+    assert not is_dir(fs, "data/_b=0/_v=1")  # no rewrite happened
     state = {
         r["user_id"]: r["ts"]
         for r in upsert_state_partitioned(spark, d).collect()
